@@ -12,11 +12,15 @@ import graft.synth.TranscriptGen
  *  - mode "time":  replicate Bench's query-timing protocol (same session
  *    config, same warm-up incl. warmKgPrefix, System.gc between queries,
  *    `time(df.count())`), optionally repeated SPARK_GRAFT_EXTRA_REPS
- *    times per query (min reported). Prints one JSON line.
+ *    times per query. Prints one JSON line: per query the min over the
+ *    reps that succeeded (null if none did) and, under "failed", how many
+ *    reps threw.
  *  - mode "plans": write `.explain("formatted")` for every matching query
  *    to <outDir>/<query>_<SPARK_GRAFT_EXTRA_SUFFIX>.txt.
  *  - mode "noop":  time each matching query with the noop sink (computes
  *    every column — guide §1.4) instead of count().
+ *  - mode "jobs":  run each matching query once under a listener and
+ *    print every Spark job's wall time and stage names to stderr.
  *
  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench.
  */
@@ -103,13 +107,12 @@ object BenchExtra {
         selected.foreach { case (name, fn) =>
           done.clear()
           System.gc()
-          val sec = try time(fn(spark, sfDir).count())
-          catch { case _: Throwable => -1.0 }
+          val sec = try f"${time(fn(spark, sfDir).count())}%.3f"
+          catch { case _: Throwable => "FAILED" }
           Thread.sleep(200) // listener events drain asynchronously
           import scala.jdk.CollectionConverters._
           val jobs = done.asScala.toSeq.sortBy(_._1)
-          System.err.println(f"[jobs] $name total=$sec%.3f " +
-            s"njobs=${jobs.size}")
+          System.err.println(s"[jobs] $name total=$sec njobs=${jobs.size}")
           jobs.foreach { case (id, ms, desc) =>
             System.err.println(f"[jobs]   job=$id%-4d ${ms / 1000.0}%6.3fs  $desc")
           }
@@ -119,23 +122,30 @@ object BenchExtra {
         val useNoop = m == "noop"
         val results = selected.map { case (name, fn) =>
           spark.sparkContext.setJobDescription(name)
+          // a failed rep is None: counted under "failed", never a time
           val samples = (1 to reps).map { _ =>
             System.gc()
-            try time {
+            try Some(time {
               if (useNoop)
                 fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               else fn(spark, sfDir).count()
-            } catch { case _: Throwable => -1.0 }
+            }) catch { case _: Throwable => None }
           }
           spark.sparkContext.setJobDescription(null)
-          System.err.println(f"[time] $name min=${samples.min}%.3f " +
-            s"all=${samples.map(t => f"$t%.3f").mkString(",")}")
-          name -> samples.min
+          val best = samples.flatten.minOption
+          val failed = samples.count(_.isEmpty)
+          System.err.println(s"[time] $name min=${best.fold("-")(t => f"$t%.3f")} " +
+            s"failed=$failed " +
+            s"all=${samples.map(_.fold("FAILED")(t => f"$t%.3f")).mkString(",")}")
+          (name, best, failed)
         }
-        val qs = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
-          .mkString("{", ",", "}")
-        val total = results.map(_._2).filter(_ >= 0).sum
-        println(s"""{"metric":"bench-extra $m","queries":$qs,""" +
+        def obj(kv: Seq[(String, String)]) =
+          kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+        val qs = obj(results.map { case (k, b, _) =>
+          k -> b.fold("null")(t => f"$t%.3f") })
+        val failed = obj(results.map { case (k, _, f) => k -> f.toString })
+        val total = results.flatMap(_._2).sum
+        println(s"""{"metric":"bench-extra $m","queries":$qs,"failed":$failed,""" +
           s""""queries_total_sec":${f"$total%.3f"},"sf":"$sfDir","reps":$reps}""")
     }
     spark.stop()

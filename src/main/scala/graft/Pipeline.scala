@@ -17,45 +17,51 @@ import graft.operators._
  */
 object Pipeline {
 
-  /** The fused per-turn hot path: tokenize → tag → decode → me-sub →
-    * structured result → triple emit, with NO intermediate Dataset
-    * boundary. This is the single function the scaling bench measures —
-    * graft.Micro runs it verbatim on a plain thread pool as the
-    * Spark-free control, so the control and the engine share the hot
-    * path by construction.
-    *
-    * Why fused (round-2 scaling autopsy): the staged form
-    * (detect `mapPartitions` → decode `map` → triples `flatMap`) crosses
-    * TWO typed-Dataset encoder boundaries per turn — each re-encodes the
-    * full token/tag/entity arrays through the product encoder into
-    * UnsafeRows and back. At 1 core that cost hides under compute; at 4+
-    * cores it is pure allocation-rate pressure (the measured scaling
-    * limiter for this workload) and dragged 1→4 efficiency to 0.70 vs
-    * the 1.00 Spark-free control. Fused, only the (sparse) Triple rows
-    * ever meet an encoder. */
-  def extractTurn(model: Detector.Model, convId: String, turnIdx: Int,
-      role: String, text: String): Seq[Triple] = {
-    // packed-offset forms: no Token objects, no per-token substrings —
-    // the tokenizer emits start<<32|end longs, the detector aligns on
-    // the boundary arrays, the decoder slices the original text
-    // (equivalence with the object forms pinned by PropertySpec)
+  /** THE per-turn extraction kernel: tokenize → tag → decode →
+    * me-substitute, over packed start<<32|end offsets — no Token objects,
+    * no per-token substrings (the detector aligns on the boundary arrays,
+    * the decoder slices the original text). Every caller goes through
+    * it: [[extractTurn]], [[decodeTurns]] (and so the checkpointed
+    * pipelines and `StatefulCoref`), `VideoPipeline.predict` (speaker =
+    * channel name, src/prod.py:119-125) and
+    * `StreamingIngest.windowedMentionCounts`. The object forms
+    * (`tokenizeWithOffsets` → `tagTokens` → `decodeEntities`) remain only
+    * as the test reference (PropertySpec pins packed == object; ScaleSpec
+    * pins extract/decodeTurns against them). */
+  def turnEntities(model: Detector.Model, text: String,
+      speaker: String): Seq[Entity] = {
     val offs = graft.functions.PyText.tokenizeOffsetsPacked(text)
     val tags = Detector.tagTokensPacked(model, text, offs)
-    val ents = Decode.meSubstitute(
-      Decode.decodeEntitiesPacked(text, offs, tags),
-      if (role == null) "" else role)
-    Triples.emitArrays(convId, turnIdx, Triples.structuredArraysShared(ents),
-      "gazetteer:ac")
+    Decode.meSubstitute(Decode.decodeEntitiesPacked(text, offs, tags),
+      if (speaker == null) "" else speaker)
   }
 
-  def extractTurn(model: Detector.Model, t: Turn): Seq[Triple] =
-    extractTurn(model, t.conv_id, t.turn_idx, t.role, t.text)
+  /** The fused per-turn hot path: [[turnEntities]] → structured result →
+    * triple emit, with NO intermediate Dataset boundary. This is the
+    * single function the scaling bench measures — graft.Micro runs it
+    * verbatim on a plain thread pool as the Spark-free control, so the
+    * control and the engine share the hot path by construction.
+    *
+    * Why fused (round-2 scaling autopsy): the old staged form (detect
+    * `mapPartitions` → decode `map` → triples `flatMap`) crossed TWO
+    * typed-Dataset encoder boundaries per turn — each re-encoded the full
+    * token/tag/entity arrays through the product encoder into UnsafeRows
+    * and back. At 1 core that cost hides under compute; at 4+ cores it is
+    * pure allocation-rate pressure (the measured scaling limiter for this
+    * workload) and dragged 1→4 efficiency to 0.70 vs the 1.00 Spark-free
+    * control. Fused, only the (sparse) Triple rows ever meet an encoder.
+    * [[decodeTurns]] runs the same kernel and crosses ONE boundary (the
+    * DecodedTurn it materializes; no token/tag arrays are encoded). */
+  def extractTurn(model: Detector.Model, convId: String, turnIdx: Int,
+      role: String, text: String): Seq[Triple] =
+    Triples.emitArrays(convId, turnIdx,
+      Triples.structuredArraysShared(turnEntities(model, text, role)),
+      "gazetteer:ac")
 
   /** turns -> triples (pre-canonicalization). ONE narrow `mapPartitions`
     * end-to-end (zero shuffles, zero intermediate encoder round-trips —
-    * see [[extractTurn]]); equivalent to
-    * `Triples.triples(Decode.decode(Detector.detect(...)))` stage by
-    * stage (DecodeSpec/ParitySpec pin the equivalence).
+    * see [[extractTurn]]); equal to `Triples.triples(decodeTurns(...))`
+    * (ScaleSpec pins both against the object-form reference).
     *
     * The typed boundary is PRUNED to the four columns the hot path reads
     * (conv_id, turn_idx, role, text): over a parquet source Catalyst
@@ -76,34 +82,54 @@ object Pipeline {
       }
   }
 
-  /** turns -> decoded turns (exposed for linking/coref stages). */
+  /** turns -> decoded turns (exposed for linking/coref stages): ONE
+    * narrow `mapPartitions` running [[turnEntities]] per turn. The typed
+    * boundary is pruned to the five columns a DecodedTurn keeps (the
+    * timestamp is never read), as in [[extract]]. */
   def decodeTurns(spark: SparkSession, turns: Dataset[Turn]): Dataset[DecodedTurn] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    Decode.decode(spark, Detector.detect(spark, turns, bc))
+    turns.select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
+        col("text"))
+      .as[(String, Int, String, String, String)]
+      .mapPartitions { it =>
+        val model = bc.value // dereferenced once per partition
+        it.map { case (c, i, r, tool, x) =>
+          DecodedTurn(c, i, r, tool, x, turnEntities(model, x, r))
+        }
+      }
   }
 
   /** All mention sources unioned (SURVEY §7.2: gazetteer ∪ regex), deduped
     * on the span identity (conv, turn, start, end, tag) — gazetteer wins
     * on overlap by construction (regex source skips known surfaces). */
   def mentionsAll(spark: SparkSession, turns: Dataset[Turn]): Dataset[Mention] =
-    mentionsFromDecoded(spark, decodeTurns(spark, turns), turns)
+    mentionsFromDecoded(spark, decodeTurns(spark, turns))
 
   /** mentionsAll over ALREADY-DECODED turns (e.g. the `decoded`
-    * checkpoint) — the gazetteer mentions fall out of the decode result,
-    * so detection is not re-run; only the (cheap) regex source scans the
-    * raw turns again. */
-  def mentionsFromDecoded(spark: SparkSession, decoded: Dataset[DecodedTurn],
-      turns: Dataset[Turn]): Dataset[Mention] = {
+    * checkpoint), reading nothing else: per turn, the gazetteer mentions
+    * fall out of the decode result and the regex source scans the
+    * decoded row's own `text`, so `decoded` is the stage's only input
+    * (its recorded lineage parent). The global span dedup stays: its
+    * shuffle also sizes the committed files. */
+  def mentionsFromDecoded(spark: SparkSession,
+      decoded: Dataset[DecodedTurn]): Dataset[Mention] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    val gaz = Decode.mentions(spark, decoded)
-    val rex = turns.mapPartitions { it =>
+    decoded.mapPartitions { it =>
       val model = bc.value
-      it.flatMap(t => Detector.regexMentions(model, t))
-    }
-    gaz.unionByName(rex)
-      .dropDuplicates("conv_id", "turn_idx", "start", "end", "tag")
+      it.flatMap(d => Decode.gazetteerMentions(d) ++
+        Detector.regexMentions(model, d.conv_id, d.turn_idx, d.text))
+    }.dropDuplicates("conv_id", "turn_idx", "start", "end", "tag")
   }
+
+  /** The pre-kernel signature: `turns` is ignored. Kept only for the
+    * frozen KG-build benchmark (`kgbench/`); removed when the benchmark
+    * is next revised. */
+  @deprecated("turns is ignored; use mentionsFromDecoded(spark, decoded)", "0.7")
+  def mentionsFromDecoded(spark: SparkSession, decoded: Dataset[DecodedTurn],
+      turns: Dataset[Turn]): Dataset[Mention] = mentionsFromDecoded(spark, decoded)
 
   /** Salting parameters for the conversation-window coref stage — ONE
     * definition shared by the full and incremental chains, so a tuning
@@ -132,9 +158,9 @@ object Pipeline {
     val decoded = decodedDf.as[DecodedTurn]
     val mentionsDf = stage(spark, ckptRoot, nameOf("mentions"), "conv_id",
       nameOf("decoded")) {
-      // gazetteer ∪ regex sources; gazetteer mentions are DERIVED from the
-      // decoded checkpoint — detection is not re-run for this stage
-      mentionsFromDecoded(spark, decoded, turns).toDF()
+      // gazetteer ∪ regex sources, both DERIVED from the decoded
+      // checkpoint — detection is not re-run, raw turns are not rescanned
+      mentionsFromDecoded(spark, decoded).toDF()
     }
     val linkedDf = stage(spark, ckptRoot, nameOf("linked"), "conv_id",
       nameOf("mentions")) {

@@ -661,11 +661,10 @@ object SparkEntry {
     // [[decodedPrefix]], so each measures its OWN stage.
     "q_kg_mentions" -> ((s, d) => {
       // sf-scale stage timing (rows-only); the VALUE gate for this stage
-      // is q_kg_mentions_digest below
-      val turns = TranscriptGen.generate(s, TranscriptGen.convsForSfDir(d))
-      // gazetteer ∪ regex sources; gazetteer side reuses the decoded prefix
+      // is q_kg_mentions_digest below. Gazetteer ∪ regex sources, both
+      // derived from the shared decoded prefix
       Pipeline.mentionsFromDecoded(s,
-        decodedPrefix(s, TranscriptGen.convsForSfDir(d)), turns).toDF()
+        decodedPrefix(s, TranscriptGen.convsForSfDir(d))).toDF()
     }),
     "q_kg_mentions_digest" -> ((s, d) =>
       // mention-source UNION gate (gazetteer ∪ regex, span-deduped) at
@@ -683,8 +682,7 @@ object SparkEntry {
         val fixtures = s.createDataset(mentionFixtureTurns)(
           org.apache.spark.sql.Encoders.product[graft.Schemas.Turn])
         Pipeline.mentionsFromDecoded(s,
-          decodedPrefix(s, 300L).unionByName(Pipeline.decodeTurns(s, fixtures)),
-          TranscriptGen.generate(s, 300L).unionByName(fixtures))
+          decodedPrefix(s, 300L).unionByName(Pipeline.decodeTurns(s, fixtures)))
       }.toDF()
         .select(col("tag"), col("detector"),
           conv(substring(md5(concat_ws("\u0001", col("conv_id"),
@@ -720,13 +718,12 @@ object SparkEntry {
       val dict = s.sparkContext.broadcast(Linker.buildDict())
       val fixtures = s.createDataset(mentionFixtureTurns ++ linkerFixtureTurns)(
         org.apache.spark.sql.Encoders.product[graft.Schemas.Turn])
-      val turns = TranscriptGen.generate(s, 300L).unionByName(fixtures)
       // decode is per-row, so decode(organic ∪ fixtures) ==
       // decodedPrefix(300) ∪ decode(fixtures): reuse the warmed shared
       // prefix instead of re-decoding the 300-conv corpus on every run
       val decoded = decodedPrefix(s, 300L).unionByName(
         Pipeline.decodeTurns(s, fixtures))
-      Linker.link(s, Pipeline.mentionsFromDecoded(s, decoded, turns), dict)
+      Linker.link(s, Pipeline.mentionsFromDecoded(s, decoded), dict)
         .toDF()
         .select(col("link_score"), col("entity_id"),
           conv(substring(md5(concat_ws("\u0001", col("conv_id"),

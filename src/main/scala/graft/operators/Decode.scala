@@ -35,10 +35,11 @@ import graft.Gazetteer
  */
 object Decode {
 
-  /** Exact imperative decode of one turn (order = token order).
-    * Hot-path note: the output buffer is allocated LAZILY — the majority
-    * of turns in a real corpus are all-"O" and must not pay a buffer +
-    * copy per turn. */
+  /** Exact imperative decode of one turn (order = token order). Object
+    * form: the test reference for [[decodeEntitiesPacked]], which the
+    * per-turn kernel runs. Hot-path note: the output buffer is allocated
+    * LAZILY — the majority of turns in a real corpus are all-"O" and must
+    * not pay a buffer + copy per turn. */
   def decodeEntities(text: String, toks: IndexedSeq[Token],
       tags: IndexedSeq[String]): Seq[Entity] = {
     var out: scala.collection.mutable.ArrayBuffer[Entity] = null
@@ -76,8 +77,8 @@ object Decode {
   }
 
   /** [[decodeEntities]] over packed start<<32|end token offsets — the
-    * fused extraction path's form (no Token objects; equivalence pinned
-    * by PropertySpec packed == object decode). */
+    * per-turn kernel's form (no Token objects; equivalence pinned by
+    * PropertySpec packed == object decode). */
   def decodeEntitiesPacked(text: String, offs: Array[Long],
       tags: Array[String]): Seq[Entity] = {
     var out: scala.collection.mutable.ArrayBuffer[Entity] = null
@@ -204,32 +205,16 @@ object Decode {
     else entities.map(e => if (isMe(e)) e.copy(text = speaker) else e)
   }
 
-  /** tagged turns -> decoded turns (narrow, row-local). */
-  def decode(spark: SparkSession, tagged: Dataset[TaggedTurn]): Dataset[DecodedTurn] = {
-    import spark.implicits._
-    tagged.map { t =>
-      val toksIdx = t.toks match {
-        case is: IndexedSeq[Token] => is
-        case other => other.toIndexedSeq
-      }
-      val tagsIdx = t.tags match {
-        case is: IndexedSeq[String] => is
-        case other => other.toIndexedSeq
-      }
-      val ents = meSubstitute(decodeEntities(t.text, toksIdx, tagsIdx),
-        if (t.role == null) "" else t.role)
-      DecodedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.text, ents)
-    }
-  }
+  /** One decoded turn's gazetteer mentions (FIXTURES.md §3 `mentions`
+    * schema). */
+  def gazetteerMentions(d: DecodedTurn): Seq[Mention] =
+    d.entities.map(e => Mention(d.conv_id, d.turn_idx, e.tag, e.text,
+      e.start, e.end, "gazetteer:ac", 1.0))
 
-  /** Long-format mentions view (FIXTURES.md §3 `mentions` schema). */
+  /** Long-format gazetteer mentions view of decoded turns. */
   def mentions(spark: SparkSession, decoded: Dataset[DecodedTurn]): Dataset[Mention] = {
     import spark.implicits._
-    decoded.flatMap { d =>
-      d.entities.map(e =>
-        Mention(d.conv_id, d.turn_idx, e.tag, e.text, e.start, e.end,
-          "gazetteer:ac", 1.0))
-    }
+    decoded.flatMap(gazetteerMentions)
   }
 
   /**

@@ -1,10 +1,7 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.Gazetteer
 import graft.Schemas._
-import graft.functions.PyText
 
 /**
  * Mention detection (SURVEY.md §2.8 M1): the deterministic replacement for
@@ -15,10 +12,10 @@ import graft.functions.PyText
  *  - the Aho-Corasick automaton over all gazetteer surfaces is built ONCE
  *    on the driver and broadcast (the analog of per-process model load +
  *    warmup, src/prod.py:14-15);
- *  - detection runs as `mapPartitions` over `Dataset[Turn]`: per-partition
- *    the broadcast value is dereferenced once, then thousands of turns
- *    stream through with zero per-row setup — a NARROW transformation, so
- *    the whole detect→decode→dedup→triple core needs NO shuffle;
+ *  - detection runs per turn inside [[graft.Pipeline.turnEntities]] under
+ *    a `mapPartitions` (broadcast dereferenced once per partition) — a
+ *    NARROW transformation, so the detect→decode→dedup→triple core needs
+ *    NO shuffle;
  *  - matching is case-insensitive (text lowercased with Locale.ROOT) and
  *    token-aligned: a hit must start on a token start and end on a token
  *    end (or the token's word-core end, before its `[.!]*` suffix), which
@@ -48,6 +45,8 @@ object Detector {
   }
 
   /** Tag one turn's tokens. Returns the per-token tag array ("O" default).
+    * Object form: the test reference for [[tagTokensPacked]], which the
+    * per-turn kernel runs.
     *
     * Allocation discipline: this runs for EVERY turn of a 10^12-turn
     * corpus; the workload is allocation-rate bound (measured: per-thread
@@ -65,8 +64,8 @@ object Detector {
   }
 
   /** [[tagTokens]] over packed start<<32|end offsets
-    * ([[graft.functions.PyText.tokenizeOffsetsPacked]]) — the fused
-    * extraction path's form: no Token objects anywhere. */
+    * ([[graft.functions.PyText.tokenizeOffsetsPacked]]) — the per-turn
+    * kernel's form: no Token objects anywhere. */
   def tagTokensPacked(model: Model, text: String, offs: Array[Long]): Array[String] = {
     val starts = new Array[Int](offs.length)
     val ends = new Array[Int](offs.length)
@@ -190,10 +189,11 @@ object Detector {
    * introduce unknown titles). Lower confidence (0.6) than gazetteer
    * mentions; row-local.
    */
-  def regexMentions(model: Model, t: Turn): Seq[Mention] = {
-    if (t.text == null) return Seq.empty
+  def regexMentions(model: Model, convId: String, turnIdx: Int,
+      text: String): Seq[Mention] = {
+    if (text == null) return Seq.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
-    val m = quotedSpan.matcher(t.text)
+    val m = quotedSpan.matcher(text)
     while (m.find()) {
       // bounds track the TRIMMED surface (String.trim's rule: <= ' '), so
       // the invariant every mention source keeps — text == slice(start,
@@ -202,35 +202,19 @@ object Detector {
       // (evidence slicing, span-identity dedup) see a different surface
       // than Mention.text
       var s = m.start(1); var e = m.end(1)
-      while (s < e && t.text.charAt(s) <= ' ') s += 1
-      while (e > s && t.text.charAt(e - 1) <= ' ') e -= 1
-      val inner = t.text.substring(s, e)
+      while (s < e && text.charAt(s) <= ' ') s += 1
+      while (e > s && text.charAt(e - 1) <= ' ') e -= 1
+      val inner = text.substring(s, e)
       val innerLower = inner.toLowerCase(java.util.Locale.ROOT)
       // skip spans the gazetteer already covers (union, not duplicate)
       val known = model.ac.findAllPacked(innerLower).exists { p =>
         model.ac.patterns((p >>> 32).toInt) == innerLower
       }
       if (inner.nonEmpty && !known) {
-        out += Mention(t.conv_id, t.turn_idx, "ALT_TITLE", inner, s, e,
+        out += Mention(convId, turnIdx, "ALT_TITLE", inner, s, e,
           "regex:quoted", 0.6)
       }
     }
     out.toSeq
-  }
-
-  /** turns -> tokenized + tagged turns (narrow; no shuffle). */
-  def detect(spark: SparkSession, turns: Dataset[Turn],
-      bc: Broadcast[Model]): Dataset[TaggedTurn] = {
-    import spark.implicits._
-    turns.mapPartitions { it =>
-      val model = bc.value // dereferenced once per partition
-      it.map { t =>
-        val toks = PyText.tokenizeWithOffsets(t.text)
-        TaggedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.text,
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(toks),
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            tagTokens(model, t.text, toks)))
-      }
-    }
   }
 }

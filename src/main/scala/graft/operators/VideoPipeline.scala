@@ -134,13 +134,7 @@ object VideoPipeline {
       .mapPartitions { it =>
         val model = bc.value
         it.flatMap { case (id, text, channel) =>
-          val toks = graft.functions.PyText.tokenizeWithOffsets(text)
-          val tags = Detector.tagTokens(model, text, toks)
-          val ents = Decode.meSubstitute(
-            Decode.decodeEntities(text,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(toks),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(tags)),
-            if (channel == null) "" else channel)
+          val ents = graft.Pipeline.turnEntities(model, text, channel)
           Triples.structuredResult(ents).toSeq.flatMap { case (tag, es) =>
             es.map(e => (id, tag, e))
           }

@@ -78,9 +78,11 @@ object IcebergishTable {
    * whose footer lacks usable key statistics are flagged
    * `stats_exact=false` and logged rather than silently written empty.
    * Deterministic snapshot id = stage + row count + parent
-   * (content-derived, no wall clock).
+   * (content-derived, no wall clock). `df` is by-name and forced after
+   * the clock starts, so `wall_ms` covers eager driver work done while
+   * building it (e.g. `canonicalMap`'s collects), not just the write.
    */
-  def commit(spark: SparkSession, df: DataFrame, root: String, stage: String,
+  def commit(spark: SparkSession, df: => DataFrame, root: String, stage: String,
       keyCol: String, parentSnapshot: String = "none"): Manifest = {
     import scala.jdk.CollectionConverters._
     import org.apache.hadoop.fs.Path

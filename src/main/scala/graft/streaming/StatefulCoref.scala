@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Schemas._
-import graft.operators.{Coref, Decode, Detector}
+import graft.operators.Coref
 
 /**
  * Stateful streaming coreference: the cross-batch generalization of
@@ -44,9 +44,7 @@ object StatefulCoref {
   def resolveStream(spark: SparkSession, turns: Dataset[Turn],
       window: Int = 5): Dataset[Coref.CorefLink] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    val decoded = Decode.decode(spark, Detector.detect(spark, turns, bc))
-    decoded.groupByKey(_.conv_id)
+    graft.Pipeline.decodeTurns(spark, turns).groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (conv: String, it: Iterator[DecodedTurn], state: GroupState[ConvState]) =>
           val prev = state.getOption.getOrElse(ConvState(Nil, -1))

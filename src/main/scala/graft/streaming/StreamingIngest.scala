@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Schemas._
-import graft.operators.{Decode, Detector}
+import graft.operators.Detector
 
 /**
  * Optional Structured Streaming ingestion mode (SURVEY.md §2.10): the
@@ -74,15 +74,9 @@ object StreamingIngest {
       windowDur: String = "10 minutes",
       watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
     val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    val tagsOf = udf { (text: String) =>
-      // packed hot-path forms (no Token objects, no per-token substrings)
-      // — same allocation profile as Pipeline.extractTurn; packed==object
-      // equivalence is pinned by PropertySpec
-      val model = bc.value
-      val offs = graft.functions.PyText.tokenizeOffsetsPacked(text)
-      val tags = Detector.tagTokensPacked(model, text, offs)
-      Decode.decodeEntitiesPacked(text, offs, tags).map(_.tag)
-    }
+    // the per-turn kernel; me-substitution rewrites text, never tags
+    val tagsOf = udf((text: String) =>
+      graft.Pipeline.turnEntities(bc.value, text, "").map(_.tag))
     turns
       .withWatermark("ts", watermark)
       .select(col("conv_id"), col("ts"),

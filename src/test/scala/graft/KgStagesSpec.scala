@@ -176,6 +176,45 @@ class KgStagesSpec extends SparkSuite {
       s"span (${pm.head.start},${pm.head.end}) does not slice the surface")
   }
 
+  test("mentionsFromDecoded over a committed decoded snapshot == mentionsAll") {
+    import spark.implicits._
+    import graft.sources.IcebergishTable
+    // the mentions stage's only input is `decoded`: reading it back from
+    // parquet (no raw turns anywhere in reach) must give every source's
+    // mentions, regex ones included
+    val root = Files.createTempDirectory("men_snap").toString
+    val turns = TranscriptGen.generate(spark, 60L).unionByName(
+      (SparkEntry.mentionFixtureTurns ++ SparkEntry.linkerFixtureTurns).toDS())
+    IcebergishTable.commit(spark, Pipeline.decodeTurns(spark, turns).toDF(),
+      root, "decoded", "conv_id")
+    val decoded = IcebergishTable.read(spark, root, "decoded").as[DecodedTurn]
+    val fromSnapshot = Pipeline.mentionsFromDecoded(spark, decoded).collect()
+      .map(_.toString).sorted.toSeq
+    val direct = Pipeline.mentionsAll(spark, turns).collect()
+      .map(_.toString).sorted.toSeq
+    assert(fromSnapshot.exists(_.contains("regex:quoted")) &&
+      fromSnapshot.exists(_.contains("gazetteer:ac")))
+    assert(fromSnapshot == direct)
+  }
+
+  test("stage wall_ms covers eager driver work done while building the frame") {
+    import spark.implicits._
+    import graft.sources.IcebergishTable
+    val root = Files.createTempDirectory("wall").toString
+    def wallMs(stage: String): Long = "\"wall_ms\":(\\d+)".r
+      .findFirstMatchIn(Files.readString(java.nio.file.Paths.get(
+        IcebergishTable.manifestPath(root, stage)))).get.group(1).toLong
+    // a warm-up commit first, so a cold first write alone cannot reach
+    // the 300 ms the eager build must contribute
+    IcebergishTable.stage(spark, root, "warm", "k", "none")(Seq(1).toDF("k"))
+    IcebergishTable.stage(spark, root, "slow", "k", "warm") {
+      Thread.sleep(300) // eager driver work, like canonicalMap's collects
+      Seq(1, 2, 3).toDF("k")
+    }
+    info(s"wall_ms: warm=${wallMs("warm")} slow=${wallMs("slow")}")
+    assert(wallMs("slow") >= 300, "wall_ms missed the eager build")
+  }
+
   test("nulls and empties flow through extract without errors") {
     import spark.implicits._
     val ts = new java.sql.Timestamp(1767225600000L)

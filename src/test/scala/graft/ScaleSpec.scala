@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Coref, SkewSalting}
+import graft.operators.{Coref, Decode, Detector, SkewSalting, Triples}
+import graft.functions.PyText
 import graft.synth.TranscriptGen
 import graft.functions.CatalystExprs
 
@@ -59,17 +60,51 @@ class ScaleSpec extends SparkSuite {
       s"extract() must stay narrow (detect/decode/dedup/triples are row-local); got:\n$plan")
   }
 
+  /** The object-form per-turn reference for the packed kernel
+    * ([[Pipeline.turnEntities]]): Token objects end to end, tokenize →
+    * tag → decode → me-substitute, run locally per turn. */
+  private def refEntities(model: Detector.Model, text: String,
+      speaker: String): Seq[Schemas.Entity] = {
+    val toks = PyText.tokenizeWithOffsets(text)
+    val tags = Detector.tagTokens(model, text, toks)
+    Decode.meSubstitute(
+      Decode.decodeEntities(text, toks.toIndexedSeq, tags.toIndexedSeq),
+      if (speaker == null) "" else speaker)
+  }
+
   test("fused packed extract == staged detect->decode->triples pipeline") {
-    import spark.implicits._
-    import graft.operators.{Decode, Detector, Triples}
     val turns = TranscriptGen.generate(spark, 40L)
-    val fused = Pipeline.extract(spark, turns).collect()
-      .map(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)).sorted.toSeq
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
-    val staged = Triples.triples(spark,
-      Decode.decode(spark, Detector.detect(spark, turns, bc))).collect()
-      .map(t => (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)).sorted.toSeq
+    def key(t: Schemas.Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
+    val fused = Pipeline.extract(spark, turns).collect().map(key).sorted.toSeq
+    val model = Detector.buildModel()
+    val staged = turns.collect().toSeq.flatMap { t =>
+      Triples.emit(t.conv_id, t.turn_idx,
+        Triples.structuredResult(refEntities(model, t.text, t.role)),
+        "gazetteer:ac")
+    }.map(key).sorted
     assert(fused.nonEmpty && fused == staged)
+  }
+
+  test("decodeTurns == object-form reference on corpus, fixtures and edge turns") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(1767225600000L)
+    val edge = Seq(
+      Schemas.Turn("zedge", 0, null, null, null, ts), // null text and role
+      Schemas.Turn("zedge", 1, "user", "", "search", ts), // empty text
+      Schemas.Turn("zedge", 2, null, "Melt remixed by me", null, ts),
+      Schemas.Turn("zedge", 3, "user",
+        "press play on \" Neon Cascade Drift \" when it loads", null, ts))
+    val turns = TranscriptGen.generate(spark, 40L).collect().toSeq ++
+      SparkEntry.mentionFixtureTurns ++ SparkEntry.linkerFixtureTurns ++ edge
+    val model = Detector.buildModel()
+    def byKey(ds: Seq[Schemas.DecodedTurn]) =
+      ds.sortBy(d => (d.conv_id, d.turn_idx))
+    val expected = byKey(turns.map(t => Schemas.DecodedTurn(t.conv_id,
+      t.turn_idx, t.role, t.tool, t.text, refEntities(model, t.text, t.role))))
+    val got = byKey(Pipeline.decodeTurns(spark, turns.toDS()).collect().toSeq)
+    assert(expected.exists(_.entities.exists(_.text == "")),
+      "fixture must exercise me-substitution with a null speaker")
+    assert(got == expected)
   }
 
   test("parquet scan prunes columns and pushes filters") {
