@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.synth.TranscriptGen
 
 /**
@@ -26,21 +25,6 @@ import graft.synth.TranscriptGen
  */
 object BenchExtra {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-extra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (4 << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (1 << 20).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def time[A](f: => A): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
@@ -53,7 +37,7 @@ object BenchExtra {
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "1").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = session(cpus)
+    val spark = Sessions.localSession(cpus, s"graft-bench-extra-$cpus")
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(filter))

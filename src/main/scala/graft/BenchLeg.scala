@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * One scaling-bench leg, run in its OWN JVM (spawned by [[Bench]]):
  * `java -XX:ActiveProcessorCount=n -Xmx(heap∝n) ... graft.BenchLeg
@@ -29,17 +27,7 @@ object BenchLeg {
     val jobKind = if (args.length > 4) args(4) else "full"
     val n = nStr.toInt
     val expected = expectStr.toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$n]")
-      .appName(s"graft-bench-leg-$n")
-      .config("spark.sql.shuffle.partitions", n.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (4 << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (1 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.localSession(n, s"graft-bench-leg-$n")
     import org.apache.spark.sql.Encoders
     // plan/broadcast construction is hoisted OUT of job(): a per-run
     // buildDict + broadcast would add a parallelism-independent constant

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.synth.TranscriptGen
 
 /** CLI surface: run the KG extraction pipeline end-to-end on synthetic
@@ -9,14 +8,7 @@ import graft.synth.TranscriptGen
 object Demo {
   def main(args: Array[String]): Unit = {
     val nConvs = if (args.nonEmpty) args(0).toLong else 200L
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.localSession(4, "graft-demo")
     val turns = TranscriptGen.generate(spark, nConvs)
     val triples = Pipeline.extract(spark, turns).cache()
     println(s"turns=${turns.count()} triples=${triples.count()}")

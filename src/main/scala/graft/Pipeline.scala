@@ -385,16 +385,6 @@ object Pipeline {
       .reduce(_ unionByName _)
   }
 
-  /** Fold the per-batch conv-id registries through COMPLETED batch
-    * `upToBatch` into one `convs_compact_<g>` generation — same
-    * crash-safe commit-then-GC ordering as [[compactTriples]], same
-    * small-file rationale (the disjointness guard otherwise unions one
-    * tiny snapshot per batch forever). Completion is REQUIRED, not just
-    * convenient: a folded HEAD batch's replay is detected before the
-    * guard (pure read-back, or the forms_b replay skip), and a folded
-    * BELOW-head batch's replay fails fast on [[runIncremental]]'s
-    * superseded-batch check — so folding a batch's own convs into the
-    * registry can never make the guard fire on a legitimate replay. */
   /** Snapshot ids present under `root` whose directory name is
     * `<prefix><int>` (committed or not — callers filter). Shared by the
     * completion proxy and the folded-read diagnostics. */
@@ -428,6 +418,16 @@ object Pipeline {
         .exists(j => j > b && isCommitted(root, s"surface_forms_b$j"))
   }
 
+  /** Fold the per-batch conv-id registries through COMPLETED batch
+    * `upToBatch` into one `convs_compact_<g>` generation — same
+    * crash-safe commit-then-GC ordering as [[compactTriples]], same
+    * small-file rationale (the disjointness guard otherwise unions one
+    * tiny snapshot per batch forever). Completion is REQUIRED, not just
+    * convenient: a folded HEAD batch's replay is detected before the
+    * guard (pure read-back, or the forms_b replay skip), and a folded
+    * BELOW-head batch's replay fails fast on [[runIncremental]]'s
+    * superseded-batch check — so folding a batch's own convs into the
+    * registry can never make the guard fire on a legitimate replay. */
   def compactConvs(spark: SparkSession, root: String,
       upToBatch: Int): Unit = {
     import graft.sources.IcebergishTable
@@ -444,12 +444,8 @@ object Pipeline {
         parentSnapshot =
           if (g >= 0) s"convs_compact_$g" else "convs_b0")
     }
-    val gcNames = (0 until upToBatch).map(i => s"convs_compact_$i") ++
-      (0 to upToBatch).map(i => s"convs_b$i")
-    gcNames.foreach { s =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(IcebergishTable.manifestPath(root, s)))
-    }
+    deleteManifests(root, (0 until upToBatch).map(i => s"convs_compact_$i") ++
+      (0 to upToBatch).map(i => s"convs_b$i"))
   }
 
   /** The triple corpus through batch `batchId`: the LARGEST committed
@@ -530,12 +526,8 @@ object Pipeline {
           if (g >= 0) s"triples_compact_$g" else "triples_b0")
     }
     // GC: superseded manifests only (see Scaladoc); idempotent
-    val gcNames = (0 until upToBatch).map(i => s"triples_compact_$i") ++
-      (0 to upToBatch).map(i => s"triples_b$i")
-    gcNames.foreach { s =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(IcebergishTable.manifestPath(root, s)))
-    }
+    deleteManifests(root, (0 until upToBatch).map(i => s"triples_compact_$i") ++
+      (0 to upToBatch).map(i => s"triples_b$i"))
   }
 
   /** Garbage-collect per-batch artifacts that nothing reads once batch
@@ -572,15 +564,20 @@ object Pipeline {
     require(IcebergishTable.isCommitted(root, s"edges_b$completedBatch"),
       s"batch $completedBatch has not committed its edges snapshot — " +
         "GC only runs behind a completed batch")
-    val names =
+    deleteManifests(root,
       (0 to completedBatch).flatMap(i =>
         Seq(s"decoded_b$i", s"mentions_b$i", s"linked_b$i")) ++
       (0 until completedBatch).flatMap(i =>
         Seq(s"surface_forms_b$i", s"canon_map_b$i", s"nodes_b$i",
-          s"edges_b$i"))
-    names.foreach { s =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(IcebergishTable.manifestPath(root, s)))
-    }
+          s"edges_b$i")))
   }
+
+  /** Manifest-only GC: delete each snapshot's manifest if present
+    * (idempotent; data directories are left for
+    * [[graft.sources.IcebergishTable.vacuum]]). */
+  private def deleteManifests(root: String, snapshots: Seq[String]): Unit =
+    snapshots.foreach { s =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
+        graft.sources.IcebergishTable.manifestPath(root, s)))
+    }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims.{toColumn => toCol, toExpression => toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -86,11 +87,21 @@ object VectorStatics {
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
+  /** Rejects anything but array<float|double> at ANALYSIS time, so a bad
+    * input type never reaches eval or codegen. */
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(FloatType | DoubleType, _) => false
+      case _ => true
+    } match {
+      case Some(t) => TypeCheckResult.TypeCheckFailure(
+        s"CosineSim expects array<float|double> inputs, got ${t.simpleString}")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+
   private def elemIsFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"CosineSim expects array<float|double> inputs, got $t")
+    case _ => false
   }
 
   override def dataType: DataType = DoubleType

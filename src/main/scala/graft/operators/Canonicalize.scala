@@ -326,6 +326,40 @@ object Canonicalize {
     finally pool.shutdown()
   }
 
+  /** Driver-side union-find shared by the hybrid fast paths of
+    * [[connectedComponents]] and [[canonicalMapFromForms]]: unions every
+    * edge whose endpoints are both in `ids` (path-compressing `find`), then
+    * labels each id with its component's min member in UTF-8 binary order
+    * — the same label the distributed min-label propagation converges to.
+    * Returns id -> component label. */
+  private def driverComponents(ids: Seq[String],
+      edges: Iterator[(String, String)]): java.util.HashMap[String, String] = {
+    val parent = new java.util.HashMap[String, String](ids.length * 2)
+    ids.foreach(v => parent.put(v, v))
+    def find(x: String): String = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (parent.containsKey(a) && parent.containsKey(b)) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent.put(rb, ra)
+      }
+    }
+    val minOf = new java.util.HashMap[String, String]()
+    ids.foreach { v =>
+      val r = find(v)
+      val cur = minOf.get(r)
+      if (cur == null || utf8Compare(v, cur) < 0) minOf.put(r, v)
+    }
+    val label = new java.util.HashMap[String, String](ids.length * 2)
+    ids.foreach(v => label.put(v, minOf.get(find(v))))
+    label
+  }
+
   /** Distinct surface forms with mention counts: (tag, surface, n). */
   def surfaceForms(mentions: DataFrame): DataFrame =
     mentions.groupBy(col("tag"), col("text").as("surface"))
@@ -465,31 +499,8 @@ object Canonicalize {
       import spark.implicits._
       val vs = vertices.select(col("id")).as[String].collect()
       val es = e0.as[(String, String)].collect()
-      val parent = new java.util.HashMap[String, String](vs.length * 2)
-      vs.foreach(v => parent.put(v, v))
-      def find(x: String): String = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-        r
-      }
-      es.foreach { case (a, b) =>
-        if (parent.containsKey(a) && parent.containsKey(b)) {
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent.put(rb, ra)
-        }
-      }
-      // component label = min member id in UTF-8 binary order — the same
-      // label the min-label propagation below converges to
-      val minOf = new java.util.HashMap[String, String]()
-      vs.foreach { v =>
-        val r = find(v)
-        val cur = minOf.get(r)
-        if (cur == null || utf8Compare(v, cur) < 0) minOf.put(r, v)
-      }
-      return vs.toSeq.map(v => (v, minOf.get(find(v))))
-        .toDF("id", "component")
+      val label = driverComponents(vs.toSeq, es.iterator)
+      return vs.toSeq.map(v => (v, label.get(v))).toDF("id", "component")
     }
     // localCheckpoint (here and per round below) truncates lineage so the
     // iterative plan does not grow unboundedly. Caveat for a REAL
@@ -652,15 +663,6 @@ object Canonicalize {
       // normalized prefix/suffix blocks per tag, hot blocks dropped, pair
       // criterion lev<=3 OR global-idf cosine>0.5)
       def key(f: (String, String, Long, String)) = f._1 + "\u0000" + f._2
-      val parent = new java.util.HashMap[String, String](rows.length * 2)
-      rows.foreach(f => parent.put(key(f), key(f)))
-      def find(x: String): String = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-        r
-      }
       val maxBlockSize = 1000 // aliasEdges' default hot-block guard
       val blocks = withNk.flatMap(f => Seq(
           ("p:" + f._1 + ":" + substrCp(f._4, 2)) -> f,
@@ -674,7 +676,7 @@ object Canonicalize {
       // same edge set yields the same components whatever the discovery
       // order, so parallelism cannot change the result (and the driver==
       // distributed equality specs pin it).
-      parMap(blocks) { es =>
+      val pairs = parMap(blocks) { es =>
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
         var i = 0
         while (i < es.length) {
@@ -689,21 +691,12 @@ object Canonicalize {
           i += 1
         }
         out
-      }.foreach(_.foreach { case (ka, kb) =>
-        val (ra, rb) = (find(ka), find(kb))
-        if (ra != rb) parent.put(rb, ra)
-      })
-      // component label = min member key (UTF-8 order), like CC
-      val minOf = new java.util.HashMap[String, String]()
-      rows.foreach { f =>
-        val r = find(key(f))
-        val cur = minOf.get(r)
-        if (cur == null || utf8Compare(key(f), cur) < 0) minOf.put(r, key(f))
       }
+      val label = driverComponents(rows.toSeq.map(key), pairs.iterator.flatten)
       // Refinement is worst-case O(members × leaders) per canopy — same
       // fan-out treatment, order preserved by parMap so output order
       // stays the sorted-component order.
-      val out = parMap(rows.groupBy(f => minOf.get(find(key(f)))).toSeq
+      val out = parMap(rows.groupBy(f => label.get(key(f))).toSeq
           .sortBy(_._1)(Ordering.fromLessThan[String](utf8Compare(_, _) < 0))) {
           case (comp, members) =>
             // refineCanopy is lazy (an Iterator) — force it HERE so the

@@ -5,46 +5,45 @@ import org.apache.spark.sql.functions._
 import graft.Schemas._
 
 /**
- * Hot-conversation skew handling for ORDER-DEPENDENT per-conversation
- * stages (SURVEY.md §4.3): transcripts are Zipf-skewed in conv_id, so a
- * plain repartition(conv_id) gives one task the 10^7-turn conversation
- * while its siblings finish in seconds.
+ * Hot-conversation skew handling for the ORDER-DEPENDENT coref stage
+ * (SURVEY.md §4.3): transcripts are Zipf-skewed in conv_id, so a plain
+ * repartition(conv_id) gives one task the 10^7-turn conversation while
+ * its siblings finish in seconds.
  *
  * Strategy (two-level):
  *  1. a cheap pre-pass `groupBy(conv_id).count()` finds conversations above
  *     `chunkSize` turns — at Zipf skew that's a tiny set, collected and
  *     broadcast as a map;
  *  2. hot conversations are split into chunks of `chunkSize` turns with a
- *     salted key (conv_id, chunk); each chunk carries the last `overlap`
- *     turns of its predecessor as CONTEXT rows (is_ctx=true) so a
- *     window-of-k computation sees exactly the same predecessors it would
- *     see unsalted; context rows produce no output;
+ *     salted key (conv_id, chunk); each chunk carries the last `window`
+ *     turns of its predecessor as CONTEXT rows (is_ctx=true) so the
+ *     recency window sees exactly the same predecessors it would see
+ *     unsalted; context rows produce no output;
  *  3. cold conversations flow through with chunk 0 and no duplication.
  *
- * Equivalence: for any per-turn computation that reads at most `overlap`
- * preceding turns (the coref recency window), salted output == unsalted
- * output. Pinned by SkewSaltingSpec.
+ * Equivalence: the coref recency window reads at most `window` preceding
+ * turns, so salted output == unsalted output. Pinned by ScaleSpec.
  */
 object SkewSalting {
 
-  final case class SaltedTurn(conv_id: String, chunk: Int, is_ctx: Boolean,
-      turn: DecodedTurn)
-
-  /** Salt decoded turns: hot convs chunked with overlap-context rows.
+  /** Coref over salted chunks: [[Coref.resolve]]'s projection, pipeline
+    * and recency step, with the wide stage keyed on (conv_id, chunk) —
+    * hot conversations fan out over `size/chunkSize` tasks instead of one.
     *
     * `maxHotConvs` ENFORCES the Zipf assumption the broadcast rests on:
     * the hot-conversation map is collected to the driver, which is safe
     * only while few conversations exceed `chunkSize`. A corpus where that
     * set is large (uniformly long conversations, or a chunkSize far below
     * the typical length) would silently bloat the driver + broadcast —
-    * instead the guard FAILS with the two actionable fixes (raise
-    * chunkSize, or repartition by (conv_id, turn_idx range) upstream).
-    * The take() is bounded, so the driver never materializes an oversized
-    * map even on the failing path. */
-  def salt(spark: SparkSession, decoded: Dataset[DecodedTurn],
-      chunkSize: Int, overlap: Int, maxHotConvs: Int = 100000): Dataset[SaltedTurn] = {
+    * instead the guard FAILS with the actionable fixes (raise chunkSize,
+    * raise maxHotConvs, or pre-chunk by (conv_id, turn_idx range)
+    * upstream). The take() is bounded, so the driver never materializes
+    * an oversized map even on the failing path. */
+  def corefSalted(spark: SparkSession, decoded: Dataset[DecodedTurn],
+      window: Int = 5, chunkSize: Int = 1000,
+      maxHotConvs: Int = 100000): Dataset[Coref.CorefLink] = {
     import spark.implicits._
-    require(overlap <= chunkSize, "overlap must fit in a chunk")
+    require(window <= chunkSize, "overlap must fit in a chunk")
     // pre-pass: conversations that need salting (tiny under Zipf). The
     // map value is the conversation's MAX turn_idx, not its row count:
     // the context-row rule below asks "does any turn exist at or beyond
@@ -59,7 +58,7 @@ object SkewSalting {
       .take(maxHotConvs + 1)
     if (hotRows.length > maxHotConvs)
       throw new IllegalStateException(
-        s"SkewSalting.salt: more than $maxHotConvs conversations exceed " +
+        s"corefSalted: more than $maxHotConvs conversations exceed " +
           s"chunkSize=$chunkSize — the corpus is not Zipf-skewed enough for " +
           "a driver-collected hot map. Raise chunkSize (so only true " +
           "outliers salt), raise maxHotConvs if the driver can hold the " +
@@ -67,96 +66,18 @@ object SkewSalting {
     val hotMaxIdx: Map[String, Int] =
       hotRows.map(r => r.getString(0) -> r.getInt(1)).toMap
     val hotB = spark.sparkContext.broadcast(hotMaxIdx)
-    decoded.flatMap { d =>
-      if (!hotB.value.contains(d.conv_id)) {
-        Seq(SaltedTurn(d.conv_id, 0, is_ctx = false, d))
-      } else {
-        val own = d.turn_idx / chunkSize
-        val base = Seq(SaltedTurn(d.conv_id, own, is_ctx = false, d))
-        // also serve as context for the NEXT chunk if in its overlap window
-        val nextStart = (own + 1) * chunkSize
-        if (d.turn_idx >= nextStart - overlap && nextStart <= hotB.value(d.conv_id))
-          base :+ SaltedTurn(d.conv_id, own + 1, is_ctx = true, d)
-        else base
-      }
-    }
-  }
-
-  /** The PRUNED record the salted coref shuffle carries: coref reads
-    * only the titles and whether the turn is an anaphoric reference, so
-    * the anaphor regex is evaluated on the NARROW side and `text`,
-    * `role`, `tool` and non-TITLE entities never cross the exchange —
-    * the shuffle ships a boolean and a (usually empty) title list per
-    * turn instead of the full nested DecodedTurn (~10x payload cut; the
-    * regex work also lands in the embarrassingly-parallel stage). */
-  final case class CorefRow(conv_id: String, chunk: Int, is_ctx: Boolean,
-      turn_idx: Int, anaphor: Boolean, titles: Seq[String])
-
-  /** Coref over salted chunks: same semantics as [[Coref.resolve]] but the
-    * wide stage keys on (conv_id, chunk) — hot conversations fan out over
-    * `size/chunkSize` tasks instead of one.
-    *
-    * The chunk/overlap logic below intentionally mirrors [[salt]] with the
-    * record pruned to [[CorefRow]] (salt stays the GENERAL overlap-context
-    * machinery for arbitrary windowed computations over full turns). The
-    * twin invariants are pinned separately: ScaleSpec's salted==unsalted
-    * equivalence guards this path; the salt guard test guards salt's —
-    * a drift in either breaks its test. */
-  def corefSalted(spark: SparkSession, decoded: Dataset[DecodedTurn],
-      window: Int = 5, chunkSize: Int = 1000,
-      maxHotConvs: Int = 100000): Dataset[Coref.CorefLink] = {
-    import spark.implicits._
-    require(window <= chunkSize, "overlap must fit in a chunk")
-    // max turn_idx (not row count) keys the context rule — see [[salt]]
-    val hotRows = decoded.groupBy("conv_id")
-      .agg(count(lit(1)).as("n"), max("turn_idx").as("max_idx"))
-      .where(col("n") > chunkSize)
-      .select("conv_id", "max_idx")
-      .take(maxHotConvs + 1)
-    if (hotRows.length > maxHotConvs)
-      throw new IllegalStateException(
-        s"corefSalted: more than $maxHotConvs conversations exceed " +
-          s"chunkSize=$chunkSize — see SkewSalting.salt's guard rationale.")
-    val hotMaxIdx: Map[String, Int] =
-      hotRows.map(r => r.getString(0) -> r.getInt(1)).toMap
-    val hotB = spark.sparkContext.broadcast(hotMaxIdx)
-    decoded.flatMap { d =>
-      val titles = d.entities.collect { case e if e.tag == "TITLE" => e.text }
-      val ana = titles.isEmpty && d.text != null &&
-        Coref.anaphor.matcher(d.text).find()
-      def row(chunk: Int, isCtx: Boolean) =
-        CorefRow(d.conv_id, chunk, isCtx, d.turn_idx, ana, titles)
-      if (!hotB.value.contains(d.conv_id)) Seq(row(0, isCtx = false))
+    Coref.resolveRows(spark, decoded.flatMap { d =>
+      val r = Coref.row(d)
+      if (!hotB.value.contains(d.conv_id)) Seq(r)
       else {
         val own = d.turn_idx / chunkSize
-        val base = Seq(row(own, isCtx = false))
+        val base = Seq(r.copy(chunk = own))
+        // also serve as context for the NEXT chunk if in its overlap window
         val nextStart = (own + 1) * chunkSize
         if (d.turn_idx >= nextStart - window && nextStart <= hotB.value(d.conv_id))
-          base :+ row(own + 1, isCtx = true)
+          base :+ r.copy(chunk = own + 1, is_ctx = true)
         else base
       }
-    }
-      .repartition(col("conv_id"), col("chunk"))
-      .sortWithinPartitions(col("conv_id"), col("chunk"), col("turn_idx"))
-      .mapPartitions { it =>
-        var key: (String, Int) = null
-        var recent = List.empty[(Int, String)]
-        it.flatMap { st =>
-          if ((st.conv_id, st.chunk) != key) {
-            key = (st.conv_id, st.chunk); recent = Nil
-          }
-          val out =
-            if (!st.is_ctx && st.anaphor) {
-              recent.find { case (ti, _) => st.turn_idx - ti <= window }
-                .map { case (ti, t) =>
-                  Coref.CorefLink(st.conv_id, st.turn_idx, t, ti) }
-                .toSeq
-            } else Seq.empty
-          st.titles.foreach { t =>
-            recent = ((st.turn_idx, t)) :: recent.take(window)
-          }
-          out
-        }
-      }
+    }, window)
   }
 }

@@ -162,6 +162,15 @@ class OptEquivSpec extends SparkSuite {
     }
   }
 
+  test("cosine expression: array<int> input fails at analysis, not eval") {
+    import spark.implicits._
+    val rows = Seq((Array(1, 2), Array(2.0, 4.0))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      rows.select(Similarity.cosine(col("a"), col("b")))
+    }
+    assert(e.getMessage.contains("array<float|double>"), e.getMessage)
+  }
+
   // original (pre-r06) shingle column, kept as the reference
   private def shinglesHof(text: Column, k: Int): Column = {
     val toks = split(lower(trim(text)), "\\s+")

@@ -36,19 +36,22 @@ class ScaleSpec extends SparkSuite {
   test("salting guard: too many hot conversations fails loudly, not silently") {
     import spark.implicits._
     // 12 conversations of 8 turns each, chunkSize=2 -> every conv is "hot";
-    // with maxHotConvs=5 the Zipf assumption is violated and salt must
-    // THROW (a driver-collected hot map would bloat), while a bound that
-    // accommodates the set still salts fine
+    // with maxHotConvs=5 the Zipf assumption is violated and corefSalted
+    // must THROW (a driver-collected hot map would bloat), while a bound
+    // that accommodates the set still salts fine. Even turns carry a
+    // title and odd turns an anaphor, so the salted run has links to count
     val decoded = (0 until 12).flatMap { c =>
       (0 until 8).map(i =>
-        Schemas.DecodedTurn(s"conv$c", i, "user", null, "text", Nil))
+        if (i % 2 == 0) Schemas.DecodedTurn(s"conv$c", i, "user", null,
+          "Melt", Seq(Schemas.Entity("TITLE", "Melt", 0, 4)))
+        else Schemas.DecodedTurn(s"conv$c", i, "user", null, "it", Nil))
     }.toDS()
     val e = intercept[IllegalStateException] {
-      SkewSalting.salt(spark, decoded, chunkSize = 2, overlap = 1,
+      SkewSalting.corefSalted(spark, decoded, window = 1, chunkSize = 2,
         maxHotConvs = 5).count()
     }
     assert(e.getMessage.contains("chunkSize"))
-    assert(SkewSalting.salt(spark, decoded, chunkSize = 2, overlap = 1,
+    assert(SkewSalting.corefSalted(spark, decoded, window = 1, chunkSize = 2,
       maxHotConvs = 100).count() > 0)
   }
 

@@ -154,6 +154,31 @@ class StatefulSpec extends SparkSuite {
       links.mkString(","))
   }
 
+  test("stateful coref over in-order micro-batches == batch Coref.resolve") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    // three micro-batches of WHOLE conversations; conv 0 is the hot one
+    // (320 turns), so the per-group sort and the window both matter
+    val turns = graft.synth.TranscriptGen.generate(spark, 25L).collect()
+    val convs = turns.map(_.conv_id).distinct.sorted
+    val batches = convs.grouped((convs.length + 2) / 3).toSeq
+      .map(cs => turns.filter(t => cs.contains(t.conv_id)).toSeq)
+    assert(batches.length == 3)
+    val mem = MemoryStream[Turn]
+    val q = graft.streaming.StatefulCoref.resolveStream(spark, mem.toDS())
+      .writeStream.format("memory").queryName("coref_stream_eq")
+      .outputMode("append").start()
+    batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    q.stop()
+    val streamed = spark.table("coref_stream_eq")
+      .as[graft.operators.Coref.CorefLink].collect().toSet
+    val batch = graft.operators.Coref.resolve(spark,
+      Pipeline.decodeTurns(spark, turns.toSeq.toDS())).collect().toSet
+    assert(batch.nonEmpty, "fixture must exercise coref")
+    assert(streamed == batch)
+  }
+
   test("incremental KG sink: streamed micro-batches == one-shot batch run") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
