@@ -138,17 +138,73 @@ object Pipeline {
   private val CorefWindow = 5
   private val CorefChunkSize = 10000
 
+  /** One stage branch, running on a FRESH thread — not a pool thread — so
+    * it inherits the forking thread's Spark local properties (job group,
+    * the SQL execution id of an enclosing `foreachBatch`, callers' span
+    * labels) and active session as they are at fork time. */
+  private final class Branch[A](name: String, body: => A) {
+    private var outcome: Either[Throwable, A] = _
+    private val thread = new Thread(() =>
+      outcome = try Right(body) catch { case e: Throwable => Left(e) },
+      s"graft-stage-$name")
+    thread.start()
+
+    /** Wait for the branch — uninterruptibly, since no caller may return
+      * while its writer still commits — then return its result or rethrow
+      * its own exception, unwrapped. */
+    def join(): A = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join()
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      outcome.toTry.get
+    }
+  }
+
+  /** The branches forked by one pipeline call; see [[withBranches]]. */
+  private final class Branches {
+    val forked = scala.collection.mutable.ArrayBuffer.empty[Branch[_]]
+    def fork[A](name: String)(body: => A): Branch[A] = {
+      val b = new Branch(name, body)
+      forked += b
+      b
+    }
+  }
+
+  /** Run `body`, which may fork stages that do not read each other's
+    * output, and join every forked branch before returning or throwing:
+    * no writer outlives the call. The first failure propagates unwrapped —
+    * the body's own (a branch's, if the body failed joining it), with any
+    * other branch failure attached as suppressed. */
+  private def withBranches[A](body: Branches => A): A = {
+    val branches = new Branches
+    val result =
+      try body(branches)
+      catch {
+        case e: Throwable =>
+          branches.forked.foreach { b =>
+            try b.join()
+            catch { case f: Throwable => if (f ne e) e.addSuppressed(f) }
+          }
+          throw e
+      }
+    branches.forked.foreach(_.join())
+    result
+  }
+
   /** The checkpointed NARROW extraction chain (decode → mentions → link →
     * triples+salted-coref), shared VERBATIM by [[runCheckpointed]] and
     * [[runIncremental]] — only the stage names (`nameOf`: base name →
     * snapshot name, identity for the full chain, `_b<i>`-suffixed for a
-    * batch) and the decoded stage's recorded parent differ. Returns
-    * (decoded, mentions, linked, triples) read back from the committed
-    * snapshots. */
+    * batch) and the decoded stage's recorded parent differ. `triples`
+    * reads only `decoded`, so it is forked beside mentions → linked (and
+    * whatever the caller runs next) and returned unjoined. Returns
+    * (linked read back from its snapshot, the triples branch). */
   private def narrowStages(spark: SparkSession, turns: Dataset[Turn],
-      ckptRoot: String, nameOf: String => String, decodedParent: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      ckptRoot: String, nameOf: String => String, decodedParent: String,
+      branches: Branches): (org.apache.spark.sql.DataFrame,
+      Branch[org.apache.spark.sql.DataFrame]) = {
     import spark.implicits._
     import graft.sources.IcebergishTable.stage
     val decodedDf = stage(spark, ckptRoot, nameOf("decoded"), "conv_id",
@@ -156,6 +212,17 @@ object Pipeline {
       decodeTurns(spark, turns).toDF()
     }
     val decoded = decodedDf.as[DecodedTurn]
+    val triples = branches.fork(nameOf("triples")) {
+      stage(spark, ckptRoot, nameOf("triples"), "conv_id", nameOf("decoded")) {
+        // coref is the one order-dependent wide stage -> salted: hot
+        // conversations fan out over size/chunkSize tasks with overlap
+        // context (equivalence pinned by ScaleSpec)
+        Triples.triples(spark, decoded).toDF()
+          .unionByName(Coref.triples(spark,
+            SkewSalting.corefSalted(spark, decoded, window = CorefWindow,
+              chunkSize = CorefChunkSize)).toDF())
+      }
+    }
     val mentionsDf = stage(spark, ckptRoot, nameOf("mentions"), "conv_id",
       nameOf("decoded")) {
       // gazetteer ∪ regex sources, both DERIVED from the decoded
@@ -167,41 +234,37 @@ object Pipeline {
       val dict = spark.sparkContext.broadcast(Linker.buildDict())
       Linker.link(spark, mentionsDf.as[Mention], dict).toDF()
     }
-    val triplesDf = stage(spark, ckptRoot, nameOf("triples"), "conv_id",
-      nameOf("linked")) {
-      // coref is the one order-dependent wide stage -> salted: hot
-      // conversations fan out over size/chunkSize tasks with overlap
-      // context (equivalence pinned by ScaleSpec)
-      Triples.triples(spark, decoded).toDF()
-        .unionByName(Coref.triples(spark,
-          SkewSalting.corefSalted(spark, decoded, window = CorefWindow,
-            chunkSize = CorefChunkSize)).toDF())
-    }
-    (decodedDf, mentionsDf, linkedDf, triplesDf)
+    (linkedDf, triples)
   }
 
   /** Full run with per-stage Icebergish checkpoints + lineage (north rule
     * resumability): a killed run re-invoked with the same `ckptRoot`
-    * skips every stage whose committed snapshot exists. Returns
+    * skips every stage whose committed snapshot exists. `triples` commits
+    * concurrently with mentions → linked → canon_map → nodes and is
+    * joined before `edges`, which stays the last commit. Returns
     * (triples, nodes, edges) DataFrames read back from the snapshots. */
   def runCheckpointed(spark: SparkSession, turns: Dataset[Turn],
       ckptRoot: String): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import spark.implicits._
-    import graft.sources.IcebergishTable.stage
-    val (_, _, linkedDf, triplesDf) =
-      narrowStages(spark, turns, ckptRoot, identity, "turns")
-    val canonDf = stage(spark, ckptRoot, "canon_map", "tag", "triples") {
-      Canonicalize.canonicalMap(spark, linkedDf)
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    withBranches { branches =>
+      import spark.implicits._
+      import graft.sources.IcebergishTable.stage
+      val (linkedDf, triples) =
+        narrowStages(spark, turns, ckptRoot, identity, "turns", branches)
+      val canonDf = stage(spark, ckptRoot, "canon_map", "tag", "linked") {
+        // the driver path collects up to driverMaxVertices + 1 forms rows
+        // (see canonicalMapFromForms)
+        Canonicalize.canonicalMap(spark, linkedDf)
+      }
+      val nodesDf = stage(spark, ckptRoot, "nodes", "node_id", "canon_map") {
+        Canonicalize.nodes(spark, canonDf).toDF()
+      }
+      val triplesDf = triples.join()
+      val edgesDf = stage(spark, ckptRoot, "edges", "conv_id", "canon_map") {
+        Canonicalize.edges(spark, triplesDf.as[Triple], canonDf).toDF()
+      }
+      (triplesDf, nodesDf, edgesDf)
     }
-    val nodesDf = stage(spark, ckptRoot, "nodes", "node_id", "canon_map") {
-      Canonicalize.nodes(spark, canonDf).toDF()
-    }
-    val edgesDf = stage(spark, ckptRoot, "edges", "conv_id", "nodes") {
-      Canonicalize.edges(spark, triplesDf.as[Triple], canonDf).toDF()
-    }
-    (triplesDf, nodesDf, edgesDf)
-  }
 
   /** Incremental KG maintenance: append batch `batchId` of NEW turns to a
     * corpus whose earlier batches are already committed under `ckptRoot`,
@@ -243,6 +306,12 @@ object Pipeline {
     * enforces it with a join against the prior batches' `convs_b<i>`
     * registries (one scan of tiny one-column snapshots; off by default —
     * production layouts enforce it upstream).
+    *
+    * Stage DAG: `convs_b` (raw turns only) commits beside the decode
+    * chain and is joined before `surface_forms_b`; `triples_b` (decoded
+    * only) commits beside mentions → linked → forms → canon_map → nodes
+    * and is joined before the triples read-back; `edges_b` commits last.
+    * Every branch is joined before this returns or throws.
     *
     * Resume: per-batch stage names mean a killed batch re-invoked with
     * the same `batchId` skips its committed stages, exactly like
@@ -332,37 +401,50 @@ object Pipeline {
         s"batch $batchId contains conversations already present in prior " +
           "batches — increments must carry whole conversations")
     }
-    // Conv-id registry for the disjointness guard (committed FIRST so a
-    // batch that dies mid-extraction is still visible to later guards;
-    // a replayed batch skips it via its manifest like any stage).
-    stage(spark, ckptRoot, s"convs_b$batchId", "conv_id",
-      if (batchId == 0) "turns" else s"convs_b${batchId - 1}") {
-      newTurns.toDF().select("conv_id").distinct()
+    withBranches { branches =>
+      // Conv-id registry for the disjointness guard. It reads only the raw
+      // turns, so it commits beside the decode chain; it is joined before
+      // surface_forms_b, since the replay skip above takes a committed
+      // forms_b as proof that convs_b committed (and even a batch that
+      // dies mid-extraction leaves it committed for later guards).
+      val convs = branches.fork(s"convs_b$batchId") {
+        stage(spark, ckptRoot, s"convs_b$batchId", "conv_id",
+          if (batchId == 0) "turns" else s"convs_b${batchId - 1}") {
+          newTurns.toDF().select("conv_id").distinct()
+        }
+      }
+      val (linkedDf, triples) = narrowStages(spark, newTurns, ckptRoot,
+        n => s"${n}_b$batchId",
+        if (batchId == 0) "turns" else s"surface_forms_b${batchId - 1}",
+        branches)
+      convs.join()
+      val formsDf = stage(spark, ckptRoot, s"surface_forms_b$batchId", "tag",
+        s"linked_b$batchId") {
+        val delta = Canonicalize.surfaceForms(linkedDf)
+        if (batchId == 0) delta
+        else Canonicalize.mergeForms(read(spark, ckptRoot, prevForms), delta)
+      }
+      val canonDf = stage(spark, ckptRoot, s"canon_map_b$batchId", "tag",
+        s"surface_forms_b$batchId") {
+        // formsDf is the committed snapshot re-read — already
+        // materialized; the driver path collects up to driverMaxVertices
+        // + 1 of its rows (see canonicalMapFromForms)
+        Canonicalize.canonicalMapFromForms(spark, formsDf)
+      }
+      val nodesDf = stage(spark, ckptRoot, s"nodes_b$batchId", "node_id",
+        s"canon_map_b$batchId") {
+        Canonicalize.nodes(spark, canonDf).toDF()
+      }
+      triples.join()
+      val triplesAll = readTriplesUpTo(spark, ckptRoot, batchId)
+      // edges stays the batch's LAST commit: batchCompleted and the
+      // read-back replay above take a committed edges_b as completion
+      val edgesDf = stage(spark, ckptRoot, s"edges_b$batchId", "conv_id",
+        s"canon_map_b$batchId") {
+        Canonicalize.edges(spark, triplesAll.as[Triple], canonDf).toDF()
+      }
+      (triplesAll, nodesDf, edgesDf)
     }
-    val (_, _, linkedDf, _) = narrowStages(spark, newTurns, ckptRoot,
-      n => s"${n}_b$batchId",
-      if (batchId == 0) "turns" else s"surface_forms_b${batchId - 1}")
-    val formsDf = stage(spark, ckptRoot, s"surface_forms_b$batchId", "tag",
-      s"triples_b$batchId") {
-      val delta = Canonicalize.surfaceForms(linkedDf)
-      if (batchId == 0) delta
-      else Canonicalize.mergeForms(read(spark, ckptRoot, prevForms), delta)
-    }
-    val canonDf = stage(spark, ckptRoot, s"canon_map_b$batchId", "tag",
-      s"surface_forms_b$batchId") {
-      // formsDf is the committed snapshot re-read — already materialized
-      Canonicalize.canonicalMapFromForms(spark, formsDf)
-    }
-    val nodesDf = stage(spark, ckptRoot, s"nodes_b$batchId", "node_id",
-      s"canon_map_b$batchId") {
-      Canonicalize.nodes(spark, canonDf).toDF()
-    }
-    val triplesAll = readTriplesUpTo(spark, ckptRoot, batchId)
-    val edgesDf = stage(spark, ckptRoot, s"edges_b$batchId", "conv_id",
-      s"nodes_b$batchId") {
-      Canonicalize.edges(spark, triplesAll.as[Triple], canonDf).toDF()
-    }
-    (triplesAll, nodesDf, edgesDf)
   }
 
   /** Largest committed compaction generation under `root`, or -1. */

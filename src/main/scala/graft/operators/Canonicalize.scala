@@ -606,7 +606,13 @@ object Canonicalize {
     * path evaluates the forms plan exactly once (a single limit-collect);
     * the DISTRIBUTED path evaluates it several times (idf + blocking +
     * join) — pass a materialized or checkpointed table (a lazy
-    * `localCheckpoint(false)` suffices), as [[canonicalMap]] does. */
+    * `localCheckpoint(false)` suffices), as [[canonicalMap]] does.
+    *
+    * Driver memory: the hybrid's one limit-collect brings up to
+    * `driverMaxVertices + 1` rows of (tag, surface, n_mentions) to the
+    * driver — 200,001 at the default — whether or not the table then
+    * turns out too large for the driver path; size the driver heap for
+    * that many forms, or lower `driverMaxVertices`. */
   def canonicalMapFromForms(spark: SparkSession, forms: DataFrame,
       maxCanopySize: Int = 100000,
       driverMaxVertices: Long = 200000L,

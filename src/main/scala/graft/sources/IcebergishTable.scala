@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Iceberg-style checkpoint table: Parquet data files + a JSON snapshot
@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
  * partition back to its input key range — plus the parent snapshot id,
  * forming the stage DAG. Swappable for real Iceberg behind the same
  * methods.
+ *
+ * Schema: the manifest also carries the snapshot's Spark schema (the
+ * `StructType` JSON the parquet writer stores in every footer), so
+ * [[read]] passes it to the reader and a read-back launches no
+ * schema-inference job.
  *
  * Layout: `<root>/<stage>/data/` (parquet), `<root>/<stage>/manifest.json`
  */
@@ -34,7 +39,13 @@ object IcebergishTable {
       rows: Long, statsExact: Boolean = true)
   final case class Manifest(snapshotId: String, stage: String,
       parentSnapshot: String, rows: Long, partitions: Seq[PartitionLineage],
-      committed: Boolean, wallMs: Long = 0L)
+      committed: Boolean, wallMs: Long = 0L, schema: Option[StructType] = None)
+
+  /** Footer key under which Spark's parquet writer stores the row schema
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`) — the value Spark's own
+    * schema inference returns for the file. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+  private val ManifestReader = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
@@ -46,17 +57,23 @@ object IcebergishTable {
     s"""{"snapshot_id":${q(m.snapshotId)},"stage":${q(m.stage)},""" +
       s""""parent_snapshot":${q(m.parentSnapshot)},"rows":${m.rows},""" +
       s""""wall_ms":${m.wallMs},""" +
-      s""""partitions":$parts,"committed":${m.committed}}"""
+      s""""partitions":$parts,"committed":${m.committed}""" +
+      m.schema.fold("")(st => s""","schema":${st.json}""") + "}"
   }
 
   def manifestPath(root: String, stage: String) = s"$root/$stage/manifest.json"
   def dataPath(root: String, stage: String) = s"$root/$stage/data"
 
-  /** Is there a committed snapshot for this stage? */
-  def isCommitted(root: String, stage: String): Boolean = {
+  /** The stage's manifest text, if its snapshot is committed. */
+  private def committedManifest(root: String, stage: String): Option[String] = {
     val p = Paths.get(manifestPath(root, stage))
-    Files.exists(p) && Files.readString(p).contains("\"committed\":true")
+    Option.when(Files.exists(p))(Files.readString(p))
+      .filter(_.contains("\"committed\":true"))
   }
+
+  /** Is there a committed snapshot for this stage? */
+  def isCommitted(root: String, stage: String): Boolean =
+    committedManifest(root, stage).isDefined
 
   /**
    * Commit a stage: write parquet (the ONE pass over the data), then build
@@ -77,7 +94,9 @@ object IcebergishTable {
    * were the commit's critical path once file counts reach 10^5); entries
    * whose footer lacks usable key statistics are flagged
    * `stats_exact=false` and logged rather than silently written empty.
-   * Deterministic snapshot id = stage + row count + parent
+   * The first footer also yields the Spark schema the writer stored
+   * (all files of one write carry the same one); the manifest records it
+   * for [[read]]. Deterministic snapshot id = stage + row count + parent
    * (content-derived, no wall clock). `df` is by-name and forced after
    * the clock starts, so `wall_ms` covers eager driver work done while
    * building it (e.g. `canonicalMap`'s collects), not just the write.
@@ -108,10 +127,10 @@ object IcebergishTable {
     // IO latency hiding, not CPU).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(32, files.size)))
-    val lineage = try {
+    val footers = try {
       files.zipWithIndex.map { case (f, pid) =>
-        pool.submit(new java.util.concurrent.Callable[PartitionLineage] {
-          def call(): PartitionLineage = {
+        pool.submit(new java.util.concurrent.Callable[(PartitionLineage, String)] {
+          def call(): (PartitionLineage, String) = {
             val meta = ParquetFileReader.readFooter(conf, f.getPath,
               ParquetMetadataConverter.NO_FILTER)
             val blocks = meta.getBlocks.asScala.toSeq
@@ -121,10 +140,11 @@ object IcebergishTable {
                 .find(_.getPath.toDotString == keyCol).map(_.getStatistics))
               .filter(s => s != null && s.hasNonNullValue)
             val merged = stats.reduceOption { (a, b) => a.mergeStatistics(b); a }
-            PartitionLineage(pid,
+            (PartitionLineage(pid,
               merged.map(s => statToString(s.genericGetMin)).getOrElse(""),
               merged.map(s => statToString(s.genericGetMax)).getOrElse(""),
-              nRows, statsExact = merged.nonEmpty || nRows == 0)
+              nRows, statsExact = merged.nonEmpty || nRows == 0),
+              meta.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
           }
         })
       }.map { fut =>
@@ -137,6 +157,9 @@ object IcebergishTable {
         }
       }
     } finally pool.shutdown()
+    val lineage = footers.map(_._1)
+    val schema = footers.headOption.flatMap(f => Option(f._2))
+      .map(DataType.fromJson).collect { case st: StructType => st }
     lineage.filter(p => !p.statsExact).foreach { p =>
       System.err.println(s"[icebergish] $stage pid=${p.pid}: parquet footer " +
         s"carries no usable statistics for key column '$keyCol' — lineage " +
@@ -147,7 +170,7 @@ object IcebergishTable {
     // and key ranges already carried by the lineage entries
     val m = Manifest(s"$stage-$rows-$parentSnapshot", stage, parentSnapshot,
       rows, lineage, committed = true,
-      wallMs = (System.nanoTime() - t0) / 1000000L)
+      wallMs = (System.nanoTime() - t0) / 1000000L, schema = schema)
     // write-then-rename: the manifest (visibility point) appears atomically
     val tmp = Paths.get(manifestPath(root, stage) + ".tmp")
     Files.createDirectories(tmp.getParent)
@@ -157,10 +180,17 @@ object IcebergishTable {
     m
   }
 
-  /** Read a committed snapshot (throws if absent/uncommitted). */
+  /** Read a committed snapshot (throws if absent/uncommitted) with the
+    * schema its manifest records, so no job infers it from the footers
+    * (Spark applies the same `asNullable` to a given schema as to an
+    * inferred one, so the frame's schema is identical). A manifest
+    * written before schemas were recorded reads by inference. */
   def read(spark: SparkSession, root: String, stage: String): DataFrame = {
-    require(isCommitted(root, stage), s"no committed snapshot for $stage")
-    spark.read.parquet(dataPath(root, stage))
+    val manifest = committedManifest(root, stage)
+    require(manifest.isDefined, s"no committed snapshot for $stage")
+    val schema = Option(ManifestReader.readTree(manifest.get).get("schema"))
+      .map(n => DataType.fromJson(n.toString).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema).parquet(dataPath(root, stage))
   }
 
   /** Run-or-resume: reuse the committed snapshot if present, else compute,

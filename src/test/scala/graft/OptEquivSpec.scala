@@ -231,16 +231,30 @@ class OptEquivSpec extends SparkSuite {
   }
 
   test("lshBandHashes == original hash(slice(signature)) on real embeddings") {
+    import spark.implicits._
     val planes = Similarity.hyperplanes(64, 64)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val bandCols = (0 until 8).map(b =>
       hash(slice(Similarity.lshSignature(col("embedding"), planes),
         b * 8 + 1, 8)))
-    val diff = emb.select(
+    // plus one null-embedding row, which the corpus lacks
+    val withNull = emb.select("embedding")
+      .unionByName(Seq(Option.empty[Seq[Float]]).toDF("embedding"))
+    val out = withNull.select(col("embedding"),
       Similarity.lshBandHashes(col("embedding"), planes, 8).as("fast"),
       array(bandCols: _*).as("ref"))
-      .where(col("fast") =!= col("ref")).count()
-    assert(diff == 0)
+    assert(out.where(col("fast") =!= col("ref")).count() == 0)
+    // Null embeddings: the one band divergence, pinned deliberately. The
+    // fused closure returns null, so posexplode drops the row and it never
+    // enters a band bucket. The old chain hashed each null slice to the
+    // Murmur3 seed (42), so every null-embedding row shared all 8 buckets
+    // and could surface as a sim-0.0 candidate pair in lshTopK.
+    val nulls = out.where(col("embedding").isNull)
+      .select(col("fast"), col("ref")).collect()
+    assert(nulls.length == 1)
+    assert(nulls.head.isNullAt(0), "null embedding must band to null")
+    assert(nulls.head.getSeq[Int](1) == Seq.fill(8)(42),
+      "old chain's seed-hash quirk changed")
   }
 
   test("langId static == HOF on the sf0.001 documents corpus") {
