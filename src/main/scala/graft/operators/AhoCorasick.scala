@@ -44,7 +44,6 @@ final class AhoCorasick private (
     }
     t
   }
-  private[operators] def stateCount: Int = base.length - 1
 
   @inline private def step(fromState: Int, c: Char): Int = {
     var s = fromState
@@ -86,15 +85,6 @@ final class AhoCorasick private (
       i += 1
     }
     if (k == res.length) res else java.util.Arrays.copyOf(res, k)
-  }
-
-  /** All matches as (patternId, endExclusive-charIndex) pairs. */
-  def findAll(text: CharSequence): scala.collection.mutable.ArrayBuffer[(Int, Int)] = {
-    val res = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    findAllPacked(text).foreach { p =>
-      res += (((p >>> 32).toInt, (p & 0xffffffffL).toInt))
-    }
-    res
   }
 }
 

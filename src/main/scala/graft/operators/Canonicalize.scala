@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,11 +16,12 @@ import graft.Schemas._
  * Stages and their shuffle cost (the only wide stages in the pipeline
  * besides coref):
  *
- *  G1 alias-edge builder: distinct (tag, surface) forms are self-joined
- *     ONLY within cheap blocking keys — normalized 2-char prefix and
- *     suffix per tag — so the theta-join never goes quadratic in the
- *     corpus; char idf is computed globally in one aggregation and
- *     broadcast, making the TF-IDF cosine per candidate pair row-local.
+ *  G1 alias-edge builder: distinct (tag, surface) forms are paired ONLY
+ *     within cheap blocking keys — normalized 2-char prefix and suffix
+ *     per tag ([[blockKeys]]) — so candidate generation never goes
+ *     quadratic in the corpus; each block's pairs come from one kernel
+ *     ([[blockPairs]]) against one global char idf ([[charIdf]]), on the
+ *     driver and in a `flatMapGroups` task alike.
  *  G2 connected components over the candidate edges: iterative min-label
  *     propagation over joins ("GraphFrames-style") with per-round
  *     pointer jumping; `localCheckpoint` every round cuts lineage;
@@ -53,20 +55,23 @@ object Canonicalize {
     "refers_to" -> "TITLE")
   // vocal_by spans VOCALIST|VOCALOID — resolved against both (union) below.
 
-  private def normKey(c: org.apache.spark.sql.Column) =
-    regexp_replace(lower(c), "[^\\p{L}\\p{N}]", "")
+  /** The hot-block guard shared by every pairing path: a blocking key
+    * held by more than this many forms discriminates nothing and would
+    * cost m^2 candidate pairs, so its block is dropped from pairing
+    * ([[hotAliasBlocks]] lists what a corpus loses). */
+  val MaxBlockSize = 1000
 
   /** Row-local char TF-IDF cosine over normalized keys (the sklearn
     * char-analyzer formula the reference's per-doc dedup uses,
     * src/prod.py:185-198, against a GLOBAL idf map). Vectors are built
-    * per CODE POINT, matching [[charIdf]]'s keys (Spark `split(nk, "")`
-    * yields per-codepoint strings) — a per-UTF-16-unit vector would give
+    * per CODE POINT, matching [[charIdf]]'s keys ([[distinctChars]]) —
+    * a per-UTF-16-unit vector would give
     * every astral char idf 1.0 and silently diverge from the
     * independently-minted oracle on an astral-bearing corpus. */
   private[operators] def tfidfCosine(ka: String, kb: String,
       idf: Map[String, Double]): Double = {
     def vec(s: String): collection.Map[String, Double] = {
-      val counts = scala.collection.mutable.HashMap.empty[String, Double]
+      val counts = mutable.HashMap.empty[String, Double]
       var i = 0
       while (i < s.length) {
         val cp = s.codePointAt(i)
@@ -85,12 +90,6 @@ object Canonicalize {
     va.iterator.map { case (c, x) => x * vb.getOrElse(c, 0.0) }.sum
   }
 
-  /** Plain-JVM Levenshtein over CODE POINTS (for the row-local
-    * refinement pass) — Spark's levenshtein() in the candidate-edge join
-    * also counts code points, so an astral char (one codepoint, two
-    * UTF-16 units) costs ONE edit on both stages, and the refinement cap
-    * can never be stricter than the candidate criterion by a unit
-    * artifact. */
   @inline private def hasSurrogate(s: String): Boolean = {
     var i = 0
     while (i < s.length) {
@@ -100,13 +99,16 @@ object Canonicalize {
     false
   }
 
+  /** Plain-JVM Levenshtein over CODE POINTS, for both the candidate test
+    * ([[blockPairs]]) and the refinement pass — Spark's SQL levenshtein
+    * counts code points too, so an astral char (one codepoint, two UTF-16
+    * units) costs ONE edit, as in the SQL oracle. */
   private[graft] def jvmLev(a: String, b: String): Int = {
     // BMP fast path: this runs per member-leader pair in the refinement
     // inner loop (allocation rate is the measured scaling limiter);
     // surrogate-free strings — the overwhelming majority of normalized
     // keys — compare chars directly with only the dp row allocated. The
-    // codepoint form below keeps astral chars at one edit each, matching
-    // Spark's levenshtein() in the candidate stage.
+    // codepoint form below keeps astral chars at one edit each.
     if (!hasSurrogate(a) && !hasSurrogate(b)) {
       val dp = Array.tabulate(b.length + 1)(identity)
       var i = 1
@@ -222,25 +224,30 @@ object Canonicalize {
     x.length - y.length
   }
 
-  /** JVM twin of the column [[normKey]] (Spark `regexp_replace(lower(c),
-    * "[^\\p{L}\\p{N}]", "")`). Lowercasing DELEGATES to the exact code
-    * the Lower expression runs — `CollationSupport.Lower` with the ICU
-    * flag read from the session conf — because neither JDK
-    * String.toLowerCase nor UTF8String.toLowerCase matches it: Spark 4's
-    * ICU casing applies Unicode Final_Sigma where the JDK does not
-    * ("σΣ0á" lowers to "σς0á" in Spark, "σσ0á" in the JDK; caught by
-    * the ScaleSpec twin property test). java.util.regex \p{L}/\p{N} are
+  /** The one normalized key: Spark's `regexp_replace(lower(s),
+    * "[^\\p{L}\\p{N}]", "")`. Lowercasing DELEGATES to the exact code the
+    * Lower expression runs — `CollationSupport.Lower` with the session's
+    * ICU flag, read once on the driver and shipped to tasks — because
+    * neither JDK String.toLowerCase nor UTF8String.toLowerCase matches it:
+    * Spark 4's ICU casing applies Unicode Final_Sigma where the JDK does
+    * not ("σΣ0á" lowers to "σς0á" in Spark, "σσ0á" in the JDK; the
+    * ScaleSpec twin test pins this). java.util.regex \p{L}/\p{N} are
     * Unicode categories exactly as in Spark's regexp_replace. */
   private val nonAlnumJvm = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]")
-  private[graft] def normKeyJvm(s: String): String = {
-    val useICU = org.apache.spark.sql.internal.SQLConf.get.getConf(
-      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+  private[graft] def normKeyJvm(s: String,
+      useICU: Boolean = icuCaseMappings()): String = {
     val lowered = org.apache.spark.sql.catalyst.util.CollationSupport.Lower
       .exec(org.apache.spark.unsafe.types.UTF8String.fromString(s),
         org.apache.spark.sql.types.StringType.collationId, useICU)
       .toString
     nonAlnumJvm.matcher(lowered).replaceAll("")
   }
+
+  /** The session's ICU case-mapping flag (an in-task `SQLConf.get` would
+    * allocate a read-only conf per call). */
+  private def icuCaseMappings(): Boolean =
+    org.apache.spark.sql.internal.SQLConf.get.getConf(
+      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 
   /** First n CODE POINTS (Spark `substring(c, 1, n)` semantics). */
   @inline private[graft] def substrCp(s: String, n: Int): String = {
@@ -262,6 +269,66 @@ object Canonicalize {
     }
     sb.toString
   }
+
+  /** The two blocking keys of a form with normalized key `nk`: its tag
+    * plus the first two, and the last two (reversed), code points of `nk`.
+    * Two forms are candidate aliases only if they share a key. */
+  private def blockKeys(tag: String, nk: String): Array[String] =
+    Array("p:" + tag + ":" + substrCp(nk, 2),
+      "s:" + tag + ":" + substrCp(reverseCp(nk), 2))
+
+  /** The candidate pairs of ONE block, members = (id, nk): a pair of
+    * distinct ids is an alias edge iff levenshtein <= 3 OR global-idf
+    * char-TFIDF cosine > 0.5 on the normalized keys (the reference's
+    * thresholds, src/prod.py:198,210). Emits (id_i, id_j) for i < j. */
+  private def blockPairs(members: collection.IndexedSeq[(String, String)],
+      idf: Map[String, Double]): collection.Seq[(String, String)] = {
+    val out = mutable.ArrayBuffer.empty[(String, String)]
+    var i = 0
+    while (i < members.length) {
+      val (ida, ka) = members(i)
+      var j = i + 1
+      while (j < members.length) {
+        val (idb, kb) = members(j)
+        if (ida != idb &&
+          (jvmLev(ka, kb) <= 3 || tfidfCosine(ka, kb, idf) > 0.5))
+          out += ((ida, idb))
+        j += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** The distinct code points of `s`, one string each — the documents of
+    * the char idf. */
+  private def distinctChars(s: String): collection.Set[String] = {
+    val seen = mutable.HashSet.empty[String]
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      seen += new String(Character.toChars(cp))
+      i += Character.charCount(cp)
+    }
+    seen
+  }
+
+  /** Document frequencies over non-empty normalized keys:
+    * (number of keys, char -> number of keys holding it). */
+  private def charDf(nks: Iterator[String]): (Long, Map[String, Long]) = {
+    val df = mutable.HashMap.empty[String, Long]
+    var n = 0L
+    nks.filter(_.nonEmpty).foreach { nk =>
+      n += 1
+      distinctChars(nk).foreach(c => df.update(c, df.getOrElse(c, 0L) + 1L))
+    }
+    (n, df.toMap)
+  }
+
+  /** sklearn's smoothed idf over `n` documents, `df(c)` of which hold the
+    * char c: log((1 + n) / (1 + df)) + 1. */
+  private def idfWeight(n: Long, df: Map[String, Long]): Map[String, Double] =
+    df.map { case (c, d) => c -> (math.log((1.0 + n) / (1.0 + d)) + 1.0) }
 
   /** Greedy leader refinement of ONE canopy — shared VERBATIM by the
     * distributed `flatMapGroups` path and the driver fast path so the
@@ -288,7 +355,7 @@ object Canonicalize {
           "Canonicalize.hotCanopies and either tighten the aliasEdges " +
           "blocking guard or raise maxCanopySize deliberately")
     // leaders in founding order; a member joins its FIRST match
-    val leaders = scala.collection.mutable.ArrayBuffer
+    val leaders = mutable.ArrayBuffer
       .empty[(String, String)] // (surface, nk)
     members.iterator.map { case (tag, surface, n, nk) =>
       val leader = leaders.find(l => aliasMatch(nk, l._2, idfMap))
@@ -366,84 +433,78 @@ object Canonicalize {
       .agg(count(lit(1)).as("n_mentions"))
 
   /** Global char idf over the normalized distinct surface forms (one
-    * aggregation; the map is alphabet-sized — bounded by distinct chars,
-    * not corpus size — so collecting it to the driver is safe at any
-    * scale). Shared by candidate generation and canopy refinement. */
+    * job: per-partition document frequencies, summed on the driver; the
+    * map is alphabet-sized — bounded by distinct chars, not corpus size —
+    * so collecting it is safe at any scale). Shared by candidate
+    * generation and canopy refinement. */
   def charIdf(spark: SparkSession, forms: DataFrame): Map[String, Double] = {
-    val f = forms.select(normKey(col("surface")).as("nk"))
-      .where(length(col("nk")) > 0)
-    val nForms = f.count()
-    f.select(explode(array_distinct(split(col("nk"), ""))).as("ch"))
-      .where(col("ch") =!= "")
-      .groupBy("ch").count()
+    import spark.implicits._
+    val icu = icuCaseMappings()
+    val parts = forms.select(col("surface")).as[String]
+      .mapPartitions(it => Iterator(charDf(it.map(normKeyJvm(_, icu)))))
       .collect()
-      .map(r => r.getString(0) -> (math.log((1.0 + nForms) / (1.0 + r.getLong(1))) + 1.0))
-      .toMap
+    idfWeight(parts.iterator.map(_._1).sum,
+      parts.iterator.flatMap(_._2).toSeq.groupMapReduce(_._1)(_._2)(_ + _))
+  }
+
+  /** Every (block key, form id, nk) of the forms with a non-empty
+    * normalized key — two rows per form, one per [[blockKeys]] key. */
+  private def blockedForms(spark: SparkSession, forms: DataFrame)
+      : Dataset[(String, String, String)] = {
+    import spark.implicits._
+    val icu = icuCaseMappings()
+    forms.select(col("tag"), col("surface")).as[(String, String)]
+      .flatMap { case (tag, surface) =>
+        val nk = normKeyJvm(surface, icu)
+        if (nk.isEmpty) Nil
+        else blockKeys(tag, nk).toSeq.map(b => (b, tag + "\u0000" + surface, nk))
+      }
   }
 
   /**
-   * G1: candidate pairs via prefix/suffix blocking, edge iff
-   * levenshtein <= 3 OR global-idf char-TFIDF cosine > 0.5.
-   * Returns (src, dst) over surface keys tag+NUL+surface (U+0000 separator).
+   * G1: candidate alias edges, [[blockPairs]] over every block of at most
+   * `maxBlockSize` forms. Returns distinct (src, dst) form ids
+   * (tag + NUL + surface), src < dst in UTF-8 order.
    */
   def aliasEdges(spark: SparkSession, forms: DataFrame,
-      maxBlockSize: Int = 1000,
+      maxBlockSize: Int = MaxBlockSize,
       idfOpt: Option[Map[String, Double]] = None): DataFrame = {
     import spark.implicits._
-    val f = forms.select(col("tag"), col("surface"),
-      normKey(col("surface")).as("nk")).where(length(col("nk")) > 0)
-
     val idfB = spark.sparkContext.broadcast(
       idfOpt.getOrElse(charIdf(spark, forms)))
-
-    val blocked0 = f
-      .withColumn("blk", explode(array(
-        concat(lit("p:"), col("tag"), lit(":"), substring(col("nk"), 1, 2)),
-        concat(lit("s:"), col("tag"), lit(":"),
-          substring(reverse(col("nk")), 1, 2)))))
-    // hot-block guard: a block of m surfaces costs m^2 candidate pairs —
-    // at corpus scale a common prefix ("th", "mi") would go quadratic.
-    // Oversized blocks are DROPPED from pairing (low-signal: a 2-char
-    // prefix shared by >maxBlockSize surfaces discriminates nothing).
-    // Lazy, codegen column filter (same rationale as the DocDedup df
-    // guard: an eager count + take here fired extra jobs at
-    // plan-construction time); the drop set is auditable via
-    // [[hotAliasBlocks]] — no silent truncation.
-    val blockSizes = blocked0.groupBy("blk").count()
-    val blocked = blocked0.join(
-      blockSizes.where(col("count") <= maxBlockSize).select("blk"), "blk")
-    val a = blocked.select(col("blk"), col("tag"),
-      col("surface").as("sa"), col("nk").as("ka"))
-    val b = blocked.select(col("blk"),
-      col("surface").as("sb"), col("nk").as("kb"))
-    val simUdf = udf { (ka: String, kb: String) =>
-      tfidfCosine(ka, kb, idfB.value)
-    }
-    a.join(b, Seq("blk"))
-      .where(col("sa") < col("sb")) // canonical pair order, no self-pairs
-      .where(levenshtein(col("ka"), col("kb")) <= 3 ||
-        simUdf(col("ka"), col("kb")) > 0.5)
-      .select(
-        concat_ws("\u0000", col("tag"), col("sa")).as("src"),
-        concat_ws("\u0000", col("tag"), col("sb")).as("dst"))
+    val pairs = blockedForms(spark, forms)
+      .groupByKey(_._1)
+      .flatMapGroups { (_, rows) =>
+        // hot-block guard: buffer at most maxBlockSize + 1 members, and
+        // drop the block if it overflows (auditable via hotAliasBlocks)
+        val members = mutable.ArrayBuffer.empty[(String, String)]
+        while (rows.hasNext && members.length <= maxBlockSize) {
+          val (_, id, nk) = rows.next()
+          members += ((id, nk))
+        }
+        if (members.length > maxBlockSize) Iterator.empty
+        else blockPairs(members, idfB.value).iterator.map { case (a, b) =>
+          if (utf8Compare(a, b) < 0) (a, b) else (b, a)
+        }
+      }
+      .toDF("src", "dst")
       .distinct()
+    // The optimizer sizes a flatMapGroups output like its input (~180 KB
+    // for 145k edges), so connectedComponents would broadcast the edges in
+    // every round; re-rooting on the RDD leaves the size unknown and lets
+    // AQE plan those joins on the real shuffle sizes.
+    spark.createDataFrame(pairs.rdd, pairs.schema)
   }
 
   /** Diagnostic companion to the [[aliasEdges]] hot-block guard: the
     * blocking keys (with sizes) that candidate generation DROPS at the
     * given `maxBlockSize` — run when auditing what a corpus loses. */
   def hotAliasBlocks(spark: SparkSession, forms: DataFrame,
-      maxBlockSize: Int = 1000): DataFrame = {
-    val f = forms.select(col("tag"), col("surface"),
-      normKey(col("surface")).as("nk")).where(length(col("nk")) > 0)
-    f.withColumn("blk", explode(array(
-        concat(lit("p:"), col("tag"), lit(":"), substring(col("nk"), 1, 2)),
-        concat(lit("s:"), col("tag"), lit(":"),
-          substring(reverse(col("nk")), 1, 2)))))
+      maxBlockSize: Int = MaxBlockSize): DataFrame =
+    blockedForms(spark, forms).toDF("blk", "id", "nk")
       .groupBy("blk").count()
       .where(col("count") > maxBlockSize)
       .orderBy(col("count").desc)
-  }
 
   /** Diagnostic companion to the [[canonicalMap]] canopy-size guard: the
     * connected components (with member counts) whose size exceeds
@@ -579,14 +640,13 @@ object Canonicalize {
     * bound or tighten the blocking guard deliberately, never silently. */
   def canonicalMap(spark: SparkSession, mentions: DataFrame,
       maxCanopySize: Int = 100000,
-      driverMaxVertices: Long = 200000L,
-      driverMaxEdges: Long = 2000000L): DataFrame =
+      driverMaxVertices: Long = 200000L): DataFrame =
     // lazy checkpoint (r06): still truncates lineage and caches the forms
     // for the multi-evaluation distributed path, but the driver fast
     // path's single limit-collect is now the job that materializes it —
     // the old eager form cost one extra full job per canonicalMap call
     canonicalMapFromForms(spark, surfaceForms(mentions).localCheckpoint(false),
-      maxCanopySize, driverMaxVertices, driverMaxEdges)
+      maxCanopySize, driverMaxVertices)
 
   /** Merge two surface-form aggregates by summing mention counts.
     * `surfaceForms` is DISTRIBUTIVE over corpus partitions — this merge is
@@ -615,22 +675,20 @@ object Canonicalize {
     * that many forms, or lower `driverMaxVertices`. */
   def canonicalMapFromForms(spark: SparkSession, forms: DataFrame,
       maxCanopySize: Int = 100000,
-      driverMaxVertices: Long = 200000L,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxVertices: Long = 200000L): DataFrame = {
     import spark.implicits._
     // WHOLE-STAGE HYBRID (the CC hybrid's argument, applied to the full
     // graph stage): everything below surfaceForms — char idf, blocked
     // candidate pairs, connected components, canopy refinement — is a
     // function of the DISTINCT-surface table, bounded by the alias
     // universe, not the corpus. Below the vertex threshold one collect
-    // replaces ~10 small distributed jobs (idf count+collect, block-size
-    // aggregate, candidate join, CC rounds, refinement shuffle), each of
-    // which was pure corpus-independent scheduler tax on every pipeline
-    // run (the canon bench leg's non-parallelizing tail). The driver
-    // path reuses the SAME engine functions (jvmLev, tfidfCosine,
-    // aliasMatch, utf8Compare, refineCanopy) plus JVM twins of the
-    // column fns (normKeyJvm/substrCp/reverseCp), and KgStagesSpec pins
-    // driver == distributed on the real alias graph.
+    // replaces ~10 small distributed jobs (idf, blocking, CC rounds,
+    // refinement shuffle), each of which was pure corpus-independent
+    // scheduler tax on every pipeline run (the canon bench leg's
+    // non-parallelizing tail). Both paths run the SAME kernel (normKeyJvm,
+    // charDf/idfWeight, blockKeys + MaxBlockSize, blockPairs,
+    // refineCanopy), and KgStagesSpec pins driver == distributed on the
+    // real alias graph.
     // r06: ONE limit-collect decides the hybrid AND fetches the rows —
     // limit(max+1) returns the whole table iff it has <= max rows, so the
     // old count() + collect() pair (two jobs over the forms table per
@@ -644,94 +702,57 @@ object Canonicalize {
       else driverMaxVertices.toInt + 1
     val collected = forms.select(col("tag"), col("surface"), col("n_mentions"))
       .limit(cap).as[(String, String, Long)].collect()
+    val icu = icuCaseMappings()
     if (collected.length <= driverMaxVertices) {
+      // (tag, surface, n_mentions, nk), and each form's vertex id
       val rows = collected
-        .map { case (tag, sf, n) => (tag, sf, n, normKeyJvm(sf)) }
-      // global char idf (mirrors charIdf: nk-bearing forms only,
-      // per-codepoint df, log((1+n)/(1+df))+1)
-      val withNk = rows.filter(_._4.nonEmpty)
-      val nNk = withNk.length
-      val df = scala.collection.mutable.HashMap.empty[String, Int]
-      withNk.foreach { f =>
-        val seen = scala.collection.mutable.Set.empty[String]
-        var i = 0
-        while (i < f._4.length) {
-          val cp = f._4.codePointAt(i)
-          val k = new String(Character.toChars(cp))
-          if (seen.add(k)) df.update(k, df.getOrElse(k, 0) + 1)
-          i += Character.charCount(cp)
-        }
-      }
-      val idf: Map[String, Double] = df.iterator
-        .map { case (ch, d) => ch -> (math.log((1.0 + nNk) / (1.0 + d)) + 1.0) }
-        .toMap
-      // blocked candidate pairs -> union-find (mirrors aliasEdges: 2-char
-      // normalized prefix/suffix blocks per tag, hot blocks dropped, pair
-      // criterion lev<=3 OR global-idf cosine>0.5)
-      def key(f: (String, String, Long, String)) = f._1 + "\u0000" + f._2
-      val maxBlockSize = 1000 // aliasEdges' default hot-block guard
-      val blocks = withNk.flatMap(f => Seq(
-          ("p:" + f._1 + ":" + substrCp(f._4, 2)) -> f,
-          ("s:" + f._1 + ":" + substrCp(reverseCp(f._4), 2)) -> f))
-        .groupBy(_._1).valuesIterator
+        .map { case (tag, sf, n) => (tag, sf, n, normKeyJvm(sf, icu)) }
+      val ids = rows.map(f => f._1 + "\u0000" + f._2)
+      val (nNk, df) = charDf(rows.iterator.map(_._4))
+      val idf = idfWeight(nNk, df)
+      val blocks = rows.indices.filter(rows(_)._4.nonEmpty)
+        .flatMap(i => blockKeys(rows(i)._1, rows(i)._4).map(_ -> i))
+        .groupMap(_._1)(_._2).valuesIterator
         // singleton blocks generate no pairs — don't even enqueue them
-        .filter(es => es.length >= 2 && es.length <= maxBlockSize).toSeq
+        .filter(b => b.length >= 2 && b.length <= MaxBlockSize)
+        .map(_.map(i => (ids(i), rows(i)._4))).toSeq
       // Pair DISCOVERY — the O(Σ m²) Levenshtein/cosine work and the only
       // non-trivial compute on this path — fans out per block over
       // [[parMap]]'s bounded pool; only the UNION step stays serial. The
       // same edge set yields the same components whatever the discovery
       // order, so parallelism cannot change the result (and the driver==
       // distributed equality specs pin it).
-      val pairs = parMap(blocks) { es =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var i = 0
-        while (i < es.length) {
-          var j = i + 1
-          while (j < es.length) {
-            val (a, b) = (es(i)._2, es(j)._2)
-            if (a._2 != b._2 &&
-              (jvmLev(a._4, b._4) <= 3 || tfidfCosine(a._4, b._4, idf) > 0.5))
-              out += ((key(a), key(b)))
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      val label = driverComponents(rows.toSeq.map(key), pairs.iterator.flatten)
+      val pairs = parMap(blocks)(blockPairs(_, idf))
+      val label = driverComponents(ids.toSeq, pairs.iterator.flatten)
       // Refinement is worst-case O(members × leaders) per canopy — same
       // fan-out treatment, order preserved by parMap so output order
       // stays the sorted-component order.
-      val out = parMap(rows.groupBy(f => label.get(key(f))).toSeq
+      val out = parMap(rows.indices.groupBy(i => label.get(ids(i))).toSeq
           .sortBy(_._1)(Ordering.fromLessThan[String](utf8Compare(_, _) < 0))) {
           case (comp, members) =>
             // refineCanopy is lazy (an Iterator) — force it HERE so the
             // O(m × leaders) matching actually runs inside the pool task
-            refineCanopy(comp,
-              members.map(f => (f._1, f._2, f._3, f._4)), idf,
+            refineCanopy(comp, members.map(rows(_)).toArray, idf,
               maxCanopySize).toVector
         }.flatten
       return out.toDF("tag", "surface", "n_mentions", "node_id", "canonical")
     }
-    // DISTRIBUTED path: corpus-scale surface universes
+    // DISTRIBUTED path: corpus-scale surface universes. More forms than
+    // driverMaxVertices are more CC vertices than that too, so CC goes
+    // straight to its iterative path.
     val idf = charIdf(spark, forms)
     val idfB = spark.sparkContext.broadcast(idf)
     val edges = aliasEdges(spark, forms, idfOpt = Some(idf))
-    val verts = forms.select(
-      concat_ws("\u0000", col("tag"), col("surface")).as("id"))
-    val cc = connectedComponents(spark, verts, edges,
-      driverMaxVertices = driverMaxVertices, driverMaxEdges = driverMaxEdges)
-    val labeled = forms
-      .withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
-      .join(cc, "id")
-    labeled
-      .select(col("component"), col("tag"), col("surface"),
-        col("n_mentions"), normKey(col("surface")).as("nk"))
-      .as[(String, String, String, Long, String)]
+    val withId =
+      forms.withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
+    withId.join(connectedComponents(spark, withId.select("id"), edges,
+        driverMaxVertices = 0L), "id")
+      .select(col("component"), col("tag"), col("surface"), col("n_mentions"))
+      .as[(String, String, String, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, it) =>
         refineCanopy(comp,
-          it.map(m => (m._2, m._3, m._4, m._5)).toArray,
+          it.map(m => (m._2, m._3, m._4, normKeyJvm(m._3, icu))).toArray,
           idfB.value, maxCanopySize)
       }
       .toDF("tag", "surface", "n_mentions", "node_id", "canonical")

@@ -458,11 +458,4 @@ object DocDedup {
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
-
-  /** Embedding cosine near-dup over `embeddings(vec_id, embedding)`:
-    * cosine >= threshold via the Similarity LSH candidate path, verified
-    * exactly. */
-  def embeddingNearDup(embeddings: DataFrame, threshold: Double = 0.95)
-      : DataFrame =
-    Similarity.lshCosinePairs(embeddings, threshold)
 }

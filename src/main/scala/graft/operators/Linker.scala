@@ -26,14 +26,13 @@ object Linker {
 
   /** Normalization for the 0.7 lookup rung and the sf: surface ids:
     * lowercase (Locale.ROOT), then strip every CODEPOINT outside
-    * \p{L}\p{N} — the same character rule as Canonicalize.normKey, so a
-    * pair of surfaces canonicalization merges under one normalized key
+    * \p{L}\p{N} — the same character rule as Canonicalize.normKeyJvm, so
+    * a pair of surfaces canonicalization merges under one normalized key
     * cannot carry two different sf: ids. Regex, not a per-Char filter:
     * Char.isLetterOrDigit strips astral-plane letters (each surrogate
     * half fails it) and misses \p{Nl}/\p{No} numerals. Documented
-    * remaining divergence: the Spark-side normKey column lowers with ICU
-    * (Final_Sigma) where this executor-local path uses JDK lowercasing —
-    * executors cannot read the session's ICU conf. */
+    * remaining divergence: normKeyJvm lowers through Spark's own Lower
+    * expression (ICU, Final_Sigma) where this uses JDK lowercasing. */
   private val nonAlnum = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]")
   def norm(s: String): String =
     nonAlnum.matcher(s.toLowerCase(java.util.Locale.ROOT)).replaceAll("")

@@ -176,12 +176,20 @@ object TextAnalysis {
   /** 64-bit rolling polynomial hash (Karp-Rabin style) — a custom
     * fingerprint that survives container changes; implemented with the
     * `aggregate` higher-order function over characters (codegen-friendly,
-    * no UDF). */
-  def rollingHash(text: Column): Column =
+    * no UDF). The step uses LEGACY arithmetic so the hash wraps modulo 2^64
+    * like a JVM long; ANSI mode (Spark 4's default) would throw on the
+    * first overflow, i.e. on any text of four or more characters. */
+  def rollingHash(text: Column): Column = {
+    import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
+    import org.apache.spark.sql.catalyst.expressions.{Add, EvalMode, Multiply}
     aggregate(
       split(regexp_replace(lower(trim(text)), "\\s+", " "), ""),
       lit(0L),
-      (acc, ch) => acc * lit(1000003L) + coalesce(ascii(ch).cast("long"), lit(0L)))
+      (acc, ch) => toColumn(Add(
+        Multiply(toExpression(acc), toExpression(lit(1000003L)), EvalMode.LEGACY),
+        toExpression(coalesce(ascii(ch).cast("long"), lit(0L))),
+        EvalMode.LEGACY)))
+  }
 
   /** All analyses as one projection over documents. */
   def analyze(documents: DataFrame): DataFrame =

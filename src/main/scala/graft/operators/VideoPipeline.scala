@@ -20,15 +20,11 @@ import graft.functions.PyText
  *    shifted by length(title) + 7 (preprocess.py:56-61; 7 = len(" [SEP] ")
  *    — the reference hard-codes the shift, so spans sourced from the
  *    title are NOT shifted);
- *  - F1 tokenize-with-offsets as a projection;
+ *  - F1 tokenize-with-offsets via [[tokenRows]];
  *  - D8 label alignment via [[LabelAlign.align]];
  *  - O1 split via [[Metrics.trainValSplit]].
  */
 object VideoPipeline {
-
-  /** P1: positional tuple -> named record. */
-  def fromRecords(df: DataFrame, names: Seq[String]): DataFrame =
-    df.toDF(names: _*)
 
   /** P2 + preprocess stage: doc text + shifted NER spans. Spans with
     * source = 'description' shift by length(title) + 7; others keep their
@@ -47,13 +43,6 @@ object VideoPipeline {
           n.getField("source").as("source"),
           n.getField("entry").as("entry"),
           n.getField("type").as("type"))))
-  }
-
-  /** F1 as a projection: tokens with offsets (array<struct<tok,start,end>>)
-    * in UTF-16 units — the engine-internal slicing space. */
-  def tokenized(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val tok = udf((text: String) => PyText.tokenizeWithOffsets(text))
-    docs.withColumn("tokens", tok(col("text")))
   }
 
   /** Long-format token rows ready for [[LabelAlign.align]]: with our

@@ -46,15 +46,6 @@ object StreamingIngest {
       }
   }
 
-  /** File-source convenience: watch a directory of turn parquet files. */
-  def fromParquetDir(spark: SparkSession, path: String): Dataset[Turn] = {
-    import spark.implicits._
-    spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
-      .parquet(path)
-      .as[Turn]
-  }
-
   /**
    * Watermarked windowed aggregation: mention counts per tag per event-time
    * window — the classic streaming-agg shape (late rows beyond the

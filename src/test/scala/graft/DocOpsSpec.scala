@@ -163,6 +163,13 @@ class DocOpsSpec extends SparkSuite {
     assert(out(0L).getAs[String]("lang_pred") == "en")
     assert(out(0L).getAs[String]("fingerprint") ==
       out(4L).getAs[String]("fingerprint")) // normalized dup
+    // rollingHash normalizes like fingerprint, then folds the chars
+    val texts = Seq("  Hello   World\tX ", "hello world x", "Melt", "")
+    val hashes = spark.createDataFrame(texts.map(Tuple1(_))).toDF("text")
+      .select(TextAnalysis.rollingHash(col("text"))).collect().map(_.getLong(0))
+    def fold(s: String): Long = s.foldLeft(0L)((acc, c) => acc * 1000003L + c)
+    assert(hashes.toSeq ==
+      Seq("hello world x", "hello world x", "melt", "").map(fold))
     assert(out(0L).getAs[Double]("quality") > 0.0 &&
       out(0L).getAs[Double]("quality") <= 1.0)
   }

@@ -76,10 +76,17 @@ class FeaturesSpec extends SparkSuite {
     val row = df.select(
       TextFeatures.countOccurrencesCol(col("tokens"), col("text")).as("cnt"),
       TextFeatures.channelContainCol(col("tokens"), col("channel")).as("ch"),
-      TextFeatures.hashtagsCol(lit("x #miku y #rin")).as("tags")).head
+      TextFeatures.hashtagsCol(lit("x #miku y #rin")).as("tags"),
+      TextFeatures.linksCol(lit("see HTTPS://Vocaloid.example/Melt or http://b.example"))
+        .as("links"),
+      transform(col("tokens"), t => length(t)).as("lens")).head
     assert(row.getSeq[Int](0) == Seq(1, 2, 1))
     assert(row.getSeq[Int](1) == Seq(1, 0, 1))
     assert(row.getSeq[String](2) == Seq("miku", "rin"))
+    assert(row.getSeq[String](3) ==
+      Seq("https://vocaloid.example/melt", "http://b.example"))
+    assert(TextFeatures.lengthOfTokens(Array("hello", "world", "hello")).toSeq ==
+      row.getSeq[Int](4))
   }
 
   test("D8 label alignment: interval join + first-subtoken sentinel") {

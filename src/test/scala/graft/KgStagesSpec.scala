@@ -22,7 +22,7 @@ class KgStagesSpec extends SparkSuite {
     val nm = Linker.linkOne(dict, m("ORIGINAL_AUTHOR", "deco 27"), Set("user"))
     assert(nm.entity_id == Gazetteer.linkIndex("deco*27") && nm.link_score == 0.7)
     // codepoint-aware normalization (same character rule as
-    // Canonicalize.normKey): astral-plane letters and non-decimal
+    // Canonicalize.normKeyJvm): astral-plane letters and non-decimal
     // numerals survive — a per-Char isLetterOrDigit filter strips both
     val dd = new String(Character.toChars(0x1D544)) // MATH DOUBLE-STRUCK M
     assert(Linker.norm(s"${dd}elt!") == s"${dd}elt")
@@ -287,7 +287,7 @@ class KgStagesSpec extends SparkSuite {
     val mentions = operators.Decode.mentions(spark,
       Pipeline.decodeTurns(spark, TranscriptGen.generate(spark, 300L))).toDF()
     def run(dmv: Long) = Canonicalize.canonicalMap(spark, mentions,
-        driverMaxVertices = dmv, driverMaxEdges = dmv)
+        driverMaxVertices = dmv)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getString(3), r.getString(4))).sortBy(t => (t._1, t._2)).toSeq
     val viaDriver = run(200000L)
@@ -322,7 +322,7 @@ class KgStagesSpec extends SparkSuite {
         .flatMap { case (sf, i) => Seq.fill(1 + i % 3)(("TITLE", sf)) }
         .toDF("tag", "text")
       def run(dmv: Long) = Canonicalize.canonicalMap(spark, mentions,
-          driverMaxVertices = dmv, driverMaxEdges = dmv)
+          driverMaxVertices = dmv)
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
           r.getString(3), r.getString(4))).sortBy(t => (t._1, t._2)).toSeq
       val fast = run(200000L)
@@ -367,10 +367,15 @@ class KgStagesSpec extends SparkSuite {
     val smallPair = Seq(("TITLE", "Senbonzakura"), ("TITLE", "Senbonzakura!"))
     val forms = (hot ++ smallPair).toDF("tag", "surface")
       .withColumn("n_mentions", org.apache.spark.sql.functions.lit(1L))
-    val edges = Canonicalize.aliasEdges(spark,
-      forms.select(col("tag"), col("surface")).groupBy("tag", "surface")
-        .agg(count(lit(1)).as("n_mentions")), maxBlockSize = 100)
+    val distinctForms = forms.select(col("tag"), col("surface"))
+      .groupBy("tag", "surface").agg(count(lit(1)).as("n_mentions"))
+    val edges = Canonicalize.aliasEdges(spark, distinctForms, maxBlockSize = 100)
       .collect().map(r => (r.getString(0), r.getString(1)))
+    // the audit companion names exactly the two dropped blocks
+    val dropped = Canonicalize.hotAliasBlocks(spark, distinctForms,
+      maxBlockSize = 100).collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(dropped.toSet == Set(("p:TITLE:xx", 300L), ("s:TITLE:yy", 300L)),
+      dropped.toSeq)
     // hot block dropped: no xx...yy pairs despite lev <= 3 between many
     assert(!edges.exists(_._1.contains("xx")), s"hot block leaked: ${edges.take(3).toSeq}")
     // the small block still pairs

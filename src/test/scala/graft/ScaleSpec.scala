@@ -305,10 +305,11 @@ class ScaleSpec extends SparkSuite {
   test("driver graph-stage column twins == Spark expressions (incl. astral)") {
     import spark.implicits._
     import graft.operators.Canonicalize
-    // the whole-stage hybrid's correctness rests on normKeyJvm/substrCp/
-    // reverseCp reproducing the column fns the distributed path uses —
-    // pin them against the REAL Spark expressions on hostile strings
-    // (astral clefs/notes, combining marks, fullwidth, CJK, mixed case)
+    // normKeyJvm/substrCp/reverseCp (the normalized key and the block keys
+    // of both canonicalization paths) must keep Spark's semantics, which
+    // the SQL oracle re-derives — pin them against the REAL Spark
+    // expressions on hostile strings (astral clefs/notes, combining
+    // marks, fullwidth, CJK, mixed case)
     val rnd = new scala.util.Random(77L)
     val pool = Array("a", "B", "z", "0", "9", "!", "-", " ", "夜", "駆",
       "á", "Ő", "ß", "Σ", "σ", "ς", "🎵", "𝄞", "　", "ﾞ", "１", "Ｋ", ".")

@@ -195,7 +195,7 @@ object KgOracleDump {
     val nkForms = allForms.filter(_.nk.nonEmpty)
 
     // global char idf over the nk-bearing forms (mirrors aliasEdges);
-    // keys are CODE POINTS, like Spark's split(nk, "") in charIdf
+    // keys are CODE POINTS, like the engine's charIdf
     def codePointStrings(s: String): Seq[String] =
       s.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
     val nForms = nkForms.size
@@ -206,7 +206,7 @@ object KgOracleDump {
 
     def lev(a: String, b: String): Int = {
       // code points, matching Spark's levenshtein() and the engine's
-      // refinement jvmLev (UTF-16 units would over-count astral chars)
+      // jvmLev (UTF-16 units would over-count astral chars)
       val ca = a.codePoints().toArray
       val cb = b.codePoints().toArray
       val dp = Array.tabulate(cb.length + 1)(identity)
