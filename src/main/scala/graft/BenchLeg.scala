@@ -56,8 +56,8 @@ object BenchLeg {
           graft.operators.Decode.mentions(spark, decodedInput), dictB).toDF()
         graft.operators.Canonicalize.canonicalMap(spark, linked).count()
       case "coref" =>
-        // the OTHER wide stage: skew-salted window coreference — hot-conv
-        // pre-pass + salt + repartition(conv_id, chunk) + ordered
+        // the OTHER wide stage: skew-salted window coreference — per-row
+        // chunk salt + context rows + repartition(conv_id, chunk) + ordered
         // per-conversation state machine (same decoded parquet input)
         graft.operators.SkewSalting.corefSalted(spark, decodedInput,
           window = 5, chunkSize = 10000).count()

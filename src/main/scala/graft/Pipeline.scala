@@ -73,11 +73,10 @@ object Pipeline {
   def extract(spark: SparkSession, turns: Dataset[Turn]): Dataset[Triple] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     turns.select(col("conv_id"), col("turn_idx"), col("role"), col("text"))
       .as[(String, Int, String, String)]
       .mapPartitions { it =>
-        val model = bc.value // dereferenced once per partition
+        val model = Detector.model
         it.flatMap { case (c, i, r, x) => extractTurn(model, c, i, r, x) }
       }
   }
@@ -89,12 +88,11 @@ object Pipeline {
   def decodeTurns(spark: SparkSession, turns: Dataset[Turn]): Dataset[DecodedTurn] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     turns.select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("text"))
       .as[(String, Int, String, String, String)]
       .mapPartitions { it =>
-        val model = bc.value // dereferenced once per partition
+        val model = Detector.model
         it.map { case (c, i, r, tool, x) =>
           DecodedTurn(c, i, r, tool, x, turnEntities(model, x, r))
         }
@@ -116,9 +114,8 @@ object Pipeline {
   def mentionsFromDecoded(spark: SparkSession,
       decoded: Dataset[DecodedTurn]): Dataset[Mention] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     decoded.mapPartitions { it =>
-      val model = bc.value
+      val model = Detector.model
       it.flatMap(d => Decode.gazetteerMentions(d) ++
         Detector.regexMentions(model, d.conv_id, d.turn_idx, d.text))
     }.dropDuplicates("conv_id", "turn_idx", "start", "end", "tag")
@@ -214,9 +211,10 @@ object Pipeline {
     val decoded = decodedDf.as[DecodedTurn]
     val triples = branches.fork(nameOf("triples")) {
       stage(spark, ckptRoot, nameOf("triples"), "conv_id", nameOf("decoded")) {
-        // coref is the one order-dependent wide stage -> salted: hot
-        // conversations fan out over size/chunkSize tasks with overlap
-        // context (equivalence pinned by ScaleSpec)
+        // coref is the one order-dependent wide stage -> salted: every
+        // conversation is chunked by turn_idx with overlap context, so a
+        // hot one fans out over size/chunkSize tasks (equivalence pinned
+        // by ScaleSpec)
         Triples.triples(spark, decoded).toDF()
           .unionByName(Coref.triples(spark,
             SkewSalting.corefSalted(spark, decoded, window = CorefWindow,

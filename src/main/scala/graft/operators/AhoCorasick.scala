@@ -1,13 +1,13 @@
 package graft.operators
 
 /**
- * Serializable Aho-Corasick automaton over chars, built ONCE on the driver
- * from the gazetteer and broadcast to executors (SURVEY.md §2.8 M1) — the
+ * Serializable Aho-Corasick automaton over chars, built ONCE per JVM from
+ * the gazetteer (`Detector.model`, SURVEY.md §2.8 M1) — the
  * engine's replacement for the reference's per-request ONNX session
  * (src/model/ModelWrapper.py:100-139): one shared read-only structure,
  * amortized across every turn of a partition, zero per-row setup.
  *
- * Flat-array layout (no node objects) so the broadcast is compact and
+ * Flat-array layout (no node objects) so the automaton is compact and
  * matching is allocation-free: `next` is a per-state HashMap only during
  * build; frozen to sorted parallel arrays for search.
  */

@@ -61,6 +61,16 @@ object Canonicalize {
     * ([[hotAliasBlocks]] lists what a corpus loses). */
   val MaxBlockSize = 1000
 
+  /** The [[connectedComponents]] hybrid's edge bound: above this many
+    * edges the driver union-find gives way to the iterative path. */
+  private val DriverMaxEdges = 2000000L
+
+  /** The row limit that tells "at most `max` rows" from "more": a
+    * `limit(limitCap(max))` collect returns the whole input iff it has at
+    * most `max` rows, and at most `max + 1` rows otherwise. */
+  private def limitCap(max: Long): Int =
+    if (max >= Int.MaxValue - 1) Int.MaxValue else max.toInt + 1
+
   /** Row-local char TF-IDF cosine over normalized keys (the sklearn
     * char-analyzer formula the reference's per-doc dedup uses,
     * src/prod.py:185-198, against a GLOBAL idf map). Vectors are built
@@ -514,7 +524,7 @@ object Canonicalize {
     * changed, the same blocking guard) to see exactly what the guard saw. */
   def hotCanopies(spark: SparkSession, mentions: DataFrame,
       maxCanopySize: Int = 100000): DataFrame = {
-    val forms = surfaceForms(mentions).localCheckpoint()
+    val forms = surfaceForms(mentions).localCheckpoint(false)
     val idf = charIdf(spark, forms)
     val edges = aliasEdges(spark, forms, idfOpt = Some(idf))
     val verts = forms.select(
@@ -539,29 +549,32 @@ object Canonicalize {
    */
   def connectedComponents(spark: SparkSession, vertices: DataFrame,
       edges: DataFrame, maxIter: Int = 25,
-      driverMaxVertices: Long = 200000L,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxVertices: Long = 200000L): DataFrame = {
     // HYBRID: the alias graph's size is bounded by the DISTINCT surface
     // universe, not the corpus — usually tiny relative to the data. Below
     // the thresholds, a driver-side union-find computes the identical
-    // min-label components in one collect instead of O(log d) rounds of
-    // distributed joins (measured: the iterative path's ~8 small-job
-    // rounds cost ~5s of pure scheduler overhead per canonicalMap at
-    // local[1] — a corpus-INDEPENDENT tax on every pipeline run). Above
-    // the thresholds — a truly corpus-scale surface universe — the
-    // iterative pointer-jumping path below takes over unchanged.
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
-    // r06: when the caller FORCES the iterative path (driverMaxVertices=0,
-    // the q_connected_components gate's contract), the hybrid decision is
-    // already made — don't pay a vertices.count() job for it (&& below
-    // already short-circuits the edge count)
-    val nV = if (driverMaxVertices > 0) vertices.count() else Long.MaxValue
-    if (nV <= driverMaxVertices && e0.count() <= driverMaxEdges) {
+    // min-label components instead of O(log d) rounds of distributed joins
+    // (measured: the iterative path's ~8 small-job rounds cost ~5s of pure
+    // scheduler overhead per canonicalMap at local[1] — a corpus-
+    // INDEPENDENT tax on every pipeline run). Above the thresholds — a
+    // truly corpus-scale surface universe — the iterative pointer-jumping
+    // path below takes over unchanged. As in [[canonicalMapFromForms]],
+    // ONE limit-collect per input decides the branch AND fetches the rows
+    // (limit(max+1) returns the whole input iff it has <= max rows). When
+    // the caller FORCES the iterative path (driverMaxVertices=0, the
+    // q_connected_components gate's contract) nothing is collected.
+    if (driverMaxVertices > 0) {
       import spark.implicits._
-      val vs = vertices.select(col("id")).as[String].collect()
-      val es = e0.as[(String, String)].collect()
-      val label = driverComponents(vs.toSeq, es.iterator)
-      return vs.toSeq.map(v => (v, label.get(v))).toDF("id", "component")
+      val vs = vertices.select(col("id")).as[String]
+        .limit(limitCap(driverMaxVertices)).collect()
+      if (vs.length <= driverMaxVertices) {
+        val es = edges.select(col("src"), col("dst")).as[(String, String)]
+          .limit(limitCap(DriverMaxEdges)).collect()
+        if (es.length <= DriverMaxEdges) {
+          val label = driverComponents(vs.toSeq, es.iterator)
+          return vs.toSeq.map(v => (v, label.get(v))).toDF("id", "component")
+        }
+      }
     }
     // localCheckpoint (here and per round below) truncates lineage so the
     // iterative plan does not grow unboundedly. Caveat for a REAL
@@ -570,6 +583,7 @@ object Canonicalize {
     // short bounded stage and the checkpointed pipeline retries it from
     // the previous stage snapshot); swap for reliable checkpoint() to a
     // cluster FS if executor churn is expected.
+    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
     // r06: LAZY localCheckpoints (eager = false) throughout the loop —
     // they still truncate lineage, but materialization folds into the
     // round's convergence-check job instead of an extra eager job per
@@ -697,11 +711,8 @@ object Canonicalize {
     // Row ORDER is irrelevant: the union-find edge set is order-free and
     // the refinement output is re-sorted (component asc, members by the
     // pinned (n_mentions, length, surface) order) below.
-    val cap =
-      if (driverMaxVertices >= Int.MaxValue - 1) Int.MaxValue
-      else driverMaxVertices.toInt + 1
     val collected = forms.select(col("tag"), col("surface"), col("n_mentions"))
-      .limit(cap).as[(String, String, Long)].collect()
+      .limit(limitCap(driverMaxVertices)).as[(String, String, Long)].collect()
     val icu = icuCaseMappings()
     if (collected.length <= driverMaxVertices) {
       // (tag, surface, n_mentions, nk), and each form's vertex id

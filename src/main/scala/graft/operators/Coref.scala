@@ -45,7 +45,9 @@ object Coref {
     * instead of the full nested DecodedTurn (~10x payload cut; the regex
     * work also lands in the embarrassingly-parallel stage). `chunk` and
     * `is_ctx` are the salting key and context flag of
-    * [[SkewSalting.corefSalted]]; unsalted rows carry chunk 0. */
+    * [[SkewSalting.corefSalted]], which chunks every conversation by
+    * turn_idx; [[resolve]]'s rows all carry chunk 0 (one chunk per
+    * conversation). */
   final case class CorefRow(conv_id: String, chunk: Int, is_ctx: Boolean,
       turn_idx: Int, anaphor: Boolean, titles: Seq[String])
 
@@ -108,8 +110,7 @@ object Coref {
       }
   }
 
-  /** Unsalted coref: every conversation is one chunk, so no hot-conv
-    * pre-pass (and no extra Spark job) runs. */
+  /** Unsalted coref: every conversation is one chunk. */
   def resolve(spark: SparkSession, decoded: Dataset[DecodedTurn],
       window: Int = 5): Dataset[CorefLink] = {
     import spark.implicits._

@@ -10,12 +10,14 @@ import graft.Schemas._
  *
  * Physical shape — the scale-critical part:
  *  - the Aho-Corasick automaton over all gazetteer surfaces is built ONCE
- *    on the driver and broadcast (the analog of per-process model load +
- *    warmup, src/prod.py:14-15);
+ *    per JVM, on first use, as [[model]] (the analog of per-process model
+ *    load + warmup, src/prod.py:14-15): it is a pure function of the
+ *    compiled-in gazetteer, so each executor builds its own and nothing is
+ *    broadcast;
  *  - detection runs per turn inside [[graft.Pipeline.turnEntities]] under
- *    a `mapPartitions` (broadcast dereferenced once per partition) — a
- *    NARROW transformation, so the detect→decode→dedup→triple core needs
- *    NO shuffle;
+ *    a `mapPartitions` (model read once per partition) — a NARROW
+ *    transformation, so the detect→decode→dedup→triple core needs NO
+ *    shuffle;
  *  - matching is case-insensitive (text lowercased with Locale.ROOT) and
  *    token-aligned: a hit must start on a token start and end on a token
  *    end (or the token's word-core end, before its `[.!]*` suffix), which
@@ -25,9 +27,14 @@ import graft.Schemas._
  */
 object Detector {
 
-  /** Broadcastable detector state: automaton + per-pattern tag/priority. */
+  /** Detector state: automaton + per-pattern tag/priority. */
   final case class Model(ac: AhoCorasick, tags: Array[String],
       priority: Array[Int]) extends Serializable
+
+  /** The model over the compiled-in gazetteer, built once per JVM — on
+    * the driver and on every executor alike. Task closures read it here;
+    * a model over other entries comes from [[buildModel]]. */
+  lazy val model: Model = buildModel()
 
   def buildModel(entries: Seq[Gazetteer.Entry] = Gazetteer.entries): Model = {
     // one automaton pattern per distinct lowercased surface; tag of a

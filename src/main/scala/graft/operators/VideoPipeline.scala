@@ -117,11 +117,10 @@ object VideoPipeline {
     val docs = videos.select(col("yt_id"),
       concat(col("title"), lit(" [SEP] "), col("description")).as("text"),
       col("channel_name"))
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     docs.select("yt_id", "text", "channel_name")
       .as[(String, String, String)]
       .mapPartitions { it =>
-        val model = bc.value
+        val model = Detector.model
         it.flatMap { case (id, text, channel) =>
           val ents = graft.Pipeline.turnEntities(model, text, channel)
           Triples.structuredResult(ents).toSeq.flatMap { case (tag, es) =>

@@ -32,14 +32,13 @@ object StreamingIngest {
   def tripleStream(spark: SparkSession, turns: Dataset[Turn],
       watermark: String = "10 minutes"): Dataset[Triple] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     turns
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"))
       .as[(String, Int, String, String)]
       .mapPartitions { it =>
-        val model = bc.value
+        val model = Detector.model
         it.flatMap { case (c, i, r, x) =>
           graft.Pipeline.extractTurn(model, c, i, r, x)
         }
@@ -64,10 +63,9 @@ object StreamingIngest {
   def windowedMentionCounts(spark: SparkSession, turns: Dataset[Turn],
       windowDur: String = "10 minutes",
       watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
-    val bc = spark.sparkContext.broadcast(Detector.buildModel())
     // the per-turn kernel; me-substitution rewrites text, never tags
     val tagsOf = udf((text: String) =>
-      graft.Pipeline.turnEntities(bc.value, text, "").map(_.tag))
+      graft.Pipeline.turnEntities(Detector.model, text, "").map(_.tag))
     turns
       .withWatermark("ts", watermark)
       .select(col("conv_id"), col("ts"),

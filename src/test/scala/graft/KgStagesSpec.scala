@@ -63,6 +63,35 @@ class KgStagesSpec extends SparkSuite {
     assert(ccIter == expected)
   }
 
+  test("connected components: the driver path runs one limit-collect per input") {
+    // Spark-computed inputs (single-partition range plans, not local
+    // rows), so every evaluation of an input is exactly one job. (A
+    // multi-partition or shuffled input can cost a limit-collect a second
+    // job: Spark's incremental take, or an AQE shuffle stage.)
+    def v(c: org.apache.spark.sql.Column) = format_string("v%03d", c)
+    val verts = spark.range(0, 60, 1, 1).select(v(col("id")).as("id"))
+    val edges = spark.range(0, 59, 1, 1).where(col("id") % 10 =!= 9)
+      .select(v(col("id")).as("src"), v(col("id") + 1).as("dst"))
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val cc = try {
+      val cc = Canonicalize.connectedComponents(spark, verts, edges)
+      Thread.sleep(500) // let the listener bus drain (private in Spark 4)
+      cc
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"driver-path CC jobs: $jobs")
+    assert(jobs >= 1, "no job seen: the inputs were not Spark-computed")
+    assert(jobs <= 2, s"driver-path CC ran $jobs jobs")
+    val comps = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(comps.size == 60 && comps.values.toSet ==
+      (0 until 60 by 10).map(i => f"v$i%03d").toSet)
+  }
+
   test("connected components: 60-node chain converges (shortcutting), short budget throws") {
     import spark.implicits._
     // a chain's diameter (59) exceeds the old 20-round propagation

@@ -10,49 +10,90 @@ import graft.functions.CatalystExprs
   * (shuffle budget, pushdown), Catalyst expression parity, streaming. */
 class ScaleSpec extends SparkSuite {
 
-  test("salted coref == unsalted coref (overlap-context equivalence)") {
+  /** Decoded turns for hand-built coref fixtures: a TITLE turn ("Melt")
+    * or an anaphor turn ("it"), per (conv_id, turn_idx, isTitle). */
+  private def corefTurns(rows: Seq[(String, Int, Boolean)]) = {
     import spark.implicits._
-    // conv 0 is the hot conversation (320 turns) -> gets chunked
-    val turns = TranscriptGen.generate(spark, 25L)
-    val decoded = Pipeline.decodeTurns(spark, turns)
-    val plain = Coref.resolve(spark, decoded, window = 5).collect().toSet
-    val salted = SkewSalting.corefSalted(spark, decoded, window = 5,
-      chunkSize = 50).collect().toSet
-    assert(plain.nonEmpty, "fixture must exercise coref")
-    assert(salted == plain)
-    // SPARSE turn indices: the hot map keys the overlap rule on max
-    // turn_idx, not row count — a count proxy under-states the index
-    // space and silently drops context rows at chunk boundaries (an
-    // upstream filter leaving every other turn is enough to trip it)
-    val sparse = decoded.filter(d => d.turn_idx % 2 == 0)
-    val plainSparse = Coref.resolve(spark, sparse, window = 5)
-      .collect().toSet
-    val saltedSparse = SkewSalting.corefSalted(spark, sparse, window = 5,
-      chunkSize = 50).collect().toSet
-    assert(saltedSparse == plainSparse,
-      "salted coref diverged on a sparse turn_idx space")
+    rows.map { case (c, i, title) =>
+      if (title) Schemas.DecodedTurn(c, i, "user", null, s"Melt $i",
+        Seq(Schemas.Entity("TITLE", s"Melt $i", 0, 4)))
+      else Schemas.DecodedTurn(c, i, "user", null, "it", Nil)
+    }.toDS()
   }
 
-  test("salting guard: too many hot conversations fails loudly, not silently") {
-    import spark.implicits._
-    // 12 conversations of 8 turns each, chunkSize=2 -> every conv is "hot";
-    // with maxHotConvs=5 the Zipf assumption is violated and corefSalted
-    // must THROW (a driver-collected hot map would bloat), while a bound
-    // that accommodates the set still salts fine. Even turns carry a
-    // title and odd turns an anaphor, so the salted run has links to count
-    val decoded = (0 until 12).flatMap { c =>
-      (0 until 8).map(i =>
-        if (i % 2 == 0) Schemas.DecodedTurn(s"conv$c", i, "user", null,
-          "Melt", Seq(Schemas.Entity("TITLE", "Melt", 0, 4)))
-        else Schemas.DecodedTurn(s"conv$c", i, "user", null, "it", Nil))
-    }.toDS()
-    val e = intercept[IllegalStateException] {
-      SkewSalting.corefSalted(spark, decoded, window = 1, chunkSize = 2,
-        maxHotConvs = 5).count()
+  /** Salted coref must equal [[Coref.resolve]] link for link (as a
+    * multiset) and the fixture must produce links. */
+  private def assertSaltedEqualsPlain(decoded: org.apache.spark.sql.Dataset[
+      Schemas.DecodedTurn], window: Int, chunkSize: Int, what: String): Unit = {
+    def sorted(ls: Array[Coref.CorefLink]) =
+      ls.toSeq.sortBy(l => (l.conv_id, l.turn_idx, l.antecedent_turn, l.antecedent))
+    val plain = sorted(Coref.resolve(spark, decoded, window).collect())
+    val salted = sorted(SkewSalting.corefSalted(spark, decoded,
+      window = window, chunkSize = chunkSize).collect())
+    assert(plain.nonEmpty, s"$what: fixture must exercise coref")
+    assert(salted == plain,
+      s"$what (window=$window, chunkSize=$chunkSize): salted coref diverged")
+  }
+
+  test("salted coref == unsalted coref (overlap-context equivalence)") {
+    // conv 0 is the hot conversation (320 turns) -> spans several chunks
+    val turns = TranscriptGen.generate(spark, 25L)
+    val decoded = Pipeline.decodeTurns(spark, turns)
+    assertSaltedEqualsPlain(decoded, 5, 50, "TranscriptGen corpus")
+    // SPARSE turn indices: chunks are index ranges, not row counts — an
+    // upstream filter leaving every other turn must not shift the
+    // context rows at chunk boundaries
+    assertSaltedEqualsPlain(decoded.filter(d => d.turn_idx % 2 == 0), 5, 50,
+      "sparse turn_idx")
+    // boundary: the last turn_idx (8) lies in [chunkSize - window,
+    // chunkSize), so context rows go into an EMPTY next chunk
+    assertSaltedEqualsPlain(corefTurns(
+      (0 to 8).map(i => ("b", i, i % 2 == 0))), 3, 10, "boundary")
+    // spanning: a few-row conversation whose indices span several chunks,
+    // with links across every chunk boundary (and one just out of reach)
+    assertSaltedEqualsPlain(corefTurns(Seq(("s", 0, true), ("s", 9, true),
+      ("s", 10, false), ("s", 19, true), ("s", 21, false), ("s", 26, true),
+      ("s", 30, false), ("s", 45, true), ("s", 50, false),
+      // negative indices: chunks are floor-divided index ranges
+      ("n", -11, true), ("n", -9, false))), 3, 10, "spanning")
+    // 12 conversations x 8 turns at chunkSize 2: every conversation is
+    // cut into 4 chunks and every link crosses from a context row
+    assertSaltedEqualsPlain(corefTurns(for (c <- 0 until 12; i <- 0 until 8)
+      yield (s"conv$c", i, i % 2 == 0)), 1, 2, "12 x 8")
+    // seeded fuzz over small chunk/window pairs
+    val rnd = new scala.util.Random(20261017L)
+    for (round <- 0 until 12) {
+      val chunkSize = 1 + rnd.nextInt(6)
+      val window = 1 + rnd.nextInt(chunkSize)
+      // sparse, duplicated turn indices; at most one TITLE row per
+      // (conv, turn_idx), so the links do not depend on sort ties
+      val rows = (0 until 4).flatMap { c =>
+        val idx = (0 until 3 + rnd.nextInt(10)).map(_ => rnd.nextInt(30))
+        idx.distinct.flatMap { i =>
+          val title = rnd.nextInt(3) == 0
+          val dups = idx.count(_ == i) - 1
+          (s"f$c", i, title) +: Seq.fill(dups)((s"f$c", i, false))
+        }
+      } ++ Seq(("anchor", 0, true), ("anchor", 1, false))
+      assertSaltedEqualsPlain(corefTurns(rows), window, chunkSize,
+        s"fuzz round $round")
     }
-    assert(e.getMessage.contains("chunkSize"))
-    assert(SkewSalting.corefSalted(spark, decoded, window = 1, chunkSize = 2,
-      maxHotConvs = 100).count() > 0)
+  }
+
+  test("corefSalted builds its plan without running a Spark job") {
+    val decoded = Pipeline.decodeTurns(spark, TranscriptGen.generate(spark, 25L))
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SkewSalting.corefSalted(spark, decoded, window = 5, chunkSize = 50)
+      Thread.sleep(500) // let the listener bus drain (private in Spark 4)
+      assert(jobs == 0, s"corefSalted ran $jobs job(s) before any action")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("extraction core is a single narrow stage: NO shuffle exchange") {
