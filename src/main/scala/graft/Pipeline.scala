@@ -445,25 +445,12 @@ object Pipeline {
     }
   }
 
-  /** Largest committed compaction generation under `root`, or -1. */
-  private def latestCompaction(root: String, upTo: Int,
-      prefix: String = "triples_compact_"): Int =
+  /** Largest committed `<prefix><g>` generation (g <= upTo) under
+    * `root`, or -1. */
+  private def latestCompaction(root: String, upTo: Int, prefix: String): Int =
     (0 to upTo).reverse.find(g =>
       graft.sources.IcebergishTable.isCommitted(root, s"$prefix$g"))
       .getOrElse(-1)
-
-  /** The conv-id registry through batch `batchId`: the largest committed
-    * `convs_compact_<g>` (g <= batchId) plus every `convs_b<i>` with
-    * g < i <= batchId — the registry twin of [[readTriplesUpTo]]. */
-  def readConvsUpTo(spark: SparkSession, root: String,
-      batchId: Int): org.apache.spark.sql.DataFrame = {
-    import graft.sources.IcebergishTable.read
-    val g = latestCompaction(root, batchId, "convs_compact_")
-    val base =
-      if (g >= 0) Seq(read(spark, root, s"convs_compact_$g")) else Seq.empty
-    (base ++ ((g + 1) to batchId).map(i => read(spark, root, s"convs_b$i")))
-      .reduce(_ unionByName _)
-  }
 
   /** Snapshot ids present under `root` whose directory name is
     * `<prefix><int>` (committed or not — callers filter). Shared by the
@@ -498,117 +485,117 @@ object Pipeline {
         .exists(j => j > b && isCommitted(root, s"surface_forms_b$j"))
   }
 
-  /** Fold the per-batch conv-id registries through COMPLETED batch
-    * `upToBatch` into one `convs_compact_<g>` generation — same
-    * crash-safe commit-then-GC ordering as [[compactTriples]], same
-    * small-file rationale (the disjointness guard otherwise unions one
-    * tiny snapshot per batch forever). Completion is REQUIRED, not just
-    * convenient: a folded HEAD batch's replay is detected before the
-    * guard (pure read-back, or the forms_b replay skip), and a folded
-    * BELOW-head batch's replay fails fast on [[runIncremental]]'s
-    * superseded-batch check — so folding a batch's own convs into the
-    * registry can never make the guard fire on a legitimate replay. */
-  def compactConvs(spark: SparkSession, root: String,
-      upToBatch: Int): Unit = {
-    import graft.sources.IcebergishTable
-    require(upToBatch >= 0)
-    require(batchCompleted(root, upToBatch),
-      s"batch $upToBatch has not completed (no committed edges snapshot, " +
-        "and no committed forms head beyond it) — registry " +
-        "compaction only runs behind a completed batch")
-    val g = latestCompaction(root, upToBatch, "convs_compact_")
-    if (g < upToBatch) {
-      val merged = readConvsUpTo(spark, root, upToBatch)
-      IcebergishTable.commit(spark, merged, root,
-        s"convs_compact_$upToBatch", "conv_id",
-        parentSnapshot =
-          if (g >= 0) s"convs_compact_$g" else "convs_b0")
-    }
-    deleteManifests(root, (0 until upToBatch).map(i => s"convs_compact_$i") ++
-      (0 to upToBatch).map(i => s"convs_b$i"))
-  }
-
-  /** The triple corpus through batch `batchId`: the LARGEST committed
-    * `triples_compact_<g>` (g <= batchId) plus every `triples_b<i>` with
-    * g < i <= batchId. Superseded per-batch snapshots are ignored even if
-    * their manifests still exist — so [[compactTriples]]' garbage
-    * collection is exactly that, garbage collection, and a crash between
-    * its commit and its GC changes nothing the reader sees. */
-  def readTriplesUpTo(spark: SparkSession, root: String,
+  /** The append-only `family` (`triples` or `convs`) through batch
+    * `batchId`: the LARGEST committed `<family>_compact_<g>` (g <=
+    * batchId) plus every `<family>_b<i>` with g < i <= batchId.
+    * Superseded per-batch snapshots are ignored even if their manifests
+    * still exist — so [[compact]]'s garbage collection is exactly that,
+    * garbage collection, and a crash between its commit and its GC
+    * changes nothing the reader sees. */
+  private def readUpTo(spark: SparkSession, root: String, family: String,
       batchId: Int): org.apache.spark.sql.DataFrame = {
     import graft.sources.IcebergishTable.{read, isCommitted}
-    val g = latestCompaction(root, batchId)
+    val g = latestCompaction(root, batchId, s"${family}_compact_")
     // A compaction generation BEYOND batchId folds later batches in and
     // cannot serve a prefix read; if it also superseded (GC'd) the
     // per-batch snapshots this prefix needs, say so precisely instead of
     // failing on the first missing snapshot. No current caller reads
-    // below the head (the disjointness guard uses the convs_b registry),
-    // so this is a contract error, not a recoverable state.
+    // below the head (the disjointness guard reads the registry up to the
+    // previous batch, and compactConvs folds only completed batches), so
+    // this is a contract error, not a recoverable state.
     val missing = ((g + 1) to batchId)
-      .filter(i => !isCommitted(root, s"triples_b$i"))
+      .filter(i => !isCommitted(root, s"${family}_b$i"))
     if (missing.nonEmpty) {
-      val later = dirIds(root, "triples_compact_")
-        .filter(i => i > batchId && isCommitted(root, s"triples_compact_$i"))
+      val later = dirIds(root, s"${family}_compact_")
+        .filter(i => i > batchId && isCommitted(root, s"${family}_compact_$i"))
         .maxOption
       require(later.isEmpty,
-        s"triples through batch $batchId were folded into " +
-          s"triples_compact_${later.getOrElse(-1)} and their per-batch " +
+        s"$family through batch $batchId were folded into " +
+          s"${family}_compact_${later.getOrElse(-1)} and their per-batch " +
           "snapshots GC'd — prefix reads below a compaction generation " +
           "are unavailable by design (compact folds whole history)")
     }
-    val base =
-      if (g >= 0) Seq(read(spark, root, s"triples_compact_$g")) else Seq.empty
-    (base ++ ((g + 1) to batchId).map(i => read(spark, root, s"triples_b$i")))
+    val base = if (g >= 0) Seq(read(spark, root, s"${family}_compact_$g"))
+      else Seq.empty
+    (base ++ ((g + 1) to batchId).map(i => read(spark, root, s"${family}_b$i")))
       .reduce(_ unionByName _)
   }
 
-  /** Small-file compaction for the append-only triple snapshots (the
-    * operational cost of incremental maintenance: after 10^3 batches the
-    * corpus is 10^3 snapshot directories of mostly-small files, and every
-    * edge re-derivation plans 10^3 scans). Rewrites the corpus through
-    * batch `upToBatch` as ONE snapshot — `triples_compact_<upToBatch>` —
-    * then garbage-collects the superseded manifests (earlier compactions
-    * and per-batch snapshots).
+  /** Small-file compaction of the append-only `family` (`triples` or
+    * `convs`; both keyed by conv_id): rewrites it through COMPLETED batch
+    * `upToBatch` as ONE snapshot — `<family>_compact_<upToBatch>` — then
+    * garbage-collects the superseded manifests (earlier compactions and
+    * per-batch snapshots).
     *
     * Crash-safe by ORDERING, not by locking: the compacted snapshot
     * commits first (write-temp + atomic manifest rename, like any stage);
-    * only then are superseded manifests deleted. [[readTriplesUpTo]]
-    * prefers the largest committed generation, so a crash anywhere in the
-    * GC phase leaves a corpus that reads identically — re-running the
-    * compaction just finishes the GC. Data directories of superseded
-    * snapshots are left for out-of-band removal (deleting the manifest
-    * already makes them invisible; physical deletes are the one
-    * non-idempotent step, so they stay out of the commit path). */
-  def compactTriples(spark: SparkSession, root: String,
+    * only then are superseded manifests deleted. [[readUpTo]] prefers the
+    * largest committed generation, so a crash anywhere in the GC phase
+    * leaves a family that reads identically — re-running the compaction
+    * just finishes the GC. Data directories of superseded snapshots are
+    * left for out-of-band removal (deleting the manifest already makes
+    * them invisible; physical deletes are the one non-idempotent step, so
+    * they stay out of the commit path).
+    *
+    * Completion is REQUIRED: folding the snapshots of an IN-FLIGHT batch
+    * (`<family>_b` committed, edges not yet) would delete the manifest its
+    * crash-resume checks, forcing a silent recompute and a re-commit of a
+    * superseded snapshot below the generation. */
+  private def compact(spark: SparkSession, root: String, family: String,
       upToBatch: Int): Unit = {
     import graft.sources.IcebergishTable
     require(upToBatch >= 0)
-    // Same completed-batch guard as [[compactConvs]]: folding the triples
-    // of an IN-FLIGHT batch (triples_b committed, edges not yet) would
-    // delete the manifest its crash-resume checks, forcing a silent
-    // recompute of the expensive triples+coref stage and a re-commit of a
-    // superseded snapshot below the generation.
     require(batchCompleted(root, upToBatch),
       s"batch $upToBatch has not completed (no committed edges snapshot, " +
-        "and no committed forms head beyond it) — triple compaction only " +
-        "runs behind a completed batch")
-    val g = latestCompaction(root, upToBatch)
+        s"and no committed forms head beyond it) — $family compaction " +
+        "only runs behind a completed batch")
+    val g = latestCompaction(root, upToBatch, s"${family}_compact_")
     require(g == upToBatch ||
       ((g + 1) to upToBatch).forall(i =>
-        IcebergishTable.isCommitted(root, s"triples_b$i")),
+        IcebergishTable.isCommitted(root, s"${family}_b$i")),
       s"cannot compact through batch $upToBatch: missing committed " +
-        s"triples_b<i> snapshots after generation $g")
-    if (g < upToBatch) {
-      val merged = readTriplesUpTo(spark, root, upToBatch)
-      IcebergishTable.commit(spark, merged, root,
-        s"triples_compact_$upToBatch", "conv_id",
+        s"${family}_b<i> snapshots after generation $g")
+    if (g < upToBatch)
+      IcebergishTable.commit(spark, readUpTo(spark, root, family, upToBatch),
+        root, s"${family}_compact_$upToBatch", "conv_id",
         parentSnapshot =
-          if (g >= 0) s"triples_compact_$g" else "triples_b0")
-    }
+          if (g >= 0) s"${family}_compact_$g" else s"${family}_b0")
     // GC: superseded manifests only (see Scaladoc); idempotent
-    deleteManifests(root, (0 until upToBatch).map(i => s"triples_compact_$i") ++
-      (0 to upToBatch).map(i => s"triples_b$i"))
+    deleteManifests(root,
+      (0 until upToBatch).map(i => s"${family}_compact_$i") ++
+        (0 to upToBatch).map(i => s"${family}_b$i"))
   }
+
+  /** The triple corpus through batch `batchId` ([[readUpTo]]). */
+  def readTriplesUpTo(spark: SparkSession, root: String,
+      batchId: Int): org.apache.spark.sql.DataFrame =
+    readUpTo(spark, root, "triples", batchId)
+
+  /** The conv-id registry through batch `batchId` ([[readUpTo]]). */
+  def readConvsUpTo(spark: SparkSession, root: String,
+      batchId: Int): org.apache.spark.sql.DataFrame =
+    readUpTo(spark, root, "convs", batchId)
+
+  /** Fold the triple snapshots through completed batch `upToBatch` into
+    * one `triples_compact_<upToBatch>` generation ([[compact]]) — the
+    * operational cost of incremental maintenance: after 10^3 batches the
+    * corpus is 10^3 snapshot directories of mostly-small files, and every
+    * edge re-derivation plans 10^3 scans. */
+  def compactTriples(spark: SparkSession, root: String,
+      upToBatch: Int): Unit =
+    compact(spark, root, "triples", upToBatch)
+
+  /** Fold the per-batch conv-id registries through completed batch
+    * `upToBatch` into one `convs_compact_<upToBatch>` generation
+    * ([[compact]]): the disjointness guard otherwise unions one tiny
+    * snapshot per batch forever. Folding a batch's own convs can never
+    * make the guard fire on a legitimate replay: a folded HEAD batch's
+    * replay is detected before the guard (pure read-back, or the forms_b
+    * replay skip), and a folded BELOW-head batch's replay fails fast on
+    * [[runIncremental]]'s superseded-batch check. */
+  def compactConvs(spark: SparkSession, root: String,
+      upToBatch: Int): Unit =
+    compact(spark, root, "convs", upToBatch)
 
   /** Garbage-collect per-batch artifacts that nothing reads once batch
     * `completedBatch` has committed: the narrow intermediates of every

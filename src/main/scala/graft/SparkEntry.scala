@@ -633,17 +633,15 @@ object SparkEntry {
     "q_connected_components" -> ((s, d) => {
       // G2 gate: a 6-node chain (diameter past naive small budgets),
       // a 2-node component and an isolate — deterministic min-label
-      // components checked against a VALUES oracle. driverMaxVertices=0
-      // forces the DISTRIBUTED iterative path (the driver union-find
-      // fast path is pinned equal by KgStagesSpec) so the gate keeps
-      // covering the at-scale algorithm.
+      // components of the iterative pointer-jumping CC (the one CC;
+      // canonicalMapFromForms' driver path has its own union-find, pinned
+      // equal by KgStagesSpec) checked against a VALUES oracle.
       import s.implicits._
       val verts = Seq("a", "b", "c", "d", "e", "f", "g", "h", "i")
         .toDF("id")
       val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),
         ("e", "f"), ("g", "h")).toDF("src", "dst")
-      Canonicalize.connectedComponents(s, verts, edges,
-        driverMaxVertices = 0L)
+      Canonicalize.connectedComponents(s, verts, edges)
     }),
     "q_predict_tag_counts" -> ((s, d) =>
       // serving-path VALUES gate: per-tag entity counts, minted by

@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,15 +62,14 @@ object Canonicalize {
     * ([[hotAliasBlocks]] lists what a corpus loses). */
   val MaxBlockSize = 1000
 
-  /** The [[connectedComponents]] hybrid's edge bound: above this many
-    * edges the driver union-find gives way to the iterative path. */
-  private val DriverMaxEdges = 2000000L
+  /** The canopy-size guard's default: a component of more members than
+    * this is refused by [[refineCanopy]] (see [[canonicalMap]]). */
+  val MaxCanopySize = 100000
 
-  /** The row limit that tells "at most `max` rows" from "more": a
-    * `limit(limitCap(max))` collect returns the whole input iff it has at
-    * most `max` rows, and at most `max + 1` rows otherwise. */
-  private def limitCap(max: Long): Int =
-    if (max >= Int.MaxValue - 1) Int.MaxValue else max.toInt + 1
+  /** The default driver bound of [[canonicalMapFromForms]]: a forms table
+    * of at most this many rows runs the whole graph stage on the driver,
+    * a larger one runs it distributed. */
+  val DriverMaxVertices = 200000L
 
   /** Row-local char TF-IDF cosine over normalized keys (the sklearn
     * char-analyzer formula the reference's per-doc dedup uses,
@@ -374,37 +374,8 @@ object Canonicalize {
     }
   }
 
-  /** Order-preserving map over a bounded thread pool — the driver fast
-    * path's analog of executor fan-out (same rationale as the footer pool
-    * in [[graft.sources.IcebergishTable.commit]]): `f` must be pure; the
-    * result sequence is in input order, so determinism is the caller's
-    * input order, not scheduling order. */
-  private def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    if (xs.isEmpty) return Seq.empty
-    val threads =
-      math.max(1, math.min(Runtime.getRuntime.availableProcessors, xs.size))
-    // One task per CHUNK, not per item: at 10^5 mostly-trivial items
-    // (singleton canopies, two-member blocks) per-item FutureTask
-    // allocation and queue contention would dominate the work itself —
-    // allocation rate is this engine's measured scaling limiter.
-    val chunks = xs.grouped(
-      math.max(1, xs.size / (threads * 4) +
-        (if (xs.size % (threads * 4) == 0) 0 else 1))).toSeq
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try chunks.map(chunk =>
-        pool.submit(new java.util.concurrent.Callable[Seq[B]] {
-          def call(): Seq[B] = chunk.map(f)
-        })).flatMap { fut =>
-        try fut.get()
-        catch { // surface f's own exception, not the wrapper
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      }
-    finally pool.shutdown()
-  }
-
-  /** Driver-side union-find shared by the hybrid fast paths of
-    * [[connectedComponents]] and [[canonicalMapFromForms]]: unions every
+  /** Driver-side union-find of [[canonicalMapFromForms]]' driver path
+    * (the distributed path runs [[connectedComponents]]): unions every
     * edge whose endpoints are both in `ids` (path-compressing `find`), then
     * labels each id with its component's min member in UTF-8 binary order
     * — the same label the distributed min-label propagation converges to.
@@ -478,10 +449,10 @@ object Canonicalize {
    */
   def aliasEdges(spark: SparkSession, forms: DataFrame,
       maxBlockSize: Int = MaxBlockSize,
-      idfOpt: Option[Map[String, Double]] = None): DataFrame = {
+      idfOpt: Option[Broadcast[Map[String, Double]]] = None): DataFrame = {
     import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(
-      idfOpt.getOrElse(charIdf(spark, forms)))
+    val idfB = idfOpt.getOrElse(
+      spark.sparkContext.broadcast(charIdf(spark, forms)))
     val pairs = blockedForms(spark, forms)
       .groupByKey(_._1)
       .flatMapGroups { (_, rows) =>
@@ -516,20 +487,29 @@ object Canonicalize {
       .where(col("count") > maxBlockSize)
       .orderBy(col("count").desc)
 
+  /** G1+G2, distributed: every form with its connected component over
+    * the [[aliasEdges]] graph — (component, tag, surface, n_mentions). The
+    * one canopy chain: [[canonicalMapFromForms]]' distributed refinement
+    * and [[hotCanopies]] both read it, with the idf broadcast once. */
+  private def canopies(spark: SparkSession, forms: DataFrame,
+      idfB: Broadcast[Map[String, Double]]): DataFrame = {
+    val withId =
+      forms.withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
+    withId.join(connectedComponents(spark, withId.select("id"),
+        aliasEdges(spark, forms, idfOpt = Some(idfB))), "id")
+      .select(col("component"), col("tag"), col("surface"), col("n_mentions"))
+  }
+
   /** Diagnostic companion to the [[canonicalMap]] canopy-size guard: the
     * connected components (with member counts) whose size exceeds
     * `maxCanopySize` — i.e. the canopies whose O(m^2) refinement the
-    * guard refuses to run. Rebuilds the same forms/edges/CC chain as
-    * canonicalMap, so run it with the SAME mentions input (and, if
+    * guard refuses to run. Reads the same [[canopies]] chain as the
+    * distributed path, so run it with the SAME mentions input (and, if
     * changed, the same blocking guard) to see exactly what the guard saw. */
   def hotCanopies(spark: SparkSession, mentions: DataFrame,
-      maxCanopySize: Int = 100000): DataFrame = {
+      maxCanopySize: Int = MaxCanopySize): DataFrame = {
     val forms = surfaceForms(mentions).localCheckpoint(false)
-    val idf = charIdf(spark, forms)
-    val edges = aliasEdges(spark, forms, idfOpt = Some(idf))
-    val verts = forms.select(
-      concat_ws("\u0000", col("tag"), col("surface")).as("id"))
-    connectedComponents(spark, verts, edges)
+    canopies(spark, forms, spark.sparkContext.broadcast(charIdf(spark, forms)))
       .groupBy("component").count()
       .where(col("count") > maxCanopySize)
       .orderBy(col("count").desc)
@@ -548,34 +528,7 @@ object Canonicalize {
    * vertices: one column `id`; edges: (src, dst). Returns (id, component).
    */
   def connectedComponents(spark: SparkSession, vertices: DataFrame,
-      edges: DataFrame, maxIter: Int = 25,
-      driverMaxVertices: Long = 200000L): DataFrame = {
-    // HYBRID: the alias graph's size is bounded by the DISTINCT surface
-    // universe, not the corpus — usually tiny relative to the data. Below
-    // the thresholds, a driver-side union-find computes the identical
-    // min-label components instead of O(log d) rounds of distributed joins
-    // (measured: the iterative path's ~8 small-job rounds cost ~5s of pure
-    // scheduler overhead per canonicalMap at local[1] — a corpus-
-    // INDEPENDENT tax on every pipeline run). Above the thresholds — a
-    // truly corpus-scale surface universe — the iterative pointer-jumping
-    // path below takes over unchanged. As in [[canonicalMapFromForms]],
-    // ONE limit-collect per input decides the branch AND fetches the rows
-    // (limit(max+1) returns the whole input iff it has <= max rows). When
-    // the caller FORCES the iterative path (driverMaxVertices=0, the
-    // q_connected_components gate's contract) nothing is collected.
-    if (driverMaxVertices > 0) {
-      import spark.implicits._
-      val vs = vertices.select(col("id")).as[String]
-        .limit(limitCap(driverMaxVertices)).collect()
-      if (vs.length <= driverMaxVertices) {
-        val es = edges.select(col("src"), col("dst")).as[(String, String)]
-          .limit(limitCap(DriverMaxEdges)).collect()
-        if (es.length <= DriverMaxEdges) {
-          val label = driverComponents(vs.toSeq, es.iterator)
-          return vs.toSeq.map(v => (v, label.get(v))).toDF("id", "component")
-        }
-      }
-    }
+      edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // localCheckpoint (here and per round below) truncates lineage so the
     // iterative plan does not grow unboundedly. Caveat for a REAL
     // multi-node cluster: localCheckpoint stores blocks on executors, so
@@ -653,12 +606,12 @@ object Canonicalize {
     * the audit companion naming the offending components. Raise the
     * bound or tighten the blocking guard deliberately, never silently. */
   def canonicalMap(spark: SparkSession, mentions: DataFrame,
-      maxCanopySize: Int = 100000,
-      driverMaxVertices: Long = 200000L): DataFrame =
+      maxCanopySize: Int = MaxCanopySize,
+      driverMaxVertices: Long = DriverMaxVertices): DataFrame =
     // lazy checkpoint (r06): still truncates lineage and caches the forms
     // for the multi-evaluation distributed path, but the driver fast
-    // path's single limit-collect is now the job that materializes it —
-    // the old eager form cost one extra full job per canonicalMap call
+    // path's limit-collect now materializes it — the old eager form cost
+    // one extra full job per canonicalMap call
     canonicalMapFromForms(spark, surfaceForms(mentions).localCheckpoint(false),
       maxCanopySize, driverMaxVertices)
 
@@ -677,8 +630,10 @@ object Canonicalize {
     * (tag, surface, n_mentions) — the entry point for incremental
     * maintenance, where forms arrive pre-merged via [[mergeForms]] rather
     * than re-aggregated from the full mention corpus. The driver fast
-    * path evaluates the forms plan exactly once (a single limit-collect);
-    * the DISTRIBUTED path evaluates it several times (idf + blocking +
+    * path evaluates the forms plan once, in one limit-collect — one job
+    * on a single-partition input, two on a multi-file snapshot (Spark's
+    * incremental take scans one partition, then the rest; KgStagesSpec
+    * pins 2 over a 4-file forms snapshot); the DISTRIBUTED path evaluates it several times (idf + blocking +
     * join) — pass a materialized or checkpointed table (a lazy
     * `localCheckpoint(false)` suffices), as [[canonicalMap]] does.
     *
@@ -688,14 +643,14 @@ object Canonicalize {
     * turns out too large for the driver path; size the driver heap for
     * that many forms, or lower `driverMaxVertices`. */
   def canonicalMapFromForms(spark: SparkSession, forms: DataFrame,
-      maxCanopySize: Int = 100000,
-      driverMaxVertices: Long = 200000L): DataFrame = {
+      maxCanopySize: Int = MaxCanopySize,
+      driverMaxVertices: Long = DriverMaxVertices): DataFrame = {
     import spark.implicits._
-    // WHOLE-STAGE HYBRID (the CC hybrid's argument, applied to the full
-    // graph stage): everything below surfaceForms — char idf, blocked
-    // candidate pairs, connected components, canopy refinement — is a
-    // function of the DISTINCT-surface table, bounded by the alias
-    // universe, not the corpus. Below the vertex threshold one collect
+    // WHOLE-STAGE HYBRID, the stage's ONE driver-or-distributed choice:
+    // everything below surfaceForms — char idf, blocked candidate pairs,
+    // connected components, canopy refinement — is a function of the
+    // DISTINCT-surface table, bounded by the alias universe, not the
+    // corpus. Below the vertex threshold one collect
     // replaces ~10 small distributed jobs (idf, blocking, CC rounds,
     // refinement shuffle), each of which was pure corpus-independent
     // scheduler tax on every pipeline run (the canon bench leg's
@@ -705,14 +660,17 @@ object Canonicalize {
     // real alias graph.
     // r06: ONE limit-collect decides the hybrid AND fetches the rows —
     // limit(max+1) returns the whole table iff it has <= max rows, so the
-    // old count() + collect() pair (two jobs over the forms table per
-    // canonicalMap call) folds into a single job; an oversized table
-    // ships at most max+1 rows before the distributed path takes over.
+    // old count() + collect() pair folds into one collect (one job over a
+    // single partition, two over a multi-file snapshot — see the
+    // Scaladoc); an oversized table ships at most max+1 rows before the
+    // distributed path takes over.
     // Row ORDER is irrelevant: the union-find edge set is order-free and
     // the refinement output is re-sorted (component asc, members by the
     // pinned (n_mentions, length, surface) order) below.
+    val cap = if (driverMaxVertices >= Int.MaxValue - 1) Int.MaxValue
+      else driverMaxVertices.toInt + 1
     val collected = forms.select(col("tag"), col("surface"), col("n_mentions"))
-      .limit(limitCap(driverMaxVertices)).as[(String, String, Long)].collect()
+      .limit(cap).as[(String, String, Long)].collect()
     val icu = icuCaseMappings()
     if (collected.length <= driverMaxVertices) {
       // (tag, surface, n_mentions, nk), and each form's vertex id
@@ -728,18 +686,20 @@ object Canonicalize {
         .filter(b => b.length >= 2 && b.length <= MaxBlockSize)
         .map(_.map(i => (ids(i), rows(i)._4))).toSeq
       // Pair DISCOVERY — the O(Σ m²) Levenshtein/cosine work and the only
-      // non-trivial compute on this path — fans out per block over
-      // [[parMap]]'s bounded pool; only the UNION step stays serial. The
+      // non-trivial compute on this path — fans out per block over one
+      // thread per core (CPU-bound); only the UNION step stays serial. The
       // same edge set yields the same components whatever the discovery
       // order, so parallelism cannot change the result (and the driver==
       // distributed equality specs pin it).
-      val pairs = parMap(blocks)(blockPairs(_, idf))
+      val cores = Runtime.getRuntime.availableProcessors
+      val pairs = graft.Par.orderedMap(blocks, cores)(blockPairs(_, idf))
       val label = driverComponents(ids.toSeq, pairs.iterator.flatten)
       // Refinement is worst-case O(members × leaders) per canopy — same
-      // fan-out treatment, order preserved by parMap so output order
-      // stays the sorted-component order.
-      val out = parMap(rows.indices.groupBy(i => label.get(ids(i))).toSeq
-          .sortBy(_._1)(Ordering.fromLessThan[String](utf8Compare(_, _) < 0))) {
+      // fan-out treatment, input order kept so output order stays the
+      // sorted-component order.
+      val comps = rows.indices.groupBy(i => label.get(ids(i))).toSeq
+        .sortBy(_._1)(Ordering.fromLessThan[String](utf8Compare(_, _) < 0))
+      val out = graft.Par.orderedMap(comps, cores) {
           case (comp, members) =>
             // refineCanopy is lazy (an Iterator) — force it HERE so the
             // O(m × leaders) matching actually runs inside the pool task
@@ -748,17 +708,9 @@ object Canonicalize {
         }.flatten
       return out.toDF("tag", "surface", "n_mentions", "node_id", "canonical")
     }
-    // DISTRIBUTED path: corpus-scale surface universes. More forms than
-    // driverMaxVertices are more CC vertices than that too, so CC goes
-    // straight to its iterative path.
-    val idf = charIdf(spark, forms)
-    val idfB = spark.sparkContext.broadcast(idf)
-    val edges = aliasEdges(spark, forms, idfOpt = Some(idf))
-    val withId =
-      forms.withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
-    withId.join(connectedComponents(spark, withId.select("id"), edges,
-        driverMaxVertices = 0L), "id")
-      .select(col("component"), col("tag"), col("surface"), col("n_mentions"))
+    // DISTRIBUTED path: corpus-scale surface universes.
+    val idfB = spark.sparkContext.broadcast(charIdf(spark, forms))
+    canopies(spark, forms, idfB)
       .as[(String, String, String, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, it) =>

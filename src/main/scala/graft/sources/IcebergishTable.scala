@@ -122,41 +122,24 @@ object IcebergishTable {
       .sortBy(_.getPath.getName)
     // Footer reads are metadata-only (KBs each) but LATENCY-bound against
     // a remote object store: at 10^5 output files a serial driver loop
-    // becomes the commit's critical path, so fan the reads out over a
-    // bounded thread pool (order restored by index; the pool is sized for
-    // IO latency hiding, not CPU).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(32, files.size)))
-    val footers = try {
-      files.zipWithIndex.map { case (f, pid) =>
-        pool.submit(new java.util.concurrent.Callable[(PartitionLineage, String)] {
-          def call(): (PartitionLineage, String) = {
-            val meta = ParquetFileReader.readFooter(conf, f.getPath,
-              ParquetMetadataConverter.NO_FILTER)
-            val blocks = meta.getBlocks.asScala.toSeq
-            val nRows = blocks.map(_.getRowCount).sum
-            // merge the keyCol chunk stats across row groups (type-ordered)
-            val stats = blocks.flatMap(_.getColumns.asScala
-                .find(_.getPath.toDotString == keyCol).map(_.getStatistics))
-              .filter(s => s != null && s.hasNonNullValue)
-            val merged = stats.reduceOption { (a, b) => a.mergeStatistics(b); a }
-            (PartitionLineage(pid,
-              merged.map(s => statToString(s.genericGetMin)).getOrElse(""),
-              merged.map(s => statToString(s.genericGetMax)).getOrElse(""),
-              nRows, statsExact = merged.nonEmpty || nRows == 0),
-              meta.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-          }
-        })
-      }.map { fut =>
-        // surface the real IO failure, not the pool's wrapper (same
-        // rationale as Canonicalize.parMap)
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }
-    } finally pool.shutdown()
+    // becomes the commit's critical path, so fan the reads out over up to
+    // 32 threads (sized for IO latency hiding, not CPU; input order kept).
+    val footers = graft.Par.orderedMap(files.zipWithIndex, 32) { case (f, pid) =>
+      val meta = ParquetFileReader.readFooter(conf, f.getPath,
+        ParquetMetadataConverter.NO_FILTER)
+      val blocks = meta.getBlocks.asScala.toSeq
+      val nRows = blocks.map(_.getRowCount).sum
+      // merge the keyCol chunk stats across row groups (type-ordered)
+      val stats = blocks.flatMap(_.getColumns.asScala
+          .find(_.getPath.toDotString == keyCol).map(_.getStatistics))
+        .filter(s => s != null && s.hasNonNullValue)
+      val merged = stats.reduceOption { (a, b) => a.mergeStatistics(b); a }
+      (PartitionLineage(pid,
+        merged.map(s => statToString(s.genericGetMin)).getOrElse(""),
+        merged.map(s => statToString(s.genericGetMax)).getOrElse(""),
+        nRows, statsExact = merged.nonEmpty || nRows == 0),
+        meta.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+    }
     val lineage = footers.map(_._1)
     val schema = footers.headOption.flatMap(f => Option(f._2))
       .map(DataType.fromJson).collect { case st: StructType => st }

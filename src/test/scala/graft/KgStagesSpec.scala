@@ -46,50 +46,15 @@ class KgStagesSpec extends SparkSuite {
     assert(triples.head.pred == "refers_to" && triples.head.subj == "c1#1")
   }
 
-  test("connected components: min-label, deterministic; driver path == iterative") {
+  test("connected components: min-label, deterministic") {
     import spark.implicits._
     val verts = Seq("a", "b", "c", "d", "e", "f").toDF("id")
     val edges = Seq(("a", "b"), ("b", "c"), ("d", "e")).toDF("src", "dst")
     val expected = Map("a" -> "a", "b" -> "a", "c" -> "a",
       "d" -> "d", "e" -> "d", "f" -> "f")
-    // hybrid default: small graph -> driver union-find
-    val ccDriver = Canonicalize.connectedComponents(spark, verts, edges)
+    val cc = Canonicalize.connectedComponents(spark, verts, edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // driverMaxVertices = 0 forces the distributed iterative path
-    val ccIter = Canonicalize.connectedComponents(spark, verts, edges,
-      driverMaxVertices = 0L)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(ccDriver == expected)
-    assert(ccIter == expected)
-  }
-
-  test("connected components: the driver path runs one limit-collect per input") {
-    // Spark-computed inputs (single-partition range plans, not local
-    // rows), so every evaluation of an input is exactly one job. (A
-    // multi-partition or shuffled input can cost a limit-collect a second
-    // job: Spark's incremental take, or an AQE shuffle stage.)
-    def v(c: org.apache.spark.sql.Column) = format_string("v%03d", c)
-    val verts = spark.range(0, 60, 1, 1).select(v(col("id")).as("id"))
-    val edges = spark.range(0, 59, 1, 1).where(col("id") % 10 =!= 9)
-      .select(v(col("id")).as("src"), v(col("id") + 1).as("dst"))
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val cc = try {
-      val cc = Canonicalize.connectedComponents(spark, verts, edges)
-      Thread.sleep(500) // let the listener bus drain (private in Spark 4)
-      cc
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"driver-path CC jobs: $jobs")
-    assert(jobs >= 1, "no job seen: the inputs were not Spark-computed")
-    assert(jobs <= 2, s"driver-path CC ran $jobs jobs")
-    val comps = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(comps.size == 60 && comps.values.toSet ==
-      (0 until 60 by 10).map(i => f"v$i%03d").toSet)
+    assert(cc == expected)
   }
 
   test("connected components: 60-node chain converges (shortcutting), short budget throws") {
@@ -97,18 +62,15 @@ class KgStagesSpec extends SparkSuite {
     // a chain's diameter (59) exceeds the old 20-round propagation
     // budget, which returned WRONG components silently; pointer jumping
     // converges in O(log n) rounds and non-convergence now throws.
-    // driverMaxVertices = 0: this test pins the DISTRIBUTED path.
     val n = 60
     val verts = (0 until n).map(i => f"v$i%03d").toDF("id")
     val edges = (0 until n - 1).map(i => (f"v$i%03d", f"v${i + 1}%03d"))
       .toDF("src", "dst")
-    val comps = Canonicalize.connectedComponents(spark, verts, edges,
-      driverMaxVertices = 0L)
+    val comps = Canonicalize.connectedComponents(spark, verts, edges)
       .select("component").distinct().collect().map(_.getString(0)).toSeq
     assert(comps == Seq("v000"))
     assertThrows[IllegalStateException] {
-      Canonicalize.connectedComponents(spark, verts, edges, maxIter = 2,
-        driverMaxVertices = 0L)
+      Canonicalize.connectedComponents(spark, verts, edges, maxIter = 2)
     }
   }
 
@@ -281,11 +243,13 @@ class KgStagesSpec extends SparkSuite {
     assert(Canonicalize.canonicalMap(spark, mentions).count() == 60L)
   }
 
-  test("hybrid CC: iterative == driver at 2000 vertices (mixed topology)") {
+  test("connected components: pinned labels at 2000 vertices") {
     import spark.implicits._
     // chains of 40 (diameter stress for the pointer jumping), 20-spoke
-    // stars, and isolates — ≥10^3 vertices so the distributed path is
-    // exercised at a scaled surface universe, not just gate-sized graphs
+    // stars, and isolates — ≥10^3 vertices so the iterative rounds run
+    // at a scaled surface universe, not just gate-sized graphs. The
+    // construction fixes every label: a chain's min member is its v00, a
+    // star's is its hub ("h" < "p"), and an isolate labels itself.
     val chains = (0 until 25).flatMap { c =>
       (0 until 39).map(i => (f"c$c%02d_v$i%02d", f"c$c%02d_v${i + 1}%02d"))
     }
@@ -295,19 +259,18 @@ class KgStagesSpec extends SparkSuite {
     val vertIds = (chains ++ stars).flatMap(e => Seq(e._1, e._2)).distinct ++
       (0 until 100).map(i => f"iso$i%03d")
     assert(vertIds.length >= 1500)
-    val verts = vertIds.toDF("id")
-    val edges = (chains ++ stars).toDF("src", "dst")
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (driver, td) = timed(Canonicalize.connectedComponents(spark, verts,
-      edges).collect().map(r => r.getString(0) -> r.getString(1)).toMap)
-    val (iter, ti) = timed(Canonicalize.connectedComponents(spark, verts,
-      edges, driverMaxVertices = 0L)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
-    assert(driver == iter, "iterative CC diverged from driver union-find")
-    assert(driver.values.toSet.size == 25 + 25 + 100)
-    info(f"2000-vertex CC wall: driver=$td%.2fs iterative=$ti%.2fs")
+    val expected = vertIds.map { v =>
+      v -> (if (v.startsWith("c")) v.take(3) + "_v00"
+        else if (v.startsWith("s")) v.take(3) + "_hub"
+        else v)
+    }.toMap
+    val t0 = System.nanoTime()
+    val cc = Canonicalize.connectedComponents(spark, vertIds.toDF("id"),
+        (chains ++ stars).toDF("src", "dst"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(cc == expected)
+    assert(cc.values.toSet.size == 25 + 25 + 100)
+    info(f"2000-vertex CC wall: ${(System.nanoTime() - t0) / 1e9}%.2fs")
   }
 
   test("hybrid canonicalization: forced-iterative CC == driver on a real corpus") {
@@ -386,6 +349,36 @@ class KgStagesSpec extends SparkSuite {
     // empty corpus flows through (Demo 0 path)
     val empty = Seq.empty[(String, String)].toDF("tag", "text")
     assert(Canonicalize.canonicalMap(spark, empty).collect().isEmpty)
+  }
+
+  test("driver graph path: jobs over a committed multi-file forms snapshot") {
+    // The incremental pipeline's shape: canonicalMapFromForms reads the
+    // committed surface_forms snapshot back, and a snapshot written by
+    // several tasks is several files. The forms limit-collect is then not
+    // one job: Spark's incremental take scans one partition, then the rest.
+    import graft.sources.IcebergishTable
+    val mentions = operators.Decode.mentions(spark,
+      Pipeline.decodeTurns(spark, TranscriptGen.generate(spark, 60L))).toDF()
+    val root = Files.createTempDirectory("forms_jobs").toString
+    val m = IcebergishTable.commit(spark,
+      Canonicalize.surfaceForms(mentions).repartition(4), root, "forms", "tag")
+    assert(m.partitions.size == 4, m.partitions)
+    val forms = IcebergishTable.read(spark, root, "forms")
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val cm = try {
+      val cm = Canonicalize.canonicalMapFromForms(spark, forms)
+      Thread.sleep(500) // let the listener bus drain (private in Spark 4)
+      cm
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"driver graph path jobs over 4 forms files: $jobs")
+    assert(jobs == 2, s"driver graph path ran $jobs jobs")
+    assert(cm.count() == m.rows)
   }
 
   test("alias-edge hot-block guard drops oversized blocks, keeps the rest") {
