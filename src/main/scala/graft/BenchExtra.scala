@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.synth.TranscriptGen
 
 /**
@@ -19,7 +22,8 @@ import graft.synth.TranscriptGen
  *  - mode "noop":  time each matching query with the noop sink (computes
  *    every column — guide §1.4) instead of count().
  *  - mode "jobs":  run each matching query once under a listener and
- *    print every Spark job's wall time and stage names to stderr.
+ *    print every Spark job's wall time and its SQL execution's call site
+ *    (else its stage names) to stderr.
  *
  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench.
  */
@@ -65,24 +69,30 @@ object BenchExtra {
           System.err.println(s"[plans] wrote $outDir/${name}_$suffix.txt")
         }
       case "jobs" =>
-        // per-job attribution: run each selected query once with a
-        // listener recording every Spark job's wall time + first stage
-        // name, so multi-job queries (iterative CC, checkpoint chains)
-        // show where their seconds go
-        val events = new java.util.concurrent.ConcurrentHashMap[
-          Int, (Long, String)]()
-        val done = new java.util.concurrent.ConcurrentLinkedQueue[
-          (Int, Long, String)]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val desc = js.stageInfos.map(si =>
+        // per-job attribution: every Spark job's wall time + label, so
+        // multi-job queries show where their seconds go. A SQL execution's
+        // jobs carry its first user frame (line 2 of its `details`): AQE
+        // submits them from a pool thread, so their stage names all read
+        // `... at CompletableFuture`.
+        val sites = new ConcurrentHashMap[String, String]()
+        val events = new ConcurrentHashMap[Int, (Long, String)]()
+        val done = new ConcurrentLinkedQueue[(Int, Long, String)]()
+        val listener = new SparkListener {
+          override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+            case x: SparkListenerSQLExecutionStart =>
+              sites.put(x.executionId.toString, x.details.split("\n").take(2).last)
+            case _ =>
+          }
+          override def onJobStart(js: SparkListenerJobStart): Unit = {
+            val site = Option(js.properties.getProperty("spark.sql.execution.id"))
+              .flatMap(id => Option(sites.get(id)))
+            val desc = site.fold(js.stageInfos.map(si =>
               s"${si.name.takeWhile(_ != '\n').take(60)}/" +
-                s"${si.numTasks}t").mkString(" | ")
+                s"${si.numTasks}t").mkString(" | "))(cs =>
+              s"sql@$cs/${js.stageInfos.map(_.numTasks).mkString("+")}t")
             events.put(js.jobId, (js.time, desc))
           }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          override def onJobEnd(je: SparkListenerJobEnd): Unit = {
             val s = events.remove(je.jobId)
             if (s != null) done.add((je.jobId, je.time - s._1, s._2))
           }

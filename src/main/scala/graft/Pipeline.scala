@@ -284,18 +284,18 @@ object Pipeline {
     *    rescan of old mentions. The canonical map and nodes then
     *    recompute from forms — bounded by the alias universe, not the
     *    corpus.
-    *  - Edges RE-DERIVE by one narrow zero-shuffle pass over the union
-    *    of the committed triple snapshots (three BroadcastHashJoins —
-    *    the plan ScaleSpec pins). Deliberate: a new alias can re-cluster
-    *    OLD surfaces onto different canonicals, so old edge rows are not
-    *    stable under append; the re-map pass is the cost of exactness
-    *    and is bounded by scan bandwidth (no detection, no decode, no
-    *    shuffle). A delta re-map (rewrite only edges touching changed
-    *    canonicals) is NOT implemented: its delete-set must be closed
-    *    under cross-tag surface sharing (`vocal_by` resolves min over
-    *    VOCALIST ∪ VOCALOID nodes), and an unclosed delete-set silently
-    *    drops or duplicates edges — the always-correct pass wins until a
-    *    workload shows the re-map pass dominating.
+    *  - Edges RE-DERIVE by one narrow zero-shuffle pass over the union of
+    *    the committed triple snapshots (three BroadcastHashJoins over ONE
+    *    broadcast canonical map — the plan ScaleSpec pins). Deliberate: a
+    *    new alias can re-cluster OLD surfaces onto different canonicals,
+    *    so old edge rows are not stable under append; the re-map pass is
+    *    the cost of exactness and is bounded by scan bandwidth (no
+    *    detection, no decode, no shuffle). A delta re-map (rewrite only
+    *    edges touching changed canonicals) is NOT implemented: its
+    *    delete-set must be closed under cross-tag surface sharing
+    *    (`vocal_by` resolves min over VOCALIST ∪ VOCALOID nodes), and an
+    *    unclosed delete-set silently drops or duplicates edges — the
+    *    always-correct pass wins until a workload shows re-map dominating.
     *
     * CONTRACT: every batch carries WHOLE conversations — coref windows
     * and conversation-scoped triples never span batches, which is what

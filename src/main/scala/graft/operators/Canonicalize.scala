@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Schemas._
@@ -42,8 +42,8 @@ import graft.Schemas._
  *     leader is the cluster's canonical. Classic canopy clustering:
  *     loose cheap criterion for candidate generation, tight criterion
  *     within the canopy.
- *  G4 nodes/edges: triples' subj/obj rewritten onto node ids with
- *     broadcast hash joins against the alias->node map.
+ *  G4 nodes/edges: triples' subj/obj rewritten onto node ids with three
+ *     broadcast hash joins against ONE broadcast (tag, surface)->node map.
  */
 object Canonicalize {
 
@@ -54,7 +54,7 @@ object Canonicalize {
     "on_album" -> "ALBUM", "alt_title" -> "ALT_TITLE",
     "mentions_person" -> "MISC_PERSON", "modifier" -> "MODIFIER",
     "refers_to" -> "TITLE")
-  // vocal_by spans VOCALIST|VOCALOID — resolved against both (union) below.
+  // vocal_by spans VOCALIST|VOCALOID — [[edges]] looks it up under both.
 
   /** The hot-block guard shared by every pairing path: a blocking key
     * held by more than this many forms discriminates nothing and would
@@ -732,40 +732,41 @@ object Canonicalize {
 
   /** G4b: triples rewritten onto node ids. Subjects are TITLE surfaces
     * (or doc keys for mentions_person/refers_to — kept literal). Objects
-    * resolve via (objTag(pred), obj); vocal_by tries VOCALIST then
-    * VOCALOID. Unresolved endpoints keep their literal surface.
+    * resolve via (objTag(pred), obj); vocal_by takes the smaller of its
+    * VOCALIST and VOCALOID nodes. Unresolved endpoints keep their literal
+    * surface. ONE map, keyed `tag ⧺ U+0000 ⧺ surface` (injective: no tag
+    * holds NUL) with one row per key, serves all three lookups; `concat`
+    * propagates null, so an unmapped predicate never matches. Each join
+    * keys on one computed column on both sides: a literal tag test would
+    * be pushed into the build side as a second and third broadcast.
     *
-    * Skew note (100 TB): joining triples to the maps on raw surface
+    * Skew note (100 TB): joining triples to the map on raw surface
     * equality makes a viral surface ("Senbonzakura" in 10^8 turns) a
-    * skewed shuffle key. The maps are DISTINCT-SURFACE — bounded by the
-    * alias universe, not the corpus — so all three are `broadcast()`
-    * explicitly: the triple stream never shuffles at all (three
-    * BroadcastHashJoins in its narrow stage; ScaleSpec pins the plan
+    * skewed shuffle key. The map is DISTINCT-SURFACE — bounded by the
+    * alias universe, not the corpus — so it is `broadcast()` explicitly,
+    * once: the triple stream never shuffles at all (three
+    * BroadcastHashJoins in its narrow stage, two reading the one
+    * BroadcastExchange via ReusedExchange; ScaleSpec pins the plan
     * shape), and skew is moot. If an alias universe ever outgrew driver
-    * memory, drop the hints and let AQE skew-split the sort-merge joins. */
+    * memory, drop the hint and let AQE skew-split the sort-merge joins. */
   def edges(spark: SparkSession, triples: Dataset[Triple],
       canonMap: DataFrame): Dataset[Edge] = {
     import spark.implicits._
-    val m = canonMap.select(col("tag"), col("surface"), col("node_id"))
-    val titleMap = m.where(col("tag") === "TITLE")
-      .select(col("surface").as("ts"), col("node_id").as("subj_node"))
-    val vocalMap = m.where(col("tag").isin("VOCALIST", "VOCALOID"))
-      .groupBy(col("surface").as("os"))
-      .agg(min("node_id").as("obj_node_vocal"))
-    val objMap = m.select(col("tag").as("ot"), col("surface").as("os2"),
-      col("node_id").as("obj_node_tagged"))
-    triples.toDF()
-      .join(broadcast(titleMap), col("subj") === col("ts"), "left_outer")
-      .join(broadcast(vocalMap),
-        col("pred") === "vocal_by" && col("obj") === col("os"), "left_outer")
-      .join(broadcast(objMap),
-        col("obj") === col("os2") &&
-          typedLit(predObjTag).apply(col("pred")) === col("ot"),
-        "left_outer")
+    def key(tag: Column, surface: Column) = concat(tag, lit("\u0000"), surface)
+    val m = canonMap.select(key(col("tag"), col("surface")), col("node_id"))
+    val objTag = typedLit(predObjTag + ("vocal_by" -> "VOCALIST"))
+    Seq("subj_node" -> key(lit("TITLE"), col("subj")),
+        "obj_node" -> key(objTag(col("pred")), col("obj")),
+        "vocaloid_node" ->
+          key(when(col("pred") === "vocal_by", lit("VOCALOID")), col("obj")))
+      .foldLeft(triples.toDF()) { case (df, (hit, k)) =>
+        df.join(broadcast(m.toDF(s"${hit}_k", hit)), k === col(s"${hit}_k"),
+          "left_outer")
+      }
       .select(
         coalesce(col("subj_node"), col("subj")).as("src_id"),
         col("pred"),
-        coalesce(col("obj_node_vocal"), col("obj_node_tagged"), col("obj"))
+        coalesce(least(col("obj_node"), col("vocaloid_node")), col("obj"))
           .as("dst_id"),
         col("conv_id"), col("turn_idx"), col("evidence"))
       .as[Edge]

@@ -65,7 +65,7 @@ object Triples {
     // fast path: most turns of a real corpus carry no entities at all —
     // share one immutable empty result instead of rebuilding it per turn
     if (entities.isEmpty) return emptyResult
-    val arr = structuredArrays(entities)
+    val arr = structuredArraysShared(entities)
     resultTags.zipWithIndex.map { case (t, i) => t -> arr(i) }.toMap
   }
 
@@ -76,21 +76,9 @@ object Triples {
     * position of the tag in the reference's 9-tag result, see tagIdx) —
     * the fused hot path's form: one pass, no per-turn Map/HashMap. The
     * Map form above delegates here, so there is one dedup/normalize
-    * implementation.
-    *
-    * The PUBLIC form returns a fresh array even for entity-less turns (a
-    * caller mutating the shared empty instance would corrupt every
-    * subsequent empty result engine-wide); the fused hot path uses
-    * [[structuredArraysShared]], which skips that clone — its only
-    * consumer is [[emitArrays]], which never mutates. */
-  def structuredArrays(entities: Seq[Entity]): Array[Seq[String]] = {
-    if (entities.isEmpty) return emptyArrays.clone()
-    structuredArraysShared(entities)
-  }
-
-  /** [[structuredArrays]] minus the defensive clone on the empty fast
-    * path. Internal hot-path form: callers MUST NOT mutate the result
-    * (the empty case is a shared instance). */
+    * implementation. Callers MUST NOT mutate the result (the empty case
+    * is a shared instance); its consumers ([[emitArrays]] and the Map
+    * form) never do. */
   private[graft] def structuredArraysShared(entities: Seq[Entity]): Array[Seq[String]] = {
     if (entities.isEmpty) return emptyArrays
     val grouped = new Array[scala.collection.mutable.ArrayBuffer[String]](9)

@@ -899,4 +899,61 @@ class KgStagesSpec extends SparkSuite {
     assert(resolvedSrc > e.length / 2, s"src resolution $resolvedSrc/${e.length}")
     assert(resolvedDst > e.length / 2, s"dst resolution $resolvedDst/${e.length}")
   }
+
+  test("edges: resolution rules over a hand-built canonical map") {
+    import spark.implicits._
+    val nul = "\u0000"
+    // (tag, surface, n_mentions, node_id, canonical): one row per (tag, surface)
+    val canon = Seq(
+      ("TITLE", "Melt", 9L, "n_title_melt", "Melt"),
+      ("TITLE", s"Me${nul}lt", 1L, "n_title_nul", s"Me${nul}lt"),
+      // under both vocal tags: the smaller node id wins, either way round
+      ("VOCALIST", "Miku", 3L, "n_b_miku", "Miku"),
+      ("VOCALOID", "Miku", 5L, "n_a_miku", "Miku"),
+      ("VOCALIST", "GUMI", 2L, "n_a_gumi", "GUMI"),
+      ("VOCALOID", "GUMI", 2L, "n_b_gumi", "GUMI"),
+      ("VOCALOID", "Rin", 1L, "n_vocaloid_rin", "Rin"),
+      ("VOCALIST", "Ado", 1L, "n_vocalist_ado", "Ado"),
+      ("ORIGINAL_AUTHOR", "ryo", 4L, "n_author_ryo", "ryo"),
+      ("FEATURING", "GUMI", 1L, "n_feat_gumi", "GUMI"),
+      ("ALBUM", s"Supercell${nul}", 1L, "n_album_nul", "Supercell"),
+      ("ALT_TITLE", "Melt (remix)", 1L, "n_alt_melt", "Melt (remix)"),
+      ("MISC_PERSON", "Bob", 1L, "n_person_bob", "Bob"),
+      ("MODIFIER", "Cover", 2L, "n_mod_cover", "Cover")
+    ).toDF("tag", "surface", "n_mentions", "node_id", "canonical")
+    // (subj, pred, obj) -> expected (src_id, dst_id)
+    val cases = Seq(
+      ("Melt", "vocal_by", "Miku") -> ("n_title_melt", "n_a_miku"),
+      ("Melt", "vocal_by", "GUMI") -> ("n_title_melt", "n_a_gumi"),
+      ("Melt", "vocal_by", "Rin") -> ("n_title_melt", "n_vocaloid_rin"),
+      ("Melt", "vocal_by", "Ado") -> ("n_title_melt", "n_vocalist_ado"),
+      ("Melt", "vocal_by", "ryo") -> ("n_title_melt", "ryo"),
+      ("Melt", "performed_by", "ryo") -> ("n_title_melt", "n_author_ryo"),
+      ("Melt", "featuring", "GUMI") -> ("n_title_melt", "n_feat_gumi"),
+      ("Melt", "on_album", s"Supercell${nul}") -> ("n_title_melt", "n_album_nul"),
+      ("Melt", "alt_title", "Melt (remix)") -> ("n_title_melt", "n_alt_melt"),
+      ("c1#3", "mentions_person", "Bob") -> ("c1#3", "n_person_bob"),
+      ("Melt", "modifier", "Cover") -> ("n_title_melt", "n_mod_cover"),
+      ("c1#4", "refers_to", "Melt") -> ("c1#4", "n_title_melt"),
+      // the surface exists, but only under another tag: stays literal
+      ("Melt", "performed_by", "Miku") -> ("n_title_melt", "Miku"),
+      ("Melt", "featuring", "Ado") -> ("n_title_melt", "Ado"),
+      ("c1#5", "refers_to", "Cover") -> ("c1#5", "Cover"),
+      // an unknown predicate never resolves its object
+      ("Melt", "likes", "Melt") -> ("n_title_melt", "Melt"),
+      // NUL inside a surface: exact match only, no cross-tag collision
+      (s"Me${nul}lt", "on_album", "Supercell") -> ("n_title_nul", "Supercell"),
+      (s"ALBUM${nul}Supercell", "modifier", s"Cover${nul}") ->
+        (s"ALBUM${nul}Supercell", s"Cover${nul}"),
+      ("Unknown Song", "performed_by", "nobody") -> ("Unknown Song", "nobody"))
+    val triples = cases.zipWithIndex.map { case (((s, p, o), _), i) =>
+      Triple(s, p, o, "c1", i, s"ev$i") }.toDS()
+    val got = Canonicalize.edges(spark, triples, canon).collect()
+      .map(e => e.turn_idx -> e).toMap
+    assert(got.size == cases.size)
+    cases.zipWithIndex.foreach { case (((s, p, o), (src, dst)), i) =>
+      assert(got(i) == Edge(src, p, dst, "c1", i, s"ev$i"),
+        s"($s, $p, $o) resolved to ${got(i)}")
+    }
+  }
 }

@@ -195,6 +195,20 @@ class ScaleSpec extends SparkSuite {
     }
   }
 
+  /** (BroadcastExchange, ReusedExchange) node counts in a collected
+    * query's FINAL adaptive plan — `executedPlan.toString` prints the
+    * initial plan as well, and a ReusedExchange's line names the exchange
+    * it reuses, so string counts would over-count. */
+  private def finalBroadcasts(df: org.apache.spark.sql.Dataset[_]): (Int, Int) = {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec}
+    val helper = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    (helper.collect(plan) { case b: BroadcastExchangeExec => b }.size,
+      helper.collect(plan) { case r: ReusedExchangeExec => r }.size)
+  }
+
   test("edges join broadcasts the canonical maps: triples stream never shuffles") {
     import spark.implicits._
     import graft.operators.{Canonicalize, Triples}
@@ -217,6 +231,10 @@ class ScaleSpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin") &&
       !plan.contains("CartesianProduct"),
       s"triples side must not shuffle:\n$plan")
+    // ONE broadcast of the canonical map, read by the other two lookups
+    // through ReusedExchange
+    assert(finalBroadcasts(e) == (1, 2),
+      s"expected 1 BroadcastExchange + 2 ReusedExchange:\n$plan")
   }
 
   test("incremental edge re-map over UNIONED snapshots keeps the no-shuffle plan") {
@@ -248,6 +266,8 @@ class ScaleSpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin") &&
       !plan.contains("CartesianProduct"),
       s"unioned triple snapshots must not shuffle:\n$plan")
+    assert(finalBroadcasts(e) == (1, 2),
+      s"expected 1 BroadcastExchange + 2 ReusedExchange:\n$plan")
   }
 
   test("top-K plans TakeOrderedAndProject; ranked queries carry no global window") {
