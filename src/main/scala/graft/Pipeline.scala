@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.Schemas._
 import graft.operators._
 
@@ -200,8 +200,7 @@ object Pipeline {
     * (linked read back from its snapshot, the triples branch). */
   private def narrowStages(spark: SparkSession, turns: Dataset[Turn],
       ckptRoot: String, nameOf: String => String, decodedParent: String,
-      branches: Branches): (org.apache.spark.sql.DataFrame,
-      Branch[org.apache.spark.sql.DataFrame]) = {
+      branches: Branches): (DataFrame, Branch[DataFrame]) = {
     import spark.implicits._
     import graft.sources.IcebergishTable.stage
     val decodedDf = stage(spark, ckptRoot, nameOf("decoded"), "conv_id",
@@ -235,33 +234,49 @@ object Pipeline {
     (linkedDf, triples)
   }
 
+  /** The checkpointed GRAPH tail, shared VERBATIM by [[runCheckpointed]]
+    * and [[runIncremental]]: canon_map over `forms` (any forms plan), then
+    * nodes, then `triples` (forced only here), then edges — the LAST
+    * commit, which `batchCompleted` and the completed-batch read-back
+    * take as completion. `nameOf` is as in [[narrowStages]]. Returns
+    * (triples, nodes, edges). */
+  private def graphStages(spark: SparkSession, ckptRoot: String,
+      nameOf: String => String, canonParent: String,
+      forms: DataFrame, triples: => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    import graft.sources.IcebergishTable.stage
+    val canonDf = stage(spark, ckptRoot, nameOf("canon_map"), "tag",
+      canonParent) {
+      // the driver path collects up to driverMaxVertices + 1 forms rows
+      Canonicalize.canonicalMapFromForms(spark, forms)
+    }
+    val nodesDf = stage(spark, ckptRoot, nameOf("nodes"), "node_id",
+      nameOf("canon_map")) {
+      Canonicalize.nodes(spark, canonDf).toDF()
+    }
+    val triplesDf = triples
+    val edgesDf = stage(spark, ckptRoot, nameOf("edges"), "conv_id",
+      nameOf("canon_map")) {
+      Canonicalize.edges(spark, triplesDf.as[Triple], canonDf).toDF()
+    }
+    (triplesDf, nodesDf, edgesDf)
+  }
+
   /** Full run with per-stage Icebergish checkpoints + lineage (north rule
     * resumability): a killed run re-invoked with the same `ckptRoot`
     * skips every stage whose committed snapshot exists. `triples` commits
     * concurrently with mentions → linked → canon_map → nodes and is
-    * joined before `edges`, which stays the last commit. Returns
-    * (triples, nodes, edges) DataFrames read back from the snapshots. */
+    * joined before `edges`, which stays the last commit
+    * ([[graphStages]]). Returns (triples, nodes, edges) DataFrames read
+    * back from the snapshots. */
   def runCheckpointed(spark: SparkSession, turns: Dataset[Turn],
-      ckptRoot: String): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+      ckptRoot: String): (DataFrame, DataFrame, DataFrame) =
     withBranches { branches =>
-      import spark.implicits._
-      import graft.sources.IcebergishTable.stage
       val (linkedDf, triples) =
         narrowStages(spark, turns, ckptRoot, identity, "turns", branches)
-      val canonDf = stage(spark, ckptRoot, "canon_map", "tag", "linked") {
-        // the driver path collects up to driverMaxVertices + 1 forms rows
-        // (see canonicalMapFromForms)
-        Canonicalize.canonicalMap(spark, linkedDf)
-      }
-      val nodesDf = stage(spark, ckptRoot, "nodes", "node_id", "canon_map") {
-        Canonicalize.nodes(spark, canonDf).toDF()
-      }
-      val triplesDf = triples.join()
-      val edgesDf = stage(spark, ckptRoot, "edges", "conv_id", "canon_map") {
-        Canonicalize.edges(spark, triplesDf.as[Triple], canonDf).toDF()
-      }
-      (triplesDf, nodesDf, edgesDf)
+      graphStages(spark, ckptRoot, identity, "linked",
+        Canonicalize.surfaceForms(linkedDf), triples.join())
     }
 
   /** Incremental KG maintenance: append batch `batchId` of NEW turns to a
@@ -277,13 +292,12 @@ object Pipeline {
     *    cost) run over the new batch ONLY, committed as append-only
     *    `*_b<i>` snapshots that are never rewritten.
     *  - The graph stage's input is maintained as a running
-    *    `surface_forms_b<i>` aggregate: [[Canonicalize.surfaceForms]] is
-    *    distributive over corpus partitions, so the merged table
-    *    ([[Canonicalize.mergeForms]] of the previous snapshot with the
-    *    new batch's delta) equals the full-corpus aggregate with NO
-    *    rescan of old mentions. The canonical map and nodes then
-    *    recompute from forms — bounded by the alias universe, not the
-    *    corpus.
+    *    `surface_forms_b<i>` aggregate: batch 0 commits
+    *    [[Canonicalize.surfaceForms]]; a later batch commits ONE
+    *    aggregate, [[Canonicalize.mergeForms]] of the previous snapshot
+    *    and its [[Canonicalize.mentionForms]], equal to the full-corpus
+    *    aggregate with NO rescan of old mentions. The canonical map and
+    *    nodes then recompute from forms — bounded by the alias universe.
     *  - Edges RE-DERIVE by one narrow zero-shuffle pass over the union of
     *    the committed triple snapshots (three BroadcastHashJoins over ONE
     *    broadcast canonical map — the plan ScaleSpec pins). Deliberate: a
@@ -308,8 +322,9 @@ object Pipeline {
     * Stage DAG: `convs_b` (raw turns only) commits beside the decode
     * chain and is joined before `surface_forms_b`; `triples_b` (decoded
     * only) commits beside mentions → linked → forms → canon_map → nodes
-    * and is joined before the triples read-back; `edges_b` commits last.
-    * Every branch is joined before this returns or throws.
+    * and is joined before the triples read-back; `edges_b` commits last
+    * ([[graphStages]]). Every branch is joined before this returns or
+    * throws.
     *
     * Resume: per-batch stage names mean a killed batch re-invoked with
     * the same `batchId` skips its committed stages, exactly like
@@ -321,12 +336,10 @@ object Pipeline {
     * Returns (triplesAll, nodes, edges) read back from snapshots. */
   def runIncremental(spark: SparkSession, newTurns: Dataset[Turn],
       ckptRoot: String, batchId: Int,
-      checkDisjointConvs: Boolean = false): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import spark.implicits._
+      checkDisjointConvs: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
     import graft.sources.IcebergishTable.{stage, read, isCommitted}
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val prevForms = s"surface_forms_b${batchId - 1}"
     // Ordering gate: the previous batch must have COMPLETED (not merely
     // committed its forms — forms commit several stages before edges, so
     // a forms-only check would let batch b+1 run while batch b is still
@@ -418,30 +431,16 @@ object Pipeline {
       convs.join()
       val formsDf = stage(spark, ckptRoot, s"surface_forms_b$batchId", "tag",
         s"linked_b$batchId") {
-        val delta = Canonicalize.surfaceForms(linkedDf)
-        if (batchId == 0) delta
-        else Canonicalize.mergeForms(read(spark, ckptRoot, prevForms), delta)
+        if (batchId == 0) Canonicalize.surfaceForms(linkedDf)
+        else Canonicalize.mergeForms(
+          read(spark, ckptRoot, s"surface_forms_b${batchId - 1}"),
+          Canonicalize.mentionForms(linkedDf))
       }
-      val canonDf = stage(spark, ckptRoot, s"canon_map_b$batchId", "tag",
-        s"surface_forms_b$batchId") {
-        // formsDf is the committed snapshot re-read — already
-        // materialized; the driver path collects up to driverMaxVertices
-        // + 1 of its rows (see canonicalMapFromForms)
-        Canonicalize.canonicalMapFromForms(spark, formsDf)
-      }
-      val nodesDf = stage(spark, ckptRoot, s"nodes_b$batchId", "node_id",
-        s"canon_map_b$batchId") {
-        Canonicalize.nodes(spark, canonDf).toDF()
-      }
-      triples.join()
-      val triplesAll = readTriplesUpTo(spark, ckptRoot, batchId)
-      // edges stays the batch's LAST commit: batchCompleted and the
-      // read-back replay above take a committed edges_b as completion
-      val edgesDf = stage(spark, ckptRoot, s"edges_b$batchId", "conv_id",
-        s"canon_map_b$batchId") {
-        Canonicalize.edges(spark, triplesAll.as[Triple], canonDf).toDF()
-      }
-      (triplesAll, nodesDf, edgesDf)
+      graphStages(spark, ckptRoot, n => s"${n}_b$batchId",
+        s"surface_forms_b$batchId", formsDf, {
+          triples.join()
+          readTriplesUpTo(spark, ckptRoot, batchId)
+        })
     }
   }
 
@@ -493,7 +492,7 @@ object Pipeline {
     * garbage collection, and a crash between its commit and its GC
     * changes nothing the reader sees. */
   private def readUpTo(spark: SparkSession, root: String, family: String,
-      batchId: Int): org.apache.spark.sql.DataFrame = {
+      batchId: Int): DataFrame = {
     import graft.sources.IcebergishTable.{read, isCommitted}
     val g = latestCompaction(root, batchId, s"${family}_compact_")
     // A compaction generation BEYOND batchId folds later batches in and
@@ -568,12 +567,12 @@ object Pipeline {
 
   /** The triple corpus through batch `batchId` ([[readUpTo]]). */
   def readTriplesUpTo(spark: SparkSession, root: String,
-      batchId: Int): org.apache.spark.sql.DataFrame =
+      batchId: Int): DataFrame =
     readUpTo(spark, root, "triples", batchId)
 
   /** The conv-id registry through batch `batchId` ([[readUpTo]]). */
   def readConvsUpTo(spark: SparkSession, root: String,
-      batchId: Int): org.apache.spark.sql.DataFrame =
+      batchId: Int): DataFrame =
     readUpTo(spark, root, "convs", batchId)
 
   /** Fold the triple snapshots through completed batch `upToBatch` into

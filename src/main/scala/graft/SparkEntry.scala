@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -88,6 +88,43 @@ object SparkEntry {
     })
     boundSessionCache(canonCache, s, n)
     out
+  }
+
+  /** The VALUES gates' row hash `h`: the first 8 hex digits of md5 over
+    * the U+0001-joined columns, as a long (each gate sums it into its
+    * `hashsum`, so ANY changed row flips the gate). */
+  private def rowHash(cols: Column*): Column =
+    conv(substring(md5(concat_ws("\u0001", cols: _*)), 1, 8), 16, 10)
+      .cast("long").as("h")
+
+  /** The per-predicate edge digest of q_kg_edges and its incremental
+    * twin: count, distinct endpoints and the row-hash sum. */
+  private def edgeDigest(edges: DataFrame): DataFrame =
+    edges.select(col("pred"), col("src_id"), col("dst_id"),
+        rowHash(col("src_id"), col("pred"), col("dst_id"), col("conv_id"),
+          col("turn_idx").cast("string")))
+      .groupBy("pred")
+      .agg(count(lit(1)).as("n"), countDistinct("src_id").as("n_src"),
+        countDistinct("dst_id").as("n_dst"), sum("h").as("hashsum"))
+
+  /** The nodes table as q_kg_nodes and its incremental twin compare it:
+    * scalar columns only, the alias list flattened (the driver cannot
+    * sort arrays). */
+  private def nodeRows(nodes: DataFrame): DataFrame =
+    nodes.select(col("node_id"), col("canonical"), col("type"),
+      concat_ws("|", col("aliases")).as("aliases"), col("n_mentions"))
+
+  /** The canonical map of the incremental gates: the pinned 300-conv
+    * mentions split into two batches by crc32 conv parity, and the forms
+    * that Pipeline.runIncremental commits for the second batch (batch 0's
+    * surfaceForms merged with batch 1's unit-count form rows). The lazy
+    * checkpoint materializes the mentions both halves read once. */
+  private def incrementalCanonMap(s: SparkSession): DataFrame = {
+    val mentions = Decode.mentions(s, decodedPrefix(s, 300L)).toDF()
+      .localCheckpoint(false)
+    Canonicalize.canonicalMapFromForms(s, Canonicalize.mergeForms(
+      Canonicalize.surfaceForms(mentions.where(crc32(col("conv_id")) % 2 === 0)),
+      Canonicalize.mentionForms(mentions.where(crc32(col("conv_id")) % 2 === 1))))
   }
 
   /** Pre-materialize the shared KG prefixes (bench warm-up hook) so each
@@ -683,10 +720,9 @@ object SparkEntry {
           decodedPrefix(s, 300L).unionByName(Pipeline.decodeTurns(s, fixtures)))
       }.toDF()
         .select(col("tag"), col("detector"),
-          conv(substring(md5(concat_ws("\u0001", col("conv_id"),
-            col("turn_idx").cast("string"), col("tag"), col("text"),
-            col("start").cast("string"), col("end").cast("string"))),
-            1, 8), 16, 10).cast("long").as("h"))
+          rowHash(col("conv_id"), col("turn_idx").cast("string"), col("tag"),
+            col("text"), col("start").cast("string"),
+            col("end").cast("string")))
         .groupBy("tag", "detector")
         .agg(count(lit(1)).as("n"), sum("h").as("hashsum"))),
     "q_kg_triples" -> ((s, d) =>
@@ -724,9 +760,8 @@ object SparkEntry {
       Linker.link(s, Pipeline.mentionsFromDecoded(s, decoded), dict)
         .toDF()
         .select(col("link_score"), col("entity_id"),
-          conv(substring(md5(concat_ws("\u0001", col("conv_id"),
-            col("turn_idx").cast("string"), col("tag"), col("text"),
-            col("entity_id"))), 1, 8), 16, 10).cast("long").as("h"))
+          rowHash(col("conv_id"), col("turn_idx").cast("string"), col("tag"),
+            col("text"), col("entity_id")))
         .groupBy("link_score")
         .agg(count(lit(1)).as("n"),
           countDistinct("entity_id").as("n_entities"),
@@ -745,9 +780,8 @@ object SparkEntry {
       // the recency-window semantics
       Coref.triples(s, Coref.resolve(s, decodedPrefix(s, 300L))).toDF()
         .select(col("pred"), col("subj"), col("obj"),
-          conv(substring(md5(concat_ws("\u0001", col("subj"), col("pred"),
-            col("obj"), col("conv_id"), col("turn_idx").cast("string"))),
-            1, 8), 16, 10).cast("long").as("h"))
+          rowHash(col("subj"), col("pred"), col("obj"), col("conv_id"),
+            col("turn_idx").cast("string")))
         .groupBy("pred")
         .agg(count(lit(1)).as("n"), countDistinct("subj").as("n_src"),
           countDistinct("obj").as("n_dst"), sum("h").as("hashsum"))),
@@ -758,28 +792,16 @@ object SparkEntry {
       // (blocking + tf-idf/levenshtein edges + union-find + rep pick,
       // sharing no code with Canonicalize; the mint asserts engine ==
       // oracle before any literal is embedded). Pinned corpus — same
-      // robustness rationale as q_kg_pred_counts. Scalar columns only:
-      // the alias list is flattened (the driver cannot sort arrays).
-      Canonicalize.nodes(s, canonPrefix(s, 300L)).toDF()
-        .select(col("node_id"), col("canonical"), col("type"),
-          concat_ws("|", col("aliases")).as("aliases"), col("n_mentions"))
+      // robustness rationale as q_kg_pred_counts.
+      nodeRows(Canonicalize.nodes(s, canonPrefix(s, 300L)).toDF())
     }),
     "q_kg_edges" -> ((s, d) =>
-      // G4b VALUES gate: the full 300-conv edge set is materialized, then
-      // digested per predicate — count, distinct endpoints, and a
-      // row-content hash sum (first 8 hex digits of md5 over the
-      // U+0001-joined row), so ANY changed edge row flips the gate. The
-      // expected digests come from the independent KgOracleDump
-      // canonicalization oracle, like q_kg_nodes.
-      Canonicalize.edges(s, Triples.triples(s, decodedPrefix(s, 300L)),
-        canonPrefix(s, 300L)).toDF()
-        .select(col("pred"), col("src_id"), col("dst_id"),
-          conv(substring(md5(concat_ws("\u0001", col("src_id"), col("pred"),
-            col("dst_id"), col("conv_id"), col("turn_idx").cast("string"))),
-            1, 8), 16, 10).cast("long").as("h"))
-        .groupBy("pred")
-        .agg(count(lit(1)).as("n"), countDistinct("src_id").as("n_src"),
-          countDistinct("dst_id").as("n_dst"), sum("h").as("hashsum"))),
+      // G4b VALUES gate: the full 300-conv edge set, digested per
+      // predicate ([[edgeDigest]]). The expected digests come from the
+      // independent KgOracleDump canonicalization oracle, like q_kg_nodes.
+      edgeDigest(Canonicalize.edges(s,
+        Triples.triples(s, decodedPrefix(s, 300L)),
+        canonPrefix(s, 300L)).toDF())),
     "q_kg_pred_counts" -> ((s, d) => {
       // driver-checkable KG gate: per-predicate triple counts, compared
       // against VALUES literals computed by the INDEPENDENT
@@ -817,64 +839,28 @@ object SparkEntry {
     }),
     "q_kg_incremental_edges" -> ((s, d) => {
       // Incremental edge-re-map VALUES gate, companion to
-      // q_kg_incremental_nodes: the canonical map comes from MERGED
-      // per-batch surface forms and the triple corpus from a UNION of
-      // two disjoint halves — exactly what runIncremental reads after
-      // two batches — and the per-pred digest must equal the one-shot
-      // q_kg_edges VALUES verbatim (same independently-minted oracle).
-      // lazy checkpoints (r06): the two parity branches otherwise each
-      // re-run the mention flatMap / triple emission over the shared
-      // decoded prefix — materialize the common subtree once; the
-      // two-batch ALGEBRA under test (per-half surfaceForms -> mergeForms
-      // -> canonicalMapFromForms, union of disjoint triple halves) is
-      // unchanged
-      val mentions = Decode.mentions(s, decodedPrefix(s, 300L)).toDF()
-        .localCheckpoint(false)
-      val forms = Canonicalize.mergeForms(
-        Canonicalize.surfaceForms(
-          mentions.where(crc32(col("conv_id")) % 2 === 0)),
-        Canonicalize.surfaceForms(
-          mentions.where(crc32(col("conv_id")) % 2 === 1)))
-        .localCheckpoint(false) // materialized by the single limit-collect
-        // in canonicalMapFromForms' driver path
-      val canonMap = Canonicalize.canonicalMapFromForms(s, forms)
+      // q_kg_incremental_nodes: the canonical map comes from the
+      // incremental forms algebra and the triple corpus from a UNION of
+      // two disjoint halves (lazily checkpointed once) — exactly what
+      // runIncremental reads after two batches — and the per-pred digest
+      // must equal the one-shot q_kg_edges VALUES verbatim (same
+      // independently-minted oracle).
       val t = Triples.triples(s, decodedPrefix(s, 300L)).toDF()
         .localCheckpoint(false)
       val unioned = t.where(crc32(col("conv_id")) % 2 === 0)
         .unionByName(t.where(crc32(col("conv_id")) % 2 === 1))
       import s.implicits._
-      Canonicalize.edges(s, unioned.as[graft.Schemas.Triple], canonMap)
-        .toDF()
-        .select(col("pred"), col("src_id"), col("dst_id"),
-          conv(substring(md5(concat_ws("\u0001", col("src_id"), col("pred"),
-            col("dst_id"), col("conv_id"), col("turn_idx").cast("string"))),
-            1, 8), 16, 10).cast("long").as("h"))
-        .groupBy("pred")
-        .agg(count(lit(1)).as("n"), countDistinct("src_id").as("n_src"),
-          countDistinct("dst_id").as("n_dst"), sum("h").as("hashsum"))
+      edgeDigest(Canonicalize.edges(s, unioned.as[graft.Schemas.Triple],
+        incrementalCanonMap(s)).toDF())
     }),
     "q_kg_incremental_nodes" -> ((s, d) => {
-      // Incremental-maintenance VALUES gate: the pinned 300-conv mention
-      // stream is split into two batches (crc32 conv parity — any
-      // disjoint split must work), each batch aggregates its OWN
-      // surfaceForms, and the graph stage runs over the mergeForms
-      // result — the exact algebra Pipeline.runIncremental commits
-      // between batches. The output must equal the one-shot q_kg_nodes
-      // table, so it shares that gate's independently-minted VALUES
-      // oracle VERBATIM: any non-distributivity in the forms merge or
-      // divergence in canonicalMapFromForms flips a full value-level
-      // hash gate, not a rows-only count.
-      val mentions = Decode.mentions(s, decodedPrefix(s, 300L)).toDF()
-        .localCheckpoint(false) // lazy, as in q_kg_incremental_edges
-      val b0 = mentions.where(crc32(col("conv_id")) % 2 === 0)
-      val b1 = mentions.where(crc32(col("conv_id")) % 2 === 1)
-      val forms = Canonicalize.mergeForms(
-        Canonicalize.surfaceForms(b0),
-        Canonicalize.surfaceForms(b1)).localCheckpoint(false) // lazy, as above
-      Canonicalize.nodes(s, Canonicalize.canonicalMapFromForms(s, forms))
-        .toDF()
-        .select(col("node_id"), col("canonical"), col("type"),
-          concat_ws("|", col("aliases")).as("aliases"), col("n_mentions"))
+      // Incremental-maintenance VALUES gate: nodes over
+      // [[incrementalCanonMap]] (any disjoint batch split must work) must
+      // equal the one-shot q_kg_nodes table, so it shares that gate's
+      // independently-minted VALUES oracle VERBATIM: any
+      // non-distributivity in the forms merge or divergence in
+      // canonicalMapFromForms flips a full value-level hash gate.
+      nodeRows(Canonicalize.nodes(s, incrementalCanonMap(s)).toDF())
     })
   )
 

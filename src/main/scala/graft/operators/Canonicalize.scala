@@ -488,16 +488,21 @@ object Canonicalize {
       .orderBy(col("count").desc)
 
   /** G1+G2, distributed: every form with its connected component over
-    * the [[aliasEdges]] graph — (component, tag, surface, n_mentions). The
-    * one canopy chain: [[canonicalMapFromForms]]' distributed refinement
-    * and [[hotCanopies]] both read it, with the idf broadcast once. */
-  private def canopies(spark: SparkSession, forms: DataFrame,
-      idfB: Broadcast[Map[String, Double]]): DataFrame = {
+    * the [[aliasEdges]] graph — (component, tag, surface, n_mentions) —
+    * and the one idf broadcast. The graph stage's ONE materialization
+    * point: idf, blocking and the join each read `formsPlan`, so it is
+    * checkpointed here (lazily). [[canonicalMapFromForms]]' distributed
+    * refinement and [[hotCanopies]] both read it. */
+  private def canopies(spark: SparkSession, formsPlan: DataFrame)
+      : (DataFrame, Broadcast[Map[String, Double]]) = {
+    val forms = formsPlan.localCheckpoint(false)
+    val idfB = spark.sparkContext.broadcast(charIdf(spark, forms))
     val withId =
       forms.withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
-    withId.join(connectedComponents(spark, withId.select("id"),
+    (withId.join(connectedComponents(spark, withId.select("id"),
         aliasEdges(spark, forms, idfOpt = Some(idfB))), "id")
-      .select(col("component"), col("tag"), col("surface"), col("n_mentions"))
+      .select(col("component"), col("tag"), col("surface"), col("n_mentions")),
+      idfB)
   }
 
   /** Diagnostic companion to the [[canonicalMap]] canopy-size guard: the
@@ -507,13 +512,11 @@ object Canonicalize {
     * distributed path, so run it with the SAME mentions input (and, if
     * changed, the same blocking guard) to see exactly what the guard saw. */
   def hotCanopies(spark: SparkSession, mentions: DataFrame,
-      maxCanopySize: Int = MaxCanopySize): DataFrame = {
-    val forms = surfaceForms(mentions).localCheckpoint(false)
-    canopies(spark, forms, spark.sparkContext.broadcast(charIdf(spark, forms)))
+      maxCanopySize: Int = MaxCanopySize): DataFrame =
+    canopies(spark, surfaceForms(mentions))._1
       .groupBy("component").count()
       .where(col("count") > maxCanopySize)
       .orderBy(col("count").desc)
-  }
 
   /**
    * G2: connected components by min-label propagation PLUS per-round
@@ -608,34 +611,35 @@ object Canonicalize {
   def canonicalMap(spark: SparkSession, mentions: DataFrame,
       maxCanopySize: Int = MaxCanopySize,
       driverMaxVertices: Long = DriverMaxVertices): DataFrame =
-    // lazy checkpoint (r06): still truncates lineage and caches the forms
-    // for the multi-evaluation distributed path, but the driver fast
-    // path's limit-collect now materializes it — the old eager form cost
-    // one extra full job per canonicalMap call
-    canonicalMapFromForms(spark, surfaceForms(mentions).localCheckpoint(false),
-      maxCanopySize, driverMaxVertices)
+    canonicalMapFromForms(spark, surfaceForms(mentions), maxCanopySize,
+      driverMaxVertices)
 
-  /** Merge two surface-form aggregates by summing mention counts.
-    * `surfaceForms` is DISTRIBUTIVE over corpus partitions — this merge is
-    * what makes the graph stage incrementally maintainable: an appended
-    * batch contributes `surfaceForms(newMentions)` and the merged table is
-    * exactly `surfaceForms(old ∪ new)`, with no rescan of old mentions
-    * (KgStagesSpec pins the equality). */
+  /** One (tag, surface, 1) form row per mention: the mention-level input
+    * of [[mergeForms]], which sums it like a pre-aggregated form table. */
+  def mentionForms(mentions: DataFrame): DataFrame =
+    mentions.select(col("tag"), col("text").as("surface"),
+      lit(1L).as("n_mentions"))
+
+  /** Sum `n_mentions` per (tag, surface) over two (tag, surface,
+    * n_mentions) relations, each pre-aggregated ([[surfaceForms]], a forms
+    * snapshot) or mention-level ([[mentionForms]]): either way
+    * `mergeForms(surfaceForms(old), mentionForms(new))` is exactly
+    * `surfaceForms(old ∪ new)`, in ONE aggregate. This makes the graph
+    * stage incrementally maintainable with no rescan of old mentions
+    * (KgStagesSpec pins incremental == full; ScaleSpec the one shuffle). */
   def mergeForms(oldForms: DataFrame, deltaForms: DataFrame): DataFrame =
     oldForms.unionByName(deltaForms)
       .groupBy(col("tag"), col("surface"))
       .agg(sum(col("n_mentions")).as("n_mentions"))
 
-  /** [[canonicalMap]] over an ALREADY-AGGREGATED surface-form table
-    * (tag, surface, n_mentions) — the entry point for incremental
-    * maintenance, where forms arrive pre-merged via [[mergeForms]] rather
-    * than re-aggregated from the full mention corpus. The driver fast
-    * path evaluates the forms plan once, in one limit-collect — one job
-    * on a single-partition input, two on a multi-file snapshot (Spark's
-    * incremental take scans one partition, then the rest; KgStagesSpec
-    * pins 2 over a 4-file forms snapshot); the DISTRIBUTED path evaluates it several times (idf + blocking +
-    * join) — pass a materialized or checkpointed table (a lazy
-    * `localCheckpoint(false)` suffices), as [[canonicalMap]] does.
+  /** [[canonicalMap]] over a surface-form table (tag, surface, n_mentions),
+    * passed as any plan: an aggregate, a [[mergeForms]] result or a
+    * committed snapshot. The driver path evaluates it once, in one
+    * limit-collect (one job on a single-partition input, two on a
+    * multi-file snapshot: Spark's incremental take scans one partition,
+    * then the rest; KgStagesSpec pins 2 over a 4-file forms snapshot).
+    * Above `driverMaxVertices` rows the distributed path evaluates it
+    * again and checkpoints it once, in [[canopies]].
     *
     * Driver memory: the hybrid's one limit-collect brings up to
     * `driverMaxVertices + 1` rows of (tag, surface, n_mentions) to the
@@ -709,8 +713,8 @@ object Canonicalize {
       return out.toDF("tag", "surface", "n_mentions", "node_id", "canonical")
     }
     // DISTRIBUTED path: corpus-scale surface universes.
-    val idfB = spark.sparkContext.broadcast(charIdf(spark, forms))
-    canopies(spark, forms, idfB)
+    val (canopyDf, idfB) = canopies(spark, forms)
+    canopyDf
       .as[(String, String, String, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, it) =>

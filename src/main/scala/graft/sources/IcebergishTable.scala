@@ -45,20 +45,23 @@ object IcebergishTable {
     * (`ParquetReadSupport.SPARK_METADATA_KEY`) — the value Spark's own
     * schema inference returns for the file. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-  private val ManifestReader = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** Writes and parses manifests, so any key string round-trips. */
+  private val ManifestCodec = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
+  /** Compact JSON; the top-level `rows` precedes the per-file ones. */
   private def manifestJson(m: Manifest): String = {
-    val parts = m.partitions.map(p =>
-      s"""{"pid":${p.pid},"key_min":${q(p.keyMin)},"key_max":${q(p.keyMax)},""" +
-        s""""rows":${p.rows},"stats_exact":${p.statsExact}}""")
-      .mkString("[", ",", "]")
-    s"""{"snapshot_id":${q(m.snapshotId)},"stage":${q(m.stage)},""" +
-      s""""parent_snapshot":${q(m.parentSnapshot)},"rows":${m.rows},""" +
-      s""""wall_ms":${m.wallMs},""" +
-      s""""partitions":$parts,"committed":${m.committed}""" +
-      m.schema.fold("")(st => s""","schema":${st.json}""") + "}"
+    val root = ManifestCodec.createObjectNode()
+      .put("snapshot_id", m.snapshotId).put("stage", m.stage)
+      .put("parent_snapshot", m.parentSnapshot).put("rows", m.rows)
+      .put("wall_ms", m.wallMs)
+    val parts = root.putArray("partitions")
+    m.partitions.foreach(p => parts.addObject().put("pid", p.pid)
+      .put("key_min", p.keyMin).put("key_max", p.keyMax)
+      .put("rows", p.rows).put("stats_exact", p.statsExact))
+    root.put("committed", m.committed)
+    m.schema.foreach(st => root.set[com.fasterxml.jackson.databind.JsonNode](
+      "schema", ManifestCodec.readTree(st.json)))
+    ManifestCodec.writeValueAsString(root)
   }
 
   def manifestPath(root: String, stage: String) = s"$root/$stage/manifest.json"
@@ -171,7 +174,7 @@ object IcebergishTable {
   def read(spark: SparkSession, root: String, stage: String): DataFrame = {
     val manifest = committedManifest(root, stage)
     require(manifest.isDefined, s"no committed snapshot for $stage")
-    val schema = Option(ManifestReader.readTree(manifest.get).get("schema"))
+    val schema = Option(ManifestCodec.readTree(manifest.get).get("schema"))
       .map(n => DataType.fromJson(n.toString).asInstanceOf[StructType])
     schema.fold(spark.read)(spark.read.schema).parquet(dataPath(root, stage))
   }

@@ -601,6 +601,70 @@ class KgStagesSpec extends SparkSuite {
     turns.unpersist()
   }
 
+  test("manifests round-trip control characters in lineage keys") {
+    import spark.implicits._
+    import graft.sources.IcebergishTable
+    // a tab and U+0001 in the key column end up in the manifest as a
+    // file's min and max; the manifest must stay readable JSON
+    val root = Files.createTempDirectory("manifest_ctrl").toString
+    val rows = Seq(("\tfirst", 1), ("mid", 2), ("z\u0001last", 3))
+    val m = IcebergishTable.commit(spark,
+      rows.toDF("conv_id", "n").coalesce(1), root, "ctrl", "conv_id")
+    assert(m.partitions.map(p => (p.keyMin, p.keyMax)) ==
+      Seq(("\tfirst", "z\u0001last")))
+    val json = Files.readString(java.nio.file.Paths.get(
+      IcebergishTable.manifestPath(root, "ctrl")))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("partitions").get(0).get("key_min").asText == "\tfirst")
+    assert(tree.get("partitions").get(0).get("key_max").asText == "z\u0001last")
+    assert(json.contains("\"committed\":true") && json.contains("\"schema\":{"))
+    assert(IcebergishTable.read(spark, root, "ctrl").as[(String, Int)]
+      .collect().sorted.toSeq == rows.sorted)
+    // resume reuses the committed snapshot
+    assert(IcebergishTable.stage(spark, root, "ctrl", "conv_id", "none")(
+      throw new AssertionError("a committed stage recomputed")).count() == 3)
+  }
+
+  test("graph stages leave no persisted RDD behind") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // The persistent-RDD map holds its RDDs weakly: a leaked RDD vanishes
+    // from it at the next GC, and the context cleaner then drops its
+    // blocks. So the listener holds every RDD persisted at a job start,
+    // and a leak stays visible as an id `before` lacks (RDD ids only
+    // grow; an earlier test's unheld leftovers may still vanish).
+    val sc = spark.sparkContext
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        held.addAll(sc.getPersistentRDDs.values.asJavaCollection)
+    }
+    def leaked(before: collection.Set[Int]) = {
+      Thread.sleep(500) // let the listener bus drain (private in Spark 4)
+      sc.getPersistentRDDs.keySet -- before
+    }
+    val turns = TranscriptGen.generate(spark, 12L)
+    val convs = turns.select("conv_id").distinct().as[String].collect().sorted
+    val cut = convs(convs.length / 2)
+    sc.addSparkListener(listener)
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      Pipeline.runCheckpointed(spark, turns,
+        Files.createTempDirectory("leak_full").toString)
+      assert(leaked(before).isEmpty,
+        s"runCheckpointed left persisted RDDs ${leaked(before)}")
+      val inc = Files.createTempDirectory("leak_inc").toString
+      Pipeline.runIncremental(spark, turns.filter(col("conv_id") < cut), inc, 0)
+      Pipeline.runIncremental(spark, turns.filter(col("conv_id") >= cut), inc, 1)
+      assert(leaked(before).isEmpty,
+        s"runIncremental left persisted RDDs ${leaked(before)}")
+    } finally {
+      sc.removeSparkListener(listener)
+      held.clear()
+    }
+  }
+
   test("triple-snapshot compaction: corpus identical, later batches read through it") {
     import spark.implicits._
     import graft.sources.IcebergishTable

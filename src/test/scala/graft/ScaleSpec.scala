@@ -270,6 +270,36 @@ class ScaleSpec extends SparkSuite {
       s"expected 1 BroadcastExchange + 2 ReusedExchange:\n$plan")
   }
 
+  test("batch >= 1 forms merge is one aggregate: one shuffle over snapshot + mention rows") {
+    import graft.operators.Canonicalize
+    import graft.sources.IcebergishTable
+    // runIncremental's surface_forms_b<i> plan for i >= 1: the previous
+    // committed forms snapshot plus the batch's committed linked mentions
+    // as unit-count form rows, summed by ONE aggregate. Aggregating the
+    // batch on its own first would add a second shuffle.
+    val mentions = Decode.mentions(spark,
+      Pipeline.decodeTurns(spark, TranscriptGen.generate(spark, 30L))).toDF()
+    val root = java.nio.file.Files.createTempDirectory("forms_merge").toString
+    IcebergishTable.commit(spark, Canonicalize.surfaceForms(
+      mentions.where(crc32(col("conv_id")) % 2 === 0)), root, "forms", "tag")
+    IcebergishTable.commit(spark,
+      mentions.where(crc32(col("conv_id")) % 2 === 1), root, "linked", "conv_id")
+    val prev = IcebergishTable.read(spark, root, "forms")
+    val batch = IcebergishTable.read(spark, root, "linked")
+    val merged = Canonicalize.mergeForms(prev, Canonicalize.mentionForms(batch))
+    val rows = merged.collect().map(_.toString).sorted.toSeq // final plan
+    val helper = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    val plan = merged.queryExecution.executedPlan
+    val shuffles = helper.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(shuffles.size == 1, s"expected one shuffle:\n$plan")
+    val reference = Canonicalize.mergeForms(prev,
+      Canonicalize.surfaceForms(batch)).collect().map(_.toString).sorted.toSeq
+    assert(rows.nonEmpty && rows == reference)
+  }
+
   test("top-K plans TakeOrderedAndProject; ranked queries carry no global window") {
     import graft.operators.TopK
     val rev = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
