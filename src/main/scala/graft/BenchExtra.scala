@@ -46,7 +46,9 @@ object BenchExtra {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(filter))
 
-    // same warm-up as Bench: table counts + codegen + shared KG prefixes
+    // same warm-up as Bench: table counts + codegen + shared KG prefixes.
+    // A failed warm-up is reported and the run goes on: the timed KG
+    // queries then include their decode.
     try {
       Seq("lineitem", "orders", "customer", "events", "documents",
         "embeddings").foreach { t =>
@@ -54,7 +56,9 @@ object BenchExtra {
       }
       Pipeline.extract(spark, TranscriptGen.generate(spark, 50L)).count()
       SparkEntry.warmKgPrefix(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[warm-up] FAILED: $e")
+    }
 
     mode match {
       case "plans" =>

@@ -19,61 +19,43 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Decoded-turns prefix shared by the q_kg_* queries. The five KG
-    * queries at a given corpus scale share the same generate → detect →
-    * decode prefix; without sharing, each re-ran the full extraction
-    * (BENCH_r02: q_kg_nodes spent ~10 of its 23.9s re-extracting a corpus
-    * three sibling queries had already extracted). Keyed by
-    * (session, nConvs) so bench legs / fresh sessions never cross-talk;
-    * persisted MEMORY_AND_DISK (decoded turns are compact: entities only,
-    * no token arrays). The fused-extract correctness gates
-    * (q_kg_pred_counts / q_kg_triples_sample) intentionally do NOT use
-    * this cache — they gate Pipeline.extract itself. */
-  private val decodedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Long), org.apache.spark.sql.Dataset[graft.Schemas.DecodedTurn]]()
-  /** Drop cache entries whose session has been stopped — otherwise a
-    * long-lived JVM cycling sessions (the sbt test JVM) would pin one
-    * persisted Dataset per dead session forever via this static map.
-    * (No unpersist needed there: a stopped context has already dropped
-    * its blocks.) */
-  private def evictStoppedSessions(): Unit = {
-    decodedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    canonCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-  }
-  /** Bound LIVE-session cache entries: a long-lived session querying many
-    * corpus scales would otherwise accumulate persisted prefixes with no
-    * unpersist path. The working set is 3 scales (the sf dir's, the
-    * pinned-2000 gates', the pinned-300 canon gates'); beyond
-    * `maxPerSession` the surplus entries for that session are unpersisted
-    * and dropped (any-order eviction — re-decoding a scale is cheap
-    * relative to leaking its persisted blocks forever). */
-  private def boundSessionCache[V <: org.apache.spark.sql.Dataset[_]](
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, Long), V],
-      s: SparkSession, keep: Long, maxPerSession: Int = 4): Unit = {
-    import scala.jdk.CollectionConverters._
-    val mine = cache.keySet.asScala.filter(_._1 eq s).toSeq
-    if (mine.size > maxPerSession)
-      mine.filter(_._2 != keep).take(mine.size - maxPerSession).foreach { k =>
-        Option(cache.remove(k)).foreach(_.unpersist())
-      }
-  }
-  private def decodedPrefix(s: SparkSession, n: Long)
-      : org.apache.spark.sql.Dataset[graft.Schemas.DecodedTurn] = {
-    evictStoppedSessions()
-    val out = decodedCache.computeIfAbsent((s, n), { key =>
-      Pipeline.decodeTurns(key._1, TranscriptGen.generate(key._1, key._2))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-    boundSessionCache(decodedCache, s, n)
-    out
+  /** The shared KG prefix `view` of session `s`: built by `build` and
+    * persisted MEMORY_AND_DISK on first use in the session, registered
+    * as a session temp view, and read back through it. Spark's cache
+    * manager puts the persisted relation into every plan derived from the
+    * view, and the view dies with its session, so nothing here holds a
+    * session or needs evicting. Creation is atomic per session. */
+  private def sessionPrefix(s: SparkSession, view: String)(
+      build: => DataFrame): DataFrame = s.synchronized {
+    if (!s.catalog.tableExists(view))
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .createOrReplaceTempView(view)
+    s.table(view)
   }
 
-  /** Canonical alias map shared by q_kg_nodes / q_kg_edges (same
-    * pattern and rationale as [[decodedPrefix]]). */
-  private val canonCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Long), DataFrame]()
-  private def canonPrefix(s: SparkSession, n: Long): DataFrame = {
-    val out = canonCache.computeIfAbsent((s, n), { key =>
+  /** Decoded turns of the `n`-conversation synthetic corpus, shared by
+    * the q_kg_* queries through the session view `graft_kg_decoded_<n>`
+    * ([[sessionPrefix]]). The KG queries at one corpus scale share the
+    * generate → detect → decode prefix; without sharing, each re-ran the
+    * full extraction (BENCH_r02: q_kg_nodes spent ~10 of its 23.9s
+    * re-extracting a corpus three sibling queries had already extracted).
+    * Decoded turns are compact: entities only, no token arrays. The
+    * fused-extract correctness gates (q_kg_pred_counts /
+    * q_kg_triples_sample) intentionally do NOT read it — they gate
+    * Pipeline.extract itself. */
+  private def decodedPrefix(s: SparkSession, n: Long)
+      : org.apache.spark.sql.Dataset[graft.Schemas.DecodedTurn] = {
+    import s.implicits._
+    sessionPrefix(s, s"graft_kg_decoded_$n")(
+      Pipeline.decodeTurns(s, TranscriptGen.generate(s, n)).toDF())
+      .as[graft.Schemas.DecodedTurn]
+  }
+
+  /** Canonical alias map shared by q_kg_nodes / q_kg_edges through the
+    * session view `graft_kg_canon_<n>` (same rationale as
+    * [[decodedPrefix]]). */
+  private def canonPrefix(s: SparkSession, n: Long): DataFrame =
+    sessionPrefix(s, s"graft_kg_canon_$n")(
       // canonicalization reads ONLY (tag, text) — routing through
       // Linker.link here built a 10-field LinkedMention per mention for
       // two columns (typed lambdas block Catalyst pruning; in the REAL
@@ -82,13 +64,7 @@ object SparkEntry {
       // it). The linked stage itself is value-gated by
       // q_kg_linked_digest; the (tag, text) multiset is identical either
       // way (link is 1:1), so the canon gates are unaffected.
-      Canonicalize.canonicalMap(key._1,
-        Decode.mentions(key._1, decodedPrefix(key._1, key._2)).toDF())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-    boundSessionCache(canonCache, s, n)
-    out
-  }
+      Canonicalize.canonicalMap(s, Decode.mentions(s, decodedPrefix(s, n)).toDF()))
 
   /** The VALUES gates' row hash `h`: the first 8 hex digits of md5 over
     * the U+0001-joined columns, as a long (each gate sums it into its
@@ -117,11 +93,10 @@ object SparkEntry {
   /** The canonical map of the incremental gates: the pinned 300-conv
     * mentions split into two batches by crc32 conv parity, and the forms
     * that Pipeline.runIncremental commits for the second batch (batch 0's
-    * surfaceForms merged with batch 1's unit-count form rows). The lazy
-    * checkpoint materializes the mentions both halves read once. */
+    * surfaceForms merged with batch 1's unit-count form rows). Both
+    * halves re-derive their mentions from the cached decoded prefix. */
   private def incrementalCanonMap(s: SparkSession): DataFrame = {
     val mentions = Decode.mentions(s, decodedPrefix(s, 300L)).toDF()
-      .localCheckpoint(false)
     Canonicalize.canonicalMapFromForms(s, Canonicalize.mergeForms(
       Canonicalize.surfaceForms(mentions.where(crc32(col("conv_id")) % 2 === 0)),
       Canonicalize.mentionForms(mentions.where(crc32(col("conv_id")) % 2 === 1))))
@@ -841,12 +816,11 @@ object SparkEntry {
       // Incremental edge-re-map VALUES gate, companion to
       // q_kg_incremental_nodes: the canonical map comes from the
       // incremental forms algebra and the triple corpus from a UNION of
-      // two disjoint halves (lazily checkpointed once) — exactly what
+      // two disjoint halves of the cached decoded prefix — exactly what
       // runIncremental reads after two batches — and the per-pred digest
       // must equal the one-shot q_kg_edges VALUES verbatim (same
       // independently-minted oracle).
       val t = Triples.triples(s, decodedPrefix(s, 300L)).toDF()
-        .localCheckpoint(false)
       val unioned = t.where(crc32(col("conv_id")) % 2 === 0)
         .unionByName(t.where(crc32(col("conv_id")) % 2 === 1))
       import s.implicits._

@@ -532,24 +532,20 @@ object Canonicalize {
    */
   def connectedComponents(spark: SparkSession, vertices: DataFrame,
       edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // localCheckpoint (here and per round below) truncates lineage so the
-    // iterative plan does not grow unboundedly. Caveat for a REAL
-    // multi-node cluster: localCheckpoint stores blocks on executors, so
-    // an executor loss mid-iteration fails the job (acceptable: CC is a
-    // short bounded stage and the checkpointed pipeline retries it from
-    // the previous stage snapshot); swap for reliable checkpoint() to a
-    // cluster FS if executor churn is expected.
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
-    // r06: LAZY localCheckpoints (eager = false) throughout the loop —
-    // they still truncate lineage, but materialization folds into the
-    // round's convergence-check job instead of an extra eager job per
-    // checkpoint; on the tiny forced-iterative gate graph this halves the
-    // job count (each small job is ~0.1-0.3s of pure scheduler tax).
-    val sym = e0.select(col("src").as("u"), col("dst").as("v"))
-      .union(e0.select(col("dst").as("u"), col("src").as("v")))
+    // localCheckpoint only cuts lineage: once for the symmetric edges every
+    // round joins, and once per round below, so the iterative plan does
+    // not grow unboundedly. Both are LAZY (eager = false): materialization
+    // folds into a round's convergence-check job instead of an extra job
+    // per checkpoint (each small job is ~0.1-0.3s of scheduler tax).
+    // Caveat for a REAL multi-node cluster: localCheckpoint stores blocks
+    // on executors, so an executor loss mid-iteration fails the job
+    // (acceptable: CC is a short bounded stage and the checkpointed
+    // pipeline retries it from the previous stage snapshot); swap for
+    // reliable checkpoint() to a cluster FS if executor churn is expected.
+    val sym = edges.select(col("src").as("u"), col("dst").as("v"))
+      .union(edges.select(col("dst").as("u"), col("src").as("v")))
       .localCheckpoint(false)
     var labels = vertices.select(col("id"), col("id").as("component"))
-      .localCheckpoint(false)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
