@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShims.{toColumn => toCol, toExpression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -20,9 +17,6 @@ object PyTextStatics {
     if (s == null) 0 else PyText.utf16ToCp(s.toString, i)
   def cpToUtf16(s: UTF8String, i: Int): Int =
     if (s == null) 0 else PyText.cpToUtf16(s.toString, i)
-  def fixMojibake(s: UTF8String): UTF8String =
-    if (s == null) null
-    else UTF8String.fromString(PyText.fixMojibake(s.toString))
   def normalizeAscii(s: UTF8String): UTF8String = {
     if (s == null) return null
     // dormant reference capability (src/data/preprocess.py:13-17), the
@@ -56,27 +50,11 @@ object PyTextStatics {
  * Catalyst-native scalar functions (SURVEY.md §2.11): where a plain Scala
  * UDF would box/unbox through the encoder on every row, these stay inside
  * whole-stage codegen — either as a custom `Expression` with `doGenCode`
- * ([[CatalystExprs.NormalizeAscii]]) or via `StaticInvoke` of a static JVM
- * method on UTF8String (zero-copy in, one allocation out).
+ * ([[CatalystExprs.NormalizeAscii]]) or via `StaticInvoke` of a
+ * [[PyTextStatics]] method on UTF8String (zero-copy in, one allocation
+ * out). [[graft.GraftExtensions]] registers both as SQL functions.
  */
 object CatalystExprs {
-
-  private val staticsClass = PyTextStatics.getClass
-
-  /** Python str.title as a codegen'd StaticInvoke (no UDF boxing). */
-  def pyTitleCase(c: Column): Column = toCol(
-    StaticInvoke(staticsClass, StringType, "pyTitle", Seq(toExpr(c)),
-      returnNullable = true))
-
-  /** UTF-16 code-unit index -> codepoint index (F2). */
-  def utf16ToCp(text: Column, idx: Column): Column = toCol(
-    StaticInvoke(staticsClass, IntegerType, "utf16ToCp",
-      Seq(toExpr(text), toExpr(idx)), returnNullable = false))
-
-  /** Codepoint index -> UTF-16 code-unit index (F2). */
-  def cpToUtf16(text: Column, idx: Column): Column = toCol(
-    StaticInvoke(staticsClass, IntegerType, "cpToUtf16",
-      Seq(toExpr(text), toExpr(idx)), returnNullable = false))
 
   /**
    * NFKD ASCII-fold as a proper custom `Expression` with `doGenCode` —
@@ -93,13 +71,4 @@ object CatalystExprs {
     override protected def withNewChildInternal(newChild: Expression): NormalizeAscii =
       copy(child = newChild)
   }
-
-  def normalizeAscii(c: Column): Column = toCol(NormalizeAscii(toExpr(c)))
-
-  /** Mojibake repair (see [[PyText.fixMojibake]]) as a codegen'd column
-    * function — run BEFORE normalizeAscii to mirror the reference's
-    * fix_text → NFKD → unidecode order (preprocess.py:13-17). */
-  def fixMojibake(c: Column): Column = toCol(
-    StaticInvoke(staticsClass, StringType, "fixMojibake",
-      Seq(toExpr(c)), returnNullable = true))
 }

@@ -7,7 +7,7 @@ import graft.Schemas.Token
  * behavior by golden fixtures (see TokenizerSpec / PyTextSpec).
  *
  * Why these exist: the reference's extraction core is defined in terms of
- * CPython string semantics (str.isspace / str.title / str.istitle,
+ * CPython string semantics (str.isspace / str.title,
  * codepoint indexing), which differ from the JVM defaults in edge cases
  * (NBSP, \x1c-\x1f, titlecasing after digits, astral-plane indexing).
  * Everything here is pure, allocation-light, and safe to call per-row
@@ -15,8 +15,7 @@ import graft.Schemas.Token
  *
  * Reference semantics: src/tokenizer/TokenizerCustom.py:7-28 (tokenizer),
  * src/prod.py:20-24 + src/data/database.py:67-75 (UTF-16<->codepoint),
- * src/prod.py:143 (str.title), src/model/feature_extraction.py:198-210
- * (case predicates).
+ * src/prod.py:143 (str.title).
  */
 object PyText {
 
@@ -46,16 +45,6 @@ object PyText {
   @inline private def inB(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 
-  /** The "verbal token" pattern (feature_extraction.py:66) — same classes
-    * minus ASCII digits in the second alternative. */
-  private val verbalPattern = java.util.regex.Pattern.compile(
-    "([一-龠ぁ-ゔァ-ヴーａ-ｚＡ-Ｚ々〆〤]+|[a-zA-Z]+)")
-
-  /** Channel-containment guard pattern (feature_extraction.py:36) — the
-    * word classes incl. fullwidth digits, ASCII alnum alternative. */
-  private val channelGuardPattern = java.util.regex.Pattern.compile(
-    "([一-龠ぁ-ゔァ-ヴーａ-ｚＡ-Ｚ０-９々〆〤]+|[a-zA-Z0-9]+)[.!]*")
-
   /** CPython str.isspace for a single codepoint: Unicode categories
     * Zs/Zl/Zp plus the bidirectional-WS/B/S control chars. */
   def pyIsSpaceCp(cp: Int): Boolean = cp match {
@@ -81,48 +70,6 @@ object PyText {
   private def isCased(cp: Int): Boolean =
     Character.isUpperCase(cp) || Character.isLowerCase(cp) || Character.isTitleCase(cp)
 
-  /** CPython str.isupper: >=1 cased char, no lowercase/titlecase. */
-  def pyIsUpper(s: String): Boolean = {
-    var cased = false; var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isLowerCase(cp) || Character.isTitleCase(cp)) return false
-      if (Character.isUpperCase(cp)) cased = true
-      i += Character.charCount(cp)
-    }
-    cased
-  }
-
-  /** CPython str.islower: >=1 cased char, no uppercase/titlecase. */
-  def pyIsLower(s: String): Boolean = {
-    var cased = false; var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isUpperCase(cp) || Character.isTitleCase(cp)) return false
-      if (Character.isLowerCase(cp)) cased = true
-      i += Character.charCount(cp)
-    }
-    cased
-  }
-
-  /** CPython str.istitle: upper/title chars only at the start of cased
-    * runs, lowercase only inside them; >=1 cased char. */
-  def pyIsTitle(s: String): Boolean = {
-    var cased = false; var prevCased = false; var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isUpperCase(cp) || Character.isTitleCase(cp)) {
-        if (prevCased) return false
-        cased = true; prevCased = true
-      } else if (Character.isLowerCase(cp)) {
-        if (!prevCased) return false
-        cased = true; prevCased = true
-      } else prevCased = false
-      i += Character.charCount(cp)
-    }
-    cased
-  }
-
   /** CPython str.title: titlecase the first cased char of every cased run,
     * lowercase the rest (boundary = ANY uncased char, unlike Spark initcap
     * which only splits on whitespace). Reference use: src/prod.py:143. */
@@ -142,11 +89,6 @@ object PyText {
     }
     sb.toString
   }
-
-  /** 4-way capitalization class (feature_extraction.py:198-210):
-    * 0=ALLCAPS, 1=alllower, 2=TitleCase, 3=mixed/uncased. */
-  def capClass(s: String): Int =
-    if (pyIsUpper(s)) 0 else if (pyIsLower(s)) 1 else if (pyIsTitle(s)) 2 else 3
 
   /** Codepoint index -> UTF-16 code-unit index (src/prod.py:20-24).
     * Java strings are UTF-16 natively so this is offsetByCodePoints. */
@@ -179,13 +121,6 @@ object PyText {
     }
     toks.map(t => graft.Schemas.Token(t.tok, advanceTo(t.start), advanceTo(t.end)))
   }
-
-  /** Does the token match the verbal pattern anywhere (re.search)? */
-  def isVerbal(token: String): Boolean = verbalPattern.matcher(token).find()
-
-  /** Channel-containment word guard (re.search of the guard pattern). */
-  def matchesChannelGuard(token: String): Boolean =
-    channelGuardPattern.matcher(token).find()
 
   /**
    * The reference custom tokenizer (TokenizerCustom.py:7-28), with the
@@ -284,8 +219,8 @@ object PyText {
     out.result()
   }
 
-  /** The direct regex form of [[tokenizeWithOffsets]] (the scanner's
-    * equivalence oracle; kept test-reachable, not on the hot path). */
+  /** The direct regex form of [[tokenizeWithOffsets]], off the hot path.
+    * Test reference for the table-driven scanner (PropertySpec). */
   private[graft] def tokenizeWithOffsetsRegex(text: String): Array[Token] = {
     if (text == null) return Array.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[Token]
@@ -313,82 +248,6 @@ object PyText {
 
   /** Token strings only (the Python encode() return shape). */
   def tokenize(text: String): Array[String] = tokenizeWithOffsets(text).map(_.tok)
-
-  /** Non-overlapping literal occurrence count — parity with
-    * re.findall(re.escape(t), text) (feature_extraction.py:52). */
-  def countOccurrences(needle: String, hay: String): Int = {
-    if (needle.isEmpty) return hay.length + 1 // re.findall("", s) semantics
-    var count = 0; var i = hay.indexOf(needle)
-    while (i >= 0) { count += 1; i = hay.indexOf(needle, i + needle.length) }
-    count
-  }
-
-  /**
-   * Mojibake repair — the dominant `ftfy.fix_text` case (reference:
-   * src/data/preprocess.py:14, dormant there): UTF-8 bytes that were
-   * decoded as Windows-1252/Latin-1 ("CafÃ©" → "Café", "â€™" → "’"),
-   * including the double-encoded form ("CafÃƒÂ©" → "Café" in two rounds).
-   *
-   * Method: re-encode the string as cp1252 and strictly re-decode as
-   * UTF-8; accept only if both conversions are lossless AND the result is
-   * shorter (real mojibake repair always contracts). Conservative by
-   * construction — "naïve", CJK, and plain ASCII are untouched because
-   * either the cp1252 encode fails, the strict UTF-8 decode fails, or the
-   * length does not shrink. This is a documented APPROXIMATION of ftfy:
-   * segment-wise repair of mixed-encoding strings and the rarer legacy
-   * codepages are out of scope.
-   */
-  def fixMojibake(s: String): String = {
-    if (s == null) return null
-    var cur = s
-    var rounds = 0
-    while (rounds < 2 && looksMojibake(cur)) {
-      val repaired = tryCp1252Utf8Repair(cur)
-      if (repaired == null) return cur
-      cur = repaired
-      rounds += 1
-    }
-    cur
-  }
-
-  // cp1252 renderings of UTF-8 continuation bytes 0x80-0x9F
-  private val cp1252HighPunct =
-    "€‚ƒ„…†‡ˆ‰Š" +
-      "‹ŒŽ‘’“”•–—" +
-      "˜™š›œžŸ"
-
-  /** Cheap signature gate: a cp1252-rendered UTF-8 lead byte (Â..ô)
-    * immediately followed by a cp1252-rendered continuation byte. */
-  private def looksMojibake(s: String): Boolean = {
-    var i = 0
-    while (i < s.length - 1) {
-      val c = s.charAt(i)
-      if (c >= '\u00C2' && c <= '\u00F4') { // cp1252 view of UTF-8 lead bytes
-        val n = s.charAt(i + 1)
-        if ((n >= '\u00A0' && n <= '\u00BF') || // continuation 0xA0-0xBF
-            cp1252HighPunct.indexOf(n) >= 0) // continuation 0x80-0x9F
-          return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** One lossless cp1252-encode → strict-UTF-8-decode round, or null. */
-  private def tryCp1252Utf8Repair(s: String): String = {
-    import java.nio.charset.{Charset, CodingErrorAction, CharacterCodingException}
-    try {
-      val bytes = Charset.forName("windows-1252").newEncoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-        .encode(java.nio.CharBuffer.wrap(s))
-      val out = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-        .onMalformedInput(CodingErrorAction.REPORT)
-        .onUnmappableCharacter(CodingErrorAction.REPORT)
-        .decode(bytes).toString
-      if (out.length < s.length) out else null
-    } catch { case _: CharacterCodingException => null }
-  }
 
   /** Classic Levenshtein (src/prod.py:158-175); used by per-doc dedup.
     * Spark's built-in `levenshtein` agrees — pinned by DedupSpec. */

@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Schemas._
 

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.Schemas._
 import graft.Gazetteer
 
@@ -28,10 +26,9 @@ import graft.Gazetteer
  * speaker coreference, SURVEY.md §2.2 P8). Runs BEFORE dedup, same order as
  * the reference.
  *
- * The primary implementation is row-local (tokens are a nested array — no
- * shuffle). [[decodeExploded]] is the equivalent window/gaps-and-islands
- * formulation over exploded token rows, used when tags arrive as long-format
- * rows and pinned against the row-local one by DecodeSpec.
+ * The implementation is row-local (tokens are a nested array — no
+ * shuffle). The window/gaps-and-islands form of the same span merge (A8)
+ * is the `q_segments` driver gate.
  */
 object Decode {
 
@@ -215,27 +212,5 @@ object Decode {
   def mentions(spark: SparkSession, decoded: Dataset[DecodedTurn]): Dataset[Mention] = {
     import spark.implicits._
     decoded.flatMap(gazetteerMentions)
-  }
-
-  /**
-   * Window/gaps-and-islands formulation of the same decode (SURVEY.md §2.4
-   * A8): over long-format rows (doc, pos, tag, start, end) —
-   * segment id = running count of tag changes, entities = per-segment
-   * min(start)/max(end) where tag != 'O'. One shuffle on `doc`; used for
-   * long-format inputs and as the SQL-expressible twin of the row-local
-   * decode (see SparkEntry q_segments).
-   */
-  def decodeExploded(tokens: DataFrame, docCol: String = "doc",
-      posCol: String = "pos"): DataFrame = {
-    val w = Window.partitionBy(col(docCol)).orderBy(col(posCol))
-    val changed = when(lag("tag", 1).over(w).isNull ||
-      lag("tag", 1).over(w) =!= col("tag"), lit(1)).otherwise(lit(0))
-    tokens
-      .withColumn("seg", sum(changed).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .where(col("tag") =!= "O")
-      .groupBy(col(docCol), col("seg"), col("tag"))
-      .agg(min("start").as("start"), max("end").as("end"))
-      .drop("seg")
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -140,7 +139,8 @@ object DocDedup {
     * on any real corpus, so hash-set Jaccard == string-set Jaccard). A
     * UDF, not a Column expression, on purpose: verification pairs then
     * ship 8-byte-per-shingle primitive arrays instead of string arrays,
-    * and intersection is a linear merge over the sorted halves. */
+    * and intersection is a linear merge over the sorted halves.
+    * Test reference for [[shingleHashesOf]] (OptEquivSpec). */
   def shingleHashes(shingleStrings: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     val f = udf { (sh: Seq[String]) =>
@@ -192,7 +192,7 @@ object DocDedup {
    * candidate pairs — a stopword shingle ("the cat sat") with df=10^6
    * would alone produce 10^12 pairs at corpus scale. Shingles with
    * df > maxShingleDf are dropped from CANDIDATE GENERATION only (same
-   * hot-block pattern as Canonicalize.aliasEdges) and the drop is logged;
+   * hot-block pattern as Canonicalize.aliasEdges);
    * a qualifying pair (jaccard >= 0.5 shares half its shingles) is missed
    * only if every one of its shared shingles is stopword-frequent.
    */
@@ -211,12 +211,11 @@ object DocDedup {
     // shingle index per call even when nothing was dropped, and Spark
     // jobs fired from inside plan-building code paths (explain/audit).
     // The guard is now a pure column filter (stays in codegen, single
-    // pass with the main action). Drop VISIBILITY comes from
-    // [[ngramHotShingles]] — an explicit diagnostic a caller runs when
-    // the drop set matters (a per-row logging lambda here would fire once
-    // per RECOMPUTATION, not once per drop: this frame feeds both sides
-    // of the self-join, so its counts/logs would be 2-4x inflated) — and
-    // the guard's behavior is pinned by the DocOpsSpec guard test.
+    // pass with the main action). No per-row logging lambda either: it
+    // would fire once per RECOMPUTATION, not once per drop (this frame
+    // feeds both sides of the self-join, so its counts would be 2-4x
+    // inflated). The guard's behavior is pinned by the DocOpsSpec guard
+    // test.
     val sh = documents
       .select(col("doc_id"), explode(shingles(col("text"), k)).as("sh"))
       .where(col("sh") =!= "")
@@ -228,20 +227,6 @@ object DocDedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
-
-  /** Diagnostic companion to the [[ngramCandidates]] df guard: the
-    * shingles (with document frequency) that candidate generation DROPS
-    * at the given `maxShingleDf` — run this when auditing what a corpus
-    * loses to the guard ("no silent caps": the drop set is one query
-    * away, without taxing every pipeline run with extra passes). */
-  def ngramHotShingles(documents: DataFrame, k: Int = 3,
-      maxShingleDf: Int = 1000): DataFrame =
-    documents
-      .select(col("doc_id"), explode(shingles(col("text"), k)).as("sh"))
-      .where(col("sh") =!= "")
-      .groupBy("sh").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxShingleDf)
-      .orderBy(col("df").desc)
 
   /** Join candidate (doc_a, doc_b) pairs back to their sorted
     * shingle-hash arrays and keep exact jaccard >= threshold. */
@@ -282,7 +267,8 @@ object DocDedup {
     * CollapseProject inlines it, blowing up generated code and falling
     * out of whole-stage codegen (measured: the 500-doc q_minhash_pairs
     * leg went 46.8s -> ~1s with the closure; same failure mode as
-    * Similarity.lshSignature). */
+    * Similarity.lshSignature). Test reference for [[minhashSignature]]
+    * (OptEquivSpec). */
   def minhashFromHashes(shHashes: org.apache.spark.sql.Column,
       numHashes: Int): org.apache.spark.sql.Column = {
     val as = Array.tabulate(numHashes)(i =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,15 +58,12 @@ object IvfIndex {
     df.withColumn("embedding", col("embedding").cast("array<double>"))
 
   /** Mini k-means (deterministic): init = first k by vec_id, `iters`
-    * assignment/update rounds. Returns k x dim centroids. */
-  def train(embeddings0: DataFrame, k: Int, iters: Int = 3): Array[Array[Double]] =
-    trainCasted(asDouble(embeddings0), k, iters)
-
-  /** [[train]] over an ALREADY double-cast (and ideally materialized)
-    * table — the corpus plan is evaluated once per iteration plus the
-    * init collect, so [[ivfTopK]] shares one lazily-checkpointed cast
-    * across training AND the final cell assignment (r06: the old shape
-    * re-scanned + re-cast the parquet corpus five times per query). */
+    * assignment/update rounds. Returns k x dim centroids. Runs over an
+    * ALREADY double-cast (and ideally materialized) table — the corpus
+    * plan is evaluated once per iteration plus the init collect, so
+    * [[ivfTopK]] shares one lazily-checkpointed cast across training AND
+    * the final cell assignment (r06: the old shape re-scanned + re-cast
+    * the parquet corpus five times per query). */
   private def trainCasted(embeddings: DataFrame, k: Int,
       iters: Int): Array[Array[Double]] = {
     var centroids: Array[Array[Double]] = embeddings.orderBy("vec_id")

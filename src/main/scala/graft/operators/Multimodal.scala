@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * columns with typed metadata structs. The Spark-side machinery — schema,
  * batched per-partition processing, partition sizing — is real and tested.
  *
- * Codecs (round 4): IMAGE decode/resize/feature-extract and AUDIO (WAV/
+ * Codecs (round 4): IMAGE decode/feature-extract and AUDIO (WAV/
  * AIFF/AU) decode/feature-extract are REAL, via the JDK's own
  * `javax.imageio` (png/jpeg/gif/bmp/tiff readers ship with Java 17) and
  * `javax.sound.sampled` — no external libraries. Payloads that no JDK
@@ -63,30 +63,6 @@ object Multimodal {
     new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
 
-  /** REAL image metadata via javax.imageio, HEADER-ONLY: the matched
-    * reader reports format and dimensions without decoding pixel data
-    * (the parquet-footer trick, applied to images). None if no JDK
-    * reader recognizes the payload. */
-  def imageMeta(bytes: Array[Byte]): Option[MediaMeta] = {
-    if (bytes == null || bytes.isEmpty) return None
-    val iis = memStream(bytes)
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) return None
-      val r = readers.next()
-      try {
-        r.setInput(iis)
-        Some(MediaMeta(r.getFormatName.toLowerCase(java.util.Locale.ROOT),
-          r.getWidth(0), r.getHeight(0), bytes.length.toLong))
-      } finally r.dispose()
-    } catch { case _: Exception => None }
-    finally iis.close()
-  }
-
-  /** REAL pixel decode (full raster). None if unrecognized/corrupt. */
-  def decodePixels(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
-    decodeImage(bytes).map(_._2)
-
   /** One-open decode: match a reader once and return BOTH the header
     * metadata and the raster — the per-row feature path must not pay two
     * stream/reader/header cycles per image. None if unrecognized. */
@@ -130,26 +106,6 @@ object Multimodal {
     if (n > 0) { var i = 0; while (i < buckets) { hist(i) /= n; i += 1 } }
     hist
   }
-
-  /** REAL resize: decode, scale with bilinear interpolation, re-encode
-    * as PNG. None if the payload is not a decodable image. */
-  def resizeImage(bytes: Array[Byte], width: Int, height: Int): Option[Array[Byte]] =
-    decodePixels(bytes).map { img =>
-      val out = new java.awt.image.BufferedImage(width, height,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = out.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, width, height, null)
-      } finally g.dispose()
-      val bos = new java.io.ByteArrayOutputStream()
-      // memory-backed output for the same reason as [[memStream]]
-      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-      try javax.imageio.ImageIO.write(out, "png", ios)
-      finally ios.close()
-      bos.toByteArray
-    }
 
   /** REAL audio metadata + per-window RMS-energy feature for the formats
     * the JDK decodes (WAV/AIFF/AU PCM). None if unrecognized. */
@@ -238,20 +194,6 @@ object Multimodal {
   def mediaFromDocuments(documents: DataFrame): DataFrame =
     documents.select(col("doc_id").as("media_id"),
       encode(col("text"), "UTF-8").as("payload"))
-
-  /** Frame-sampling plumbing for "video": split payload into fixed-size
-    * frames, keep every `stride`-th — the schema/batching pattern of real
-    * frame extraction (for containers the JVM cannot demux; swap in
-    * JavaCV or a Python `mapInPandas` stage for mp4/webm). For the ONE
-    * multi-frame container the JDK ships a real reader for — animated
-    * GIF — [[sampleVideoFrames]] below is the REAL demux path. */
-  def sampleFrames(media: DataFrame, frameBytes: Int = 256,
-      stride: Int = 4): DataFrame =
-    media.select(col("media_id"),
-      posexplode(split(base64(col("payload")), s"(?<=\\G.{$frameBytes})")))
-      .withColumnRenamed("pos", "frame_idx")
-      .withColumnRenamed("col", "frame_b64")
-      .where(pmod(col("frame_idx"), lit(stride)) === 0)
 
   final case class VideoFrame(media_id: Long, frame_idx: Int, width: Int,
       height: Int, histogram: Array[Double])

@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 /**
  * Similarity search over an embedding column (`array<float>`).
  *
- * Two paths, same contract:
  *  - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small) query
  *    set against the full corpus; the dot product is a row-local
  *    `aggregate(zip_with(...))` (no UDF, stays in codegen). This is the
- *    O(Q x N) baseline and the correctness oracle for the ANN path.
- *  - [[lshCosinePairs]] / [[lshTopK]]: random-hyperplane LSH — signatures
- *    are row-local; candidate generation is an equi-join on
+ *    O(Q x N) baseline and the correctness oracle for the ANN top-k
+ *    ([[IvfIndex.ivfTopK]]).
+ *  - [[lshCosinePairs]]: random-hyperplane LSH near-dup pairs —
+ *    signatures are row-local; candidate generation is an equi-join on
  *    (band, bandHash) buckets, so the pair stage scales with collision
  *    count, not N^2. Verified with exact cosine. At 1000 executors the
  *    bucket join shuffles only signatures (16 bytes/doc/band), not
@@ -54,7 +54,8 @@ object Similarity {
     * Implemented as ONE scalar function over the vector (planes captured
     * in the closure): the pure-Column alternative (numPlanes aggregates
     * over zip_with against numPlanes literal arrays) explodes generated
-    * code size and falls out of codegen — measured 10x slower. */
+    * code size and falls out of codegen — measured 10x slower.
+    * Test reference for [[lshBandHashes]] (OptEquivSpec). */
   def lshSignature(vec: Column, planes: Array[Array[Double]]): Column = {
     val f = udf { (v: Seq[Float]) =>
       if (v == null) null
@@ -188,43 +189,5 @@ object Similarity {
       .withColumn("cos", round(cosine(col("ea"), col("eb")), 6))
       .where(col("cos") >= threshold)
       .select("vec_a", "vec_b", "cos")
-  }
-
-  /** ANN top-k via LSH buckets (recall < 1; the scale path), same output
-    * shape as bruteForceTopK for recall measurement. */
-  /** Coarser default bands than [[lshCosinePairs]] on purpose: top-k
-    * candidate volume is bounded by queries x collisions (the query side
-    * broadcasts), not corpus^2, so recall is worth more than selectivity
-    * here — 4-bit bands keep recall usable even for moderate-cosine
-    * nearest neighbors; the all-pairs near-dup path is where tight bands
-    * matter. */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      numPlanes: Int = 16, bands: Int = 4, dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    require(numPlanes % bands == 0)
-    val planes = hyperplanes(dim, numPlanes, seed)
-    def banded(df: DataFrame, idName: String, eName: String) = {
-      df.select(col("vec_id").as(idName), col("embedding").as(eName),
-        posexplode(lshBandHashes(col("embedding"), planes, bands)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    }
-    val qb = banded(queries, "query_id", "qe")
-    val cb = banded(corpus, "neighbor_id", "ce")
-    // ids-only dedup (embeddings re-joined after), as in lshCosinePairs
-    val candIds = cb.drop("ce").join(broadcast(qb.drop("qe")), Seq("band", "bh"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .distinct()
-    val cands = candIds
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce")), "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qe"))), "query_id")
-      .withColumn("cos", round(cosine(col("qe"), col("ce")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
   }
 }

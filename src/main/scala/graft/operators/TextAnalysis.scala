@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,18 +14,11 @@ object TextAnalysis {
 
   /** Whitespace token count (cheap) — split on runs of whitespace.
     * Guarded for degenerate inputs: split("", ...) yields [""] (a phantom
-    * token that would count 1 and earn a nonzero quality length score),
-    * and size(null) is -1 — both must read as zero tokens. */
+    * token that would count 1), and size(null) is -1 — both must read as
+    * zero tokens. */
   def tokenCount(text: Column): Column =
     when(text.isNull || length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
-
-  /** BPE-ish subword count: words + digits + punctuation pieces, the
-    * classic GPT-2-style pre-tokenizer shape (approximation; exact BPE
-    * needs the merge table). */
-  def bpeishTokenCount(text: Column): Column =
-    size(regexp_extract_all(text,
-      lit("(?U)\\w+|[^\\w\\s]"), lit(0)))
 
   /** Stopword ratio over a fixed small english stopword set. */
   private val stopwords = Seq("the", "a", "an", "and", "or", "of", "to",
@@ -38,13 +31,6 @@ object TextAnalysis {
       .otherwise(lit(0.0))
   }
 
-  /** Punctuation character ratio. */
-  def punctRatio(text: Column): Column =
-    when(length(text) > 0,
-      (length(text) - length(regexp_replace(text, "[\\p{Punct}]", "")))
-        .cast("double") / length(text).cast("double"))
-      .otherwise(lit(0.0))
-
   /** Mean token length (chars). */
   def meanTokenLen(text: Column): Column = {
     val toks = split(trim(text), "\\s+")
@@ -52,22 +38,6 @@ object TextAnalysis {
       aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
         / size(toks).cast("double"))
       .otherwise(lit(0.0))
-  }
-
-  /**
-   * Composite quality score in [0,1] (length/punct/stopword heuristics —
-   * the classic pre-training quality filter shape): penalize too-short
-   * docs, punctuation soup, and stopword-free keyword stuffing.
-   */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(tokenCount(text).cast("double") / lit(50.0), lit(1.0))
-    val punctScore = lit(1.0) - least(punctRatio(text) * 4.0, lit(1.0))
-    val stopScore = least(stopwordRatio(text) * 5.0, lit(1.0))
-    // a token-free doc has NO quality — without the guard it would bank
-    // the full punctScore (no text, no punctuation soup) and outrank
-    // genuinely low-quality text
-    when(tokenCount(text) === 0, lit(0.0))
-      .otherwise(round((lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3), 4))
   }
 
   /**
@@ -172,35 +142,4 @@ object TextAnalysis {
     * lowercased text (the exact-dedup key; DuckDB-checkable). */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** 64-bit rolling polynomial hash (Karp-Rabin style) — a custom
-    * fingerprint that survives container changes; implemented with the
-    * `aggregate` higher-order function over characters (codegen-friendly,
-    * no UDF). The step uses LEGACY arithmetic so the hash wraps modulo 2^64
-    * like a JVM long; ANSI mode (Spark 4's default) would throw on the
-    * first overflow, i.e. on any text of four or more characters. */
-  def rollingHash(text: Column): Column = {
-    import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
-    import org.apache.spark.sql.catalyst.expressions.{Add, EvalMode, Multiply}
-    aggregate(
-      split(regexp_replace(lower(trim(text)), "\\s+", " "), ""),
-      lit(0L),
-      (acc, ch) => toColumn(Add(
-        Multiply(toExpression(acc), toExpression(lit(1000003L)), EvalMode.LEGACY),
-        toExpression(coalesce(ascii(ch).cast("long"), lit(0L))),
-        EvalMode.LEGACY)))
-  }
-
-  /** All analyses as one projection over documents. */
-  def analyze(documents: DataFrame): DataFrame =
-    documents.select(
-      col("doc_id"),
-      tokenCount(col("text")).as("n_tokens"),
-      bpeishTokenCount(col("text")).as("n_subwords"),
-      round(stopwordRatio(col("text")), 4).as("stopword_ratio"),
-      round(punctRatio(col("text")), 4).as("punct_ratio"),
-      round(meanTokenLen(col("text")), 4).as("mean_token_len"),
-      qualityScore(col("text")).as("quality"),
-      langId(col("text")).as("lang_pred"),
-      fingerprint(col("text")).as("fingerprint"))
 }

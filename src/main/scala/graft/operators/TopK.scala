@@ -17,21 +17,20 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
  */
 object TopK {
 
-  /** df ordered by `order`, cut to k rows, with a 1-based `rankCol`
-    * assigned in that order. k must be driver-bounded (top-K semantics —
-    * the k rows are collected to assign ranks without a global window). */
   /** The distributed part: orderBy+limit, planned as
     * TakeOrderedAndProject (asserted by ScaleSpec). */
   def top(df: DataFrame, k: Int, order: Seq[Column]): DataFrame =
     df.orderBy(order: _*).limit(k)
 
-  def ranked(df: DataFrame, k: Int, order: Seq[Column],
-      rankCol: String = "rank"): DataFrame = {
+  /** df ordered by `order`, cut to k rows, with a 1-based `rank` column
+    * assigned in that order. k must be driver-bounded (top-K semantics —
+    * the k rows are collected to assign ranks without a global window). */
+  def ranked(df: DataFrame, k: Int, order: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
     val top = this.top(df, k, order)
     val rows = top.collect() // TakeOrderedAndProject returns rows in order
     val schema = StructType(top.schema.fields :+
-      StructField(rankCol, IntegerType, nullable = false))
+      StructField("rank", IntegerType, nullable = false))
     val ranked = rows.toSeq.zipWithIndex.map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1))
     }

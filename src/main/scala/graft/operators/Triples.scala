@@ -112,7 +112,8 @@ object Triples {
     out
   }
 
-  /** FIXTURES.md §3 triple rule over one turn's structured result. */
+  /** FIXTURES.md §3 triple rule over one turn's structured result.
+    * Test reference for [[emitArrays]] (ScaleSpec). */
   def emit(convId: String, turnIdx: Int, result: Map[String, Seq[String]],
       evidence: String): Seq[Triple] = {
     val arr = new Array[Seq[String]](9)

@@ -22,7 +22,7 @@ import graft.functions.PyText
  *    title are NOT shifted);
  *  - F1 tokenize-with-offsets via [[tokenRows]];
  *  - D8 label alignment via [[LabelAlign.align]];
- *  - O1 split via [[Metrics.trainValSplit]].
+ *  - O1 split = Spark's own seeded `randomSplit`.
  */
 object VideoPipeline {
 

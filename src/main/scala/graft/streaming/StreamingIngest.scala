@@ -28,7 +28,16 @@ object StreamingIngest {
 
   /** streaming turns -> streaming triples (append mode). The extraction
     * runs the SAME fused hot path as batch ([[graft.Pipeline.extractTurn]])
-    * so stream==batch equivalence holds by construction. */
+    * so stream==batch equivalence holds by construction.
+    *
+    * Duplicate contract: `dropDuplicatesWithinWatermark` bounds state, at
+    * the cost that a (conv_id, turn_idx) retry arriving AFTER the
+    * watermark evicted its key is no longer dropped, and its triples reach
+    * the sink as a duplicate turn's. Consumers must tolerate rare
+    * post-watermark duplicates (or dedup at read on (conv_id, turn_idx,
+    * subj, pred, obj)); retries from healthy sources arrive well inside
+    * the watermark, so this is a documented tail risk, not steady-state
+    * behavior. */
   def tripleStream(spark: SparkSession, turns: Dataset[Turn],
       watermark: String = "10 minutes"): Dataset[Triple] = {
     import spark.implicits._
@@ -76,26 +85,6 @@ object StreamingIngest {
         col("n_mentions"))
   }
 
-  /** Sink triples as parquet with a streaming checkpoint.
-    *
-    * Duplicate contract (ADVICE r5): upstream dedup is
-    * `dropDuplicatesWithinWatermark` — it bounds state, at the cost that
-    * a (conv_id, turn_idx) retry arriving AFTER the watermark evicted its
-    * key is no longer dropped and lands in this sink as a duplicate turn's
-    * triples. Downstream consumers must tolerate rare post-watermark
-    * duplicates (or dedup at read on (conv_id, turn_idx, subj, pred,
-    * obj)); retries from healthy sources arrive well inside the
-    * watermark, so this is a tail-risk documented, not a steady-state
-    * behavior. */
-  def startParquetSink(triples: Dataset[Triple], outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    triples.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
-
   /** Maintain the FULL KG (per-batch triple snapshots + current
     * nodes/edges) under `kgRoot` from a stream of turns: `foreachBatch`
     * hands each micro-batch to [[graft.Pipeline.runIncremental]] with
@@ -113,8 +102,8 @@ object StreamingIngest {
     * triple snapshots (see runIncremental's Scaladoc for why edges are
     * not append-stable), so size micro-batches in minutes, not
     * milliseconds — this is an incremental-MAINTENANCE sink, not a
-    * low-latency one; use [[startParquetSink]] for latency-sensitive
-    * triple feeds and run maintenance on a trigger interval.
+    * low-latency one; run it on a trigger interval and feed
+    * latency-sensitive consumers from [[tripleStream]].
     *
     * CONTRACT (inherited from runIncremental): a micro-batch carries
     * WHOLE conversations — the upstream emits a conversation's turns

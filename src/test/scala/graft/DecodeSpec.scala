@@ -69,18 +69,38 @@ class DecodeSpec extends SparkSuite {
 
   test("window/gaps-and-islands decode agrees with row-local decode") {
     import spark.implicits._
-    val rows = Seq(
-      // doc, pos, tag, start, end
-      ("d1", 0, "O", 0, 3), ("d1", 1, "TITLE", 4, 8), ("d1", 2, "TITLE", 9, 12),
-      ("d1", 3, "O", 13, 15), ("d1", 4, "VOCALOID", 16, 20),
-      ("d2", 0, "ALBUM", 0, 5), ("d2", 1, "O", 6, 8), ("d2", 2, "ALBUM", 9, 14))
-      .toDF("doc", "pos", "tag", "start", "end")
-    val got = Decode.decodeExploded(rows)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3)))
-      .toSet
-    assert(got == Set(
-      ("d1", "TITLE", 4, 12), ("d1", "VOCALOID", 16, 20),
-      ("d2", "ALBUM", 0, 5), ("d2", "ALBUM", 9, 14)))
+    // one tag sequence per document, as (doc, [(tag, start, end)]);
+    // q_segments runs over it as events(user_id, event_id, event_type)
+    val seqs = Seq(
+      1L -> Seq(("O", 0, 3), ("TITLE", 4, 8), ("TITLE", 9, 12),
+        ("O", 13, 15), ("VOCALOID", 16, 20)),
+      2L -> Seq(("ALBUM", 0, 5), ("O", 6, 8), ("ALBUM", 9, 14)))
+    val dir = java.nio.file.Files.createTempDirectory("segments").toString
+    seqs.flatMap { case (doc, ws) =>
+      ws.zipWithIndex.map { case ((tag, _, _), pos) => (doc, pos.toLong, tag) }
+    }.toDF("user_id", "event_id", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    val offs = seqs.toMap
+    // window form: islands of equal event_type, "O" islands dropped,
+    // event ids mapped back to the first word's start / last word's end
+    val windowed = SparkEntry.queries("q_segments")(spark, dir)
+      .where($"event_type" =!= "O").collect().map { r =>
+        val doc = r.getAs[Long]("user_id")
+        (doc, r.getAs[String]("event_type"),
+          offs(doc)(r.getAs[Long]("min_event").toInt)._2,
+          offs(doc)(r.getAs[Long]("max_event").toInt)._3)
+      }.toSet
+    // row-local form: the span decode over the same words
+    val rowLocal = seqs.flatMap { case (doc, ws) =>
+      val text = " " * ws.map(_._3).max
+      Decode.decodeEntities(text,
+        toks(ws.map { case (_, s, e) => ("w", s, e) }: _*),
+        ws.map(_._1).toIndexedSeq).map(e => (doc, e.tag, e.start, e.end))
+    }.toSet
+    assert(windowed == rowLocal)
+    assert(windowed == Set(
+      (1L, "TITLE", 4, 12), (1L, "VOCALOID", 16, 20),
+      (2L, "ALBUM", 0, 5), (2L, "ALBUM", 9, 14)))
   }
 
   test("subword decode: multi-subtoken words, word-end extension, -100-path (prod.py:52-117)") {

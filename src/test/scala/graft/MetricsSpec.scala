@@ -1,54 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.operators.Metrics
-
+/** The SQL function surface `GraftExtensions` registers. */
 class MetricsSpec extends SparkSuite {
-
-  test("A7 masked metrics: confusion aggregation matches hand-computed values") {
-    import spark.implicits._
-    // gold/pred pairs; two -100 rows must be excluded (P6)
-    val pairs = Seq(
-      (0, 0), (0, 0), (0, 1), // class 0: tp=2 fn=1
-      (1, 1), (1, 0), // class 1: tp=1 fn=1 fp=1
-      (2, 2), // class 2: perfect
-      (-100, 0), (-100, 2)).toDF("gold", "pred")
-    val e = Metrics.evaluate(pairs, numClasses = 3)
-    assert(math.abs(e.accuracy - 4.0 / 6.0) < 1e-12)
-    // f1: c0: tp2 fp1 fn1 -> 2*2/(4+1+1)=0.6667; c1: tp1 fp1 fn1 -> 0.5; c2: 1.0
-    assert(math.abs(e.perClassF1(0) - 2.0 / 3.0) < 1e-12)
-    assert(math.abs(e.perClassF1(1) - 0.5) < 1e-12)
-    assert(math.abs(e.perClassF1(2) - 1.0) < 1e-12)
-    assert(math.abs(e.f1Macro - (2.0 / 3.0 + 0.5 + 1.0) / 3.0) < 1e-12)
-    // micro-F1 == accuracy for single-label classification
-    assert(math.abs(e.f1Micro - e.accuracy) < 1e-12)
-    // weighted by support 3,2,1
-    assert(math.abs(e.f1Weighted -
-      (2.0 / 3.0 * 3 + 0.5 * 2 + 1.0 * 1) / 6.0) < 1e-12)
-  }
-
-  test("A2 class weights: total/(k*count), zero-count -> 1.0") {
-    import spark.implicits._
-    val labels = Seq(0, 0, 0, 1, -100).toDF("label")
-    val w = Metrics.classWeights(labels, numClasses = 3)
-    // total=4 (excl -100), k=3: w0 = 4/(3*3), w1 = 4/(3*1), w2 (absent) = 1
-    assert(math.abs(w(0) - 4.0 / 9.0) < 1e-12)
-    assert(math.abs(w(1) - 4.0 / 3.0) < 1e-12)
-    assert(w(2) == 1.0)
-  }
-
-  test("O1 seeded split is deterministic and disjoint; O4 truncation caps rows") {
-    import spark.implicits._
-    val df = (1 to 1000).toDF("x")
-    val (a1, b1) = Metrics.trainValSplit(df)
-    val (a2, b2) = Metrics.trainValSplit(df)
-    assert(a1.collect().toSeq == a2.collect().toSeq)
-    assert(a1.count() + b1.count() == 1000)
-    assert(b2.intersect(a2).count() == 0)
-    val toks = Seq(Seq.range(0, 600)).toDF("tokens")
-    assert(toks.select(size(Metrics.truncateTokens(col("tokens"), 512)))
-      .head.getInt(0) == 512)
-  }
 
   test("SQL function registration: extensions surface works in spark.sql") {
     GraftExtensions.register(spark)

@@ -248,7 +248,7 @@ class OptEquivSpec extends SparkSuite {
     // fused closure returns null, so posexplode drops the row and it never
     // enters a band bucket. The old chain hashed each null slice to the
     // Murmur3 seed (42), so every null-embedding row shared all 8 buckets
-    // and could surface as a sim-0.0 candidate pair in lshTopK.
+    // and could surface as a sim-0.0 candidate pair.
     val nulls = out.where(col("embedding").isNull)
       .select(col("fast"), col("ref")).collect()
     assert(nulls.length == 1)

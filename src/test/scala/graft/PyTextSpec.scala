@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.PyText
 
 /** Golden pins of CPython string semantics (generated from CPython 3.11;
-  * see SURVEY.md §2.7 F1/F2/F6/F9 for why JVM defaults differ). */
+  * see SURVEY.md §2.7 F1/F2/F9 for why JVM defaults differ). */
 class PyTextSpec extends AnyFunSuite {
 
   test("tokenizer golden cases (TokenizerCustom.py:7-28)") {
@@ -53,17 +53,6 @@ class PyTextSpec extends AnyFunSuite {
     assert(PyText.pyTitle("") == "")
   }
 
-  test("case predicates match CPython (feature_extraction.py:198-210)") {
-    assert(PyText.pyIsUpper("ABC") && !PyText.pyIsLower("ABC") && !PyText.pyIsTitle("ABC"))
-    assert(PyText.pyIsLower("abc") && !PyText.pyIsUpper("abc"))
-    assert(PyText.pyIsTitle("Abc Def") && !PyText.pyIsLower("Abc Def"))
-    assert(!PyText.pyIsTitle("AbC") && !PyText.pyIsUpper("AbC") && !PyText.pyIsLower("AbC"))
-    assert(!PyText.pyIsTitle("") && !PyText.pyIsUpper(""))
-    assert(PyText.pyIsLower("日本語 test")) // uncased chars don't break islower
-    assert(PyText.capClass("ABC") == 0 && PyText.capClass("abc") == 1 &&
-      PyText.capClass("Abc") == 2 && PyText.capClass("AbC") == 3)
-  }
-
   test("UTF-16 <-> codepoint index conversion (src/prod.py:20-24)") {
     val s = "a🎵b" // 🎵 = 2 UTF-16 units, 1 codepoint
     assert(PyText.cpToUtf16(s, 0) == 0)
@@ -73,14 +62,6 @@ class PyTextSpec extends AnyFunSuite {
     assert(PyText.utf16ToCp(s, 4) == 3)
   }
 
-  test("countOccurrences = re.findall(re.escape(t)) semantics") {
-    assert(PyText.countOccurrences("hello", "hello world world") == 1)
-    assert(PyText.countOccurrences("world", "hello world world") == 2)
-    assert(PyText.countOccurrences("aa", "aaaa") == 2) // non-overlapping
-    assert(PyText.countOccurrences("x", "") == 0)
-    assert(PyText.countOccurrences("", "abc") == 4) // re.findall("", s)
-  }
-
   test("levenshtein matches the reference DP (src/prod.py:158-175)") {
     assert(PyText.levenshtein("kitten", "sitting") == 3)
     assert(PyText.levenshtein("", "abc") == 3)
@@ -88,18 +69,4 @@ class PyTextSpec extends AnyFunSuite {
     assert(PyText.levenshtein("Melt", "Melt!") == 1)
   }
 
-  test("mojibake repair: cp1252-as-UTF-8, double-encoding, conservative no-ops") {
-    import graft.functions.PyText.fixMojibake
-    assert(fixMojibake("Caf\u00C3\u00A9") == "Caf\u00E9") // CafÃ© -> Café
-    assert(fixMojibake("don\u00E2\u20AC\u2122t") == "don\u2019t") // â€™ -> ’
-    // double-encoded: CafÃƒÂ© -> CafÃ© -> Café (two rounds)
-    assert(fixMojibake("Caf\u00C3\u0192\u00C2\u00A9") == "Caf\u00E9")
-    // conservative: legit accents / CJK / ASCII / unmappable stay put
-    assert(fixMojibake("na\u00EFve caf\u00E9") == "na\u00EFve caf\u00E9")
-    assert(fixMojibake("\u65E5\u672C\u8A9E") == "\u65E5\u672C\u8A9E")
-    assert(fixMojibake("plain ascii!") == "plain ascii!")
-    assert(fixMojibake("Tavaszi Sz\u00E9l") == "Tavaszi Sz\u00E9l")
-    assert(fixMojibake(null) == null)
-    assert(fixMojibake("") == "")
-  }
 }

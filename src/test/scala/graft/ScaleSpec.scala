@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Coref, Decode, Detector, SkewSalting, Triples}
 import graft.functions.PyText
 import graft.synth.TranscriptGen
-import graft.functions.CatalystExprs
 
 /** Scale-machinery specs: skew salting equivalence, plan-shape audits
   * (shuffle budget, pushdown), Catalyst expression parity, streaming. */
@@ -173,28 +172,6 @@ class ScaleSpec extends SparkSuite {
     assert(plan.contains("BroadcastHashJoin"), s"dims must broadcast:\n$plan")
   }
 
-  test("bucketed co-located join plans with NO shuffle exchange") {
-    import spark.implicits._
-    import graft.operators.Bucketing
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    try {
-      val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-      val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-      Bucketing.writeBucketed(a, "bkt_a", "k", 8)
-      Bucketing.writeBucketed(b, "bkt_b", "k", 8)
-      val j = Bucketing.colocatedJoin(spark, "bkt_a", "bkt_b", "k")
-      j.collect()
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS bkt_a")
-      spark.sql("DROP TABLE IF EXISTS bkt_b")
-    }
-  }
-
   /** (BroadcastExchange, ReusedExchange) node counts in a collected
     * query's FINAL adaptive plan — `executedPlan.toString` prints the
     * initial plan as well, and a ReusedExchange's line names the exchange
@@ -338,28 +315,20 @@ class ScaleSpec extends SparkSuite {
 
   test("Catalyst StaticInvoke/doGenCode expressions match the Scala semantics") {
     import spark.implicits._
-    val df = Seq("o'neill's SONG", "miku's", "日本語 test", "Tavaszi Szél")
-      .toDF("s")
-    val got = df.select(
-      CatalystExprs.pyTitleCase(col("s")).as("t"),
-      CatalystExprs.normalizeAscii(col("s")).as("n"),
-      CatalystExprs.cpToUtf16(col("s"), lit(2)).as("u16"),
-      CatalystExprs.utf16ToCp(col("s"), lit(2)).as("cp"))
-      .collect()
     val exp = Seq("o'neill's SONG", "miku's", "日本語 test", "Tavaszi Szél")
+    // through the SQL surface GraftExtensions registers: py_title,
+    // cp_to_utf16 and utf16_to_cp are StaticInvokes, normalize_ascii the
+    // doGenCode Expression
+    GraftExtensions.register(spark)
+    val got = exp.toDF("s").selectExpr("py_title(s)", "cp_to_utf16(s, 2)",
+      "utf16_to_cp(s, 2)", "normalize_ascii(s)").collect()
     got.zip(exp).foreach { case (r, s) =>
       assert(r.getString(0) == graft.functions.PyText.pyTitle(s))
-      assert(r.getInt(2) == graft.functions.PyText.cpToUtf16(s, 2))
-      assert(r.getInt(3) == graft.functions.PyText.utf16ToCp(s, 2))
+      assert(r.getInt(1) == graft.functions.PyText.cpToUtf16(s, 2))
+      assert(r.getInt(2) == graft.functions.PyText.utf16ToCp(s, 2))
     }
     // NFKD fold strips the accent
-    val n = df.where(col("s") === "Tavaszi Szél")
-      .select(CatalystExprs.normalizeAscii(col("s"))).head.getString(0)
-    assert(n == "Tavaszi Szel")
-    // mojibake repair as a column function (fix_text → NFKD order)
-    val m = Seq("CafÃ©").toDF("s")
-      .select(CatalystExprs.fixMojibake(col("s"))).head.getString(0)
-    assert(m == "Café")
+    assert(got.last.getString(3) == "Tavaszi Szel")
   }
 
   test("normalizeAscii transliterates Greek/Cyrillic/Kana (unidecode analog)") {
@@ -386,8 +355,9 @@ class ScaleSpec extends SparkSuite {
       ("初音ミク", "初音miku"), // Han passes through (documented divergence)
       ("Tavaszi Szél", "Tavaszi Szel"), // Latin accents still fold
       ("ｆｕｌｌｗｉｄｔｈ１２３", "fullwidth123")) // NFKD compatibility
+    GraftExtensions.register(spark)
     val got = cases.map(_._1).toDF("s")
-      .select(CatalystExprs.normalizeAscii(col("s"))).collect()
+      .selectExpr("normalize_ascii(s)").collect()
       .map(_.getString(0)).toSeq
     assert(got == cases.map(_._2),
       got.zip(cases).filter(p => p._1 != p._2._2).mkString("; "))

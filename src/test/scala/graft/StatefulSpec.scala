@@ -29,9 +29,16 @@ class StatefulSpec extends SparkSuite {
 
   test("IVF training is deterministic") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val a = IvfIndex.train(emb, 4, iters = 2).map(_.toSeq).toSeq
-    val b = IvfIndex.train(emb, 4, iters = 2).map(_.toSeq).toSeq
-    assert(a == b)
+    val queries = emb.where(col("vec_id") < 10)
+    // training is the only step whose output could drift between runs;
+    // identical rankings (and cosines) mean identical centroids
+    def run() = IvfIndex.ivfTopK(queries, emb, 3, nCentroids = 4, nProbe = 1,
+      iters = 2).collect().map(r => (r.getAs[Long]("query_id"),
+        r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"),
+        r.getAs[Double]("cos"))).sortBy(t => (t._1, t._3)).toSeq
+    val a = run()
+    assert(a.nonEmpty)
+    assert(a == run())
   }
 
   test("watermarked windowed mention counts aggregate by event-time window") {

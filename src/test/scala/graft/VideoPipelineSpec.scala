@@ -1,12 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOfJoin, VideoPipeline, Vocab, Metrics}
-import graft.functions.TextFeatures
-import graft.sources.Tables
+import graft.operators.{AsOfJoin, VideoPipeline}
 
-/** Reference-shaped offline pipeline stages (SURVEY.md §3.2) + vocab +
-  * argmax + sources coverage. */
+/** Reference-shaped offline pipeline stages (SURVEY.md §3.2). */
 class VideoPipelineSpec extends SparkSuite {
 
   private lazy val videos = {
@@ -95,50 +92,6 @@ class VideoPipelineSpec extends SparkSuite {
     assert(got == Seq(-100, title, -100, 0, vocaloid, -100, -100))
   }
 
-  test("A1/J5: vocab build deterministic ids; encode with OOV=1") {
-    import spark.implicits._
-    val docs = Seq(Seq("b", "a", "b", "c"), Seq("b", "a", "zzz"))
-      .toDF("tokens")
-    val v = Vocab.build(docs, "tokens", size = 2)
-    val ids = v.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(ids == Map("b" -> 2, "a" -> 3)) // count desc, word asc; ids from 2
-    val enc = Vocab.encode(spark, docs, "tokens", v)
-      .select("ids").as[Seq[Int]].collect()
-    assert(enc(0) == Seq(2, 3, 2, 1)) // c -> OOV 1
-    assert(enc(1) == Seq(2, 3, 1))
-  }
-
-  test("F14 argmax: first max wins (np.argmax semantics)") {
-    import spark.implicits._
-    val df = Seq(Seq(0.1, 0.9, 0.9, 0.2)).toDF("scores")
-    assert(df.select(TextFeatures.argmaxCol(col("scores"))).head.getInt(0) == 1)
-  }
-
-  test("O2 length-sorted shuffle is deterministic given the seed") {
-    import spark.implicits._
-    val df = Seq(Seq(1, 2, 3), Seq(1), Seq(1, 2)).toDF("xs")
-    val a = Metrics.lengthSortedShuffle(df, "xs").collect().toSeq
-    val b = Metrics.lengthSortedShuffle(df, "xs").collect().toSeq
-    assert(a == b)
-    assert(a.map(_.getSeq[Int](0).size) == Seq(1, 2, 3))
-    // ...and under ANY partitioning: rand(seed) would seed per partition
-    // and reorder equal-length ties when parallelism changes — the
-    // content-hash tie-break must not
-    val wide = (1 to 40).map(i => Seq.fill(3)(i)).toDF("xs")
-    val p1 = Metrics.lengthSortedShuffle(wide.coalesce(1), "xs")
-      .collect().toSeq
-    val p8 = Metrics.lengthSortedShuffle(wide.repartition(8), "xs")
-      .collect().toSeq
-    assert(p1 == p8, "shuffle order changed with partitioning")
-    // map-typed columns stay OUT of the tie-break hash (Spark's hash
-    // exprs reject MapType) — the operator must accept any schema, as
-    // rand(seed) did
-    val withMap = Seq((Seq(1, 2), Map("a" -> 1)), (Seq(3), Map("b" -> 2)))
-      .toDF("xs", "feats")
-    val m = Metrics.lengthSortedShuffle(withMap, "xs").collect().toSeq
-    assert(m.map(_.getSeq[Int](0).size) == Seq(1, 2))
-  }
-
   test("as-of join: null right payload is a MATCH, not a carry of older rows") {
     import spark.implicits._
     val left = Seq(("k", 6L, "l1"), ("k", 0L, "l0")).toDF("key", "t", "lv")
@@ -209,19 +162,4 @@ class VideoPipelineSpec extends SparkSuite {
     assert(!got.exists(_._1 == "v3")) // no entities in chatter
   }
 
-  test("S2/S3: JSON round-trip with explicit schema; parquet drift check") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tbl").toString
-    val df = Seq(("a", 1), ("b", 2)).toDF("k", "v")
-    Tables.writeJson(df, s"$dir/j")
-    val back = Tables.readJson(spark, s"$dir/j", df.schema)
-    assert(back.orderBy("k").collect().toSeq == df.orderBy("k").collect().toSeq)
-    df.write.parquet(s"$dir/p")
-    assert(Tables.readParquet(spark, s"$dir/p", Some(df.schema)).count() == 2)
-    intercept[IllegalArgumentException] {
-      Tables.readParquet(spark, s"$dir/p",
-        Some(new org.apache.spark.sql.types.StructType()
-          .add("wrong", "string")))
-    }
-  }
 }
