@@ -21,7 +21,7 @@ object Par {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try chunks.map(chunk =>
         pool.submit(new java.util.concurrent.Callable[Seq[B]] {
-          def call(): Seq[B] = chunk.map(f)
+          override def call(): Seq[B] = chunk.map(f)
         })).flatMap { fut =>
         try fut.get()
         catch {

@@ -18,18 +18,20 @@ import graft.Schemas._
  *    a `mapPartitions` (model read once per partition) — a NARROW
  *    transformation, so the detect→decode→dedup→triple core needs NO
  *    shuffle;
- *  - matching is case-insensitive (text lowercased with Locale.ROOT) and
+ *  - matching is case-insensitive (text and surfaces lowercased per code
+ *    point, so offsets in the lowered text are offsets in the turn) and
  *    token-aligned: a hit must start on a token start and end on a token
  *    end (or the token's word-core end, before its `[.!]*` suffix), which
  *    reproduces "the model tags whole words";
- *  - overlaps resolve leftmost-longest, then gazetteer priority, then
- *    pattern id — fully deterministic under any partitioning.
+ *  - overlaps resolve leftmost-longest: patterns are distinct lowercased
+ *    surfaces, so a (start, length) pair names exactly one pattern and the
+ *    order needs no tie-break — fully deterministic under any partitioning.
  */
 object Detector {
 
-  /** Detector state: automaton + per-pattern tag/priority. */
-  final case class Model(ac: AhoCorasick, tags: Array[String],
-      priority: Array[Int]) extends Serializable
+  /** Detector state: the automaton over the distinct lowercased surfaces
+    * and each pattern's tag, chosen at build time by gazetteer priority. */
+  final case class Model(ac: AhoCorasick, tags: Array[String]) extends Serializable
 
   /** The model over the compiled-in gazetteer, built once per JVM — on
     * the driver and on every executor alike. Task closures read it here;
@@ -43,12 +45,25 @@ object Detector {
     val byLower = scala.collection.mutable.LinkedHashMap
       .empty[String, Gazetteer.Entry]
     entries.sortBy(_.priority).foreach { e =>
-      val k = e.surface.toLowerCase(java.util.Locale.ROOT)
+      val k = lower(e.surface)
       if (!byLower.contains(k)) byLower(k) = e
     }
-    val pats = byLower.keys.toArray
-    Model(AhoCorasick.build(pats), byLower.values.map(_.tag).toArray,
-      byLower.values.map(_.priority).toArray)
+    Model(AhoCorasick.build(byLower.keys.toArray),
+      byLower.values.map(_.tag).toArray)
+  }
+
+  /** Lowercase per code point (`Character.toLowerCase(int)`). Unlike
+    * `String.toLowerCase`, it never changes a code point's char count
+    * (U+0130 'İ' becomes one char, not two), so an offset into the result
+    * is the same offset into `s`. */
+  private[graft] def lower(s: String): String = {
+    val out = new Array[Char](s.length)
+    var i = 0
+    while (i < s.length) {
+      val cp = Character.toLowerCase(s.codePointAt(i))
+      i += Character.toChars(cp, out, i)
+    }
+    new String(out)
   }
 
   /** Tag one turn's tokens. Returns the per-token tag array ("O" default).
@@ -88,7 +103,6 @@ object Detector {
     val nToks = starts.length
     val tags = Array.fill(nToks)("O")
     if (nToks == 0) return tags
-    val lower = text.toLowerCase(java.util.Locale.ROOT)
     // boundary arrays for token alignment (token starts/ends are sorted)
     val coreEnds = new Array[Int](nToks) // ends minus [.!]* suffix
     var i = 0
@@ -99,89 +113,43 @@ object Detector {
       coreEnds(i) = e
       i += 1
     }
-    @inline def isEnd(e: Int): Boolean = {
-      val j = java.util.Arrays.binarySearch(ends, e)
-      if (j >= 0) true
-      else {
-        // coreEnds is also sorted (token order); search it too
-        java.util.Arrays.binarySearch(coreEnds, e) >= 0
-      }
-    }
-    // collect aligned candidates packed as sort keys:
-    // start(21b) | invLen(15b) | prio(7b) | pid(20b) — ascending sort =
-    // (start asc, length desc, priority asc, pid asc), no tuple boxing
-    val raw = model.ac.findAllPacked(lower)
-    if (lower.length >= (1 << 21)) {
-      // RARE path: `start` only has 21 bits in the packed sort key, so a
-      // match starting past char 2^21-1 would overflow into the sign bit
-      // and corrupt the leftmost-longest order (earlier matches silently
-      // skipped). Turns this long are pathological tool dumps — sort the
-      // few candidates boxed instead; same alignment, same order, same
-      // sweep (packed==boxed equality pinned by AutomatonScaleSpec).
-      val cs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
-      var rr = 0
-      while (rr < raw.length) {
-        val pid = (raw(rr) >>> 32).toInt
-        val end = (raw(rr) & 0xffffffffL).toInt
-        val start = end - model.ac.patterns(pid).length
-        if (java.util.Arrays.binarySearch(starts, start) >= 0 && isEnd(end))
-          // clamp length/priority EXACTLY like the packed key below —
-          // out-of-range values (a >32767-char pattern, a priority
-          // outside [0,127]) must tie-break identically on both paths
-          cs += ((start, -math.min(end - start, (1 << 15) - 1),
-            math.min(math.max(model.priority(pid), 0), (1 << 7) - 1), pid))
-        rr += 1
-      }
-      var occupiedUntil = -1
-      cs.sortBy(identity).foreach { case (s, _, _, pid) =>
-        val e = s + model.ac.patterns(pid).length
-        if (s >= occupiedUntil) {
-          occupiedUntil = e
-          val tag = model.tags(pid)
-          var k = java.util.Arrays.binarySearch(starts, s)
-          while (k < nToks && ends(k) <= e) { tags(k) = tag; k += 1 }
-          if (k < nToks && starts(k) < e) tags(k) = tag
-        }
-      }
-      return tags
-    }
-    val cands = new Array[Long](raw.length)
-    var nc = 0
+    // the longest aligned match per token start, as a pattern id (-1 none);
+    // allocated only when the turn has an aligned match
+    val pats = model.ac.patterns
+    var longest: Array[Int] = null
+    val raw = model.ac.findAllPacked(lower(text))
     var r = 0
     while (r < raw.length) {
       val pid = (raw(r) >>> 32).toInt
       val end = (raw(r) & 0xffffffffL).toInt
-      val start = end - model.ac.patterns(pid).length
-      if (java.util.Arrays.binarySearch(starts, start) >= 0 && isEnd(end)) {
-        val len = math.min(end - start, (1 << 15) - 1)
-        val invLen = ((1 << 15) - 1) - len
-        val prio = math.min(math.max(model.priority(pid), 0), (1 << 7) - 1)
-        cands(nc) = (start.toLong << 42) | (invLen.toLong << 27) |
-          (prio.toLong << 20) | pid.toLong
-        nc += 1
+      val k = java.util.Arrays.binarySearch(starts, end - pats(pid).length)
+      if (k >= 0 && (java.util.Arrays.binarySearch(ends, end) >= 0 ||
+          java.util.Arrays.binarySearch(coreEnds, end) >= 0)) {
+        if (longest == null) longest = Array.fill(nToks)(-1)
+        if (longest(k) < 0 || pats(longest(k)).length < pats(pid).length)
+          longest(k) = pid
       }
       r += 1
     }
-    java.util.Arrays.sort(cands, 0, nc)
+    if (longest == null) return tags
+    // leftmost-longest sweep: a match claims its tokens unless an earlier
+    // claimed match still covers its start
     var occupiedUntil = -1
-    var c = 0
-    while (c < nc) {
-      val s = (cands(c) >>> 42).toInt
-      val pid = (cands(c) & ((1 << 20) - 1)).toInt
-      val e = s + model.ac.patterns(pid).length
-      if (s >= occupiedUntil) {
+    var k = 0
+    while (k < nToks) {
+      val pid = longest(k)
+      val s = starts(k)
+      if (pid >= 0 && s >= occupiedUntil) {
+        val e = s + pats(pid).length
         occupiedUntil = e
         val tag = model.tags(pid)
-        var k = java.util.Arrays.binarySearch(starts, s)
-        while (k < nToks && ends(k) <= e) {
-          tags(k) = tag
-          k += 1
-        }
+        var j = k
+        while (j < nToks && ends(j) <= e) { tags(j) = tag; j += 1 }
         // a token whose word-core end == e (match ends before its [.!]*
         // suffix) is still fully claimed by the match
-        if (k < nToks && starts(k) < e) tags(k) = tag
+        if (j < nToks && starts(j) < e) tags(j) = tag
       }
-      c += 1
+      k += 1
     }
     tags
   }
@@ -212,7 +180,7 @@ object Detector {
       while (s < e && text.charAt(s) <= ' ') s += 1
       while (e > s && text.charAt(e - 1) <= ' ') e -= 1
       val inner = text.substring(s, e)
-      val innerLower = inner.toLowerCase(java.util.Locale.ROOT)
+      val innerLower = lower(inner)
       // skip spans the gazetteer already covers (union, not duplicate)
       val known = model.ac.findAllPacked(innerLower).exists { p =>
         model.ac.patterns((p >>> 32).toInt) == innerLower

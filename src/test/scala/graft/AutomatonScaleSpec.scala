@@ -68,9 +68,8 @@ class AutomatonScaleSpec extends AnyFunSuite {
   }
 
   test("tags survive match offsets beyond the packed key's 2^21-char bound") {
-    // the packed candidate sort key holds start in 21 bits; a longer turn
-    // (a pathological tool dump) takes the boxed rare path — tags for
-    // content past the boundary must equal the same content unshifted
+    // a turn past 2^21 chars (a pathological tool dump): tags for content
+    // past that offset must equal the same content unshifted
     val model = Detector.buildModel()
     val base = "check out Senbonzakura covered by Hatsune Miku"
     val text = base + (" " * ((1 << 21) + 7)) + base

@@ -67,6 +67,53 @@ class DecodeSpec extends SparkSuite {
     assert(idx >= 0 && tags(idx) == "TITLE")
   }
 
+  test("detector rule on a hand-built model: longest, then leftmost, then priority") {
+    def e(surface: String, tag: String, priority: Int) =
+      Gazetteer.Entry(surface, tag, surface, "en", priority)
+    val model = Detector.buildModel(Seq(
+      e("hatsune", "MISC_PERSON", 0), e("Hatsune Miku", "VOCALOID", 5),
+      e("red blue", "ALBUM", 9), e("blue green yellow", "TITLE", 0),
+      e("Melt", "TITLE", 3), e("MELT", "ALBUM", 1),
+      e("Ghost", "TITLE", 2), e("ghost", "ALBUM", 2)))
+    def tagged(text: String): Seq[(String, String)] = {
+      val tk = PyText.tokenizeWithOffsets(text)
+      tk.map(_.tok).toSeq.zip(Detector.tagTokens(model, text, tk))
+    }
+    // a longer surface beats a shorter, better-priority one at its start
+    assert(tagged("Hatsune Miku sings") ==
+      Seq("Hatsune" -> "VOCALOID", "Miku" -> "VOCALOID", "sings" -> "O"))
+    // of two overlapping matches the leftmost wins, even when shorter
+    assert(tagged("red blue green yellow") == Seq("red" -> "ALBUM",
+      "blue" -> "ALBUM", "green" -> "O", "yellow" -> "O"))
+    // entries with the same lowercase surface share one pattern, tagged
+    // by the better priority, then by gazetteer order
+    assert(tagged("melt ghost") == Seq("melt" -> "ALBUM", "ghost" -> "TITLE"))
+  }
+
+  test("detector offsets survive a lowercase that changes length (U+0130)") {
+    val model = Detector.buildModel()
+    def tags(text: String): Seq[String] =
+      Detector.tagTokens(model, text, PyText.tokenizeWithOffsets(text)).toSeq
+    // String.toLowerCase(ROOT) turns İ into two chars, which shifted
+    // every later automaton offset off its token boundaries
+    val plain = tags("I Senbonzakura by Hatsune Miku")
+    assert(plain.count(_ != "O") == 4)
+    assert(tags("\u0130 Senbonzakura by Hatsune Miku") == plain)
+    val ist = "\u0130stanbul loves Senbonzakura"
+    val tk = PyText.tokenizeWithOffsets(ist)
+    assert(tk.map(_.tok).zip(Detector.tagTokens(model, ist, tk)).toMap
+      .apply("Senbonzakura") == "TITLE")
+  }
+
+  test("detector lowercase keeps every code point's char count") {
+    assert(Detector.lower("\u0130stanbul") == "istanbul")
+    val changed = (0 to Character.MAX_CODE_POINT).filter { cp =>
+      val s = new String(Character.toChars(cp))
+      Detector.lower(s).length != s.length
+    }
+    assert(changed.isEmpty, changed.take(5).map(c => f"U+$c%04X"))
+  }
+
   test("window/gaps-and-islands decode agrees with row-local decode") {
     import spark.implicits._
     // one tag sequence per document, as (doc, [(tag, start, end)]);
