@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.Schemas._
 
@@ -21,12 +22,14 @@ import graft.Schemas._
  *     per tag ([[blockKeys]]) — so candidate generation never goes
  *     quadratic in the corpus; each block's pairs come from one kernel
  *     ([[blockPairs]]) against one global char idf ([[charIdf]]), on the
- *     driver and in a `flatMapGroups` task alike.
+ *     driver and in a `flatMapGroups` task alike. Every pair test reads
+ *     each form's [[Key]] (code points and tf-idf vector), built once.
  *  G2 connected components over the candidate edges: iterative min-label
  *     propagation over joins ("GraphFrames-style") with per-round
- *     pointer jumping; `localCheckpoint` every round cuts lineage;
- *     convergence = no label changed. Component label = lexicographic
- *     min surface key — deterministic under any parallelism.
+ *     pointer jumping; `localCheckpoint` every round cuts lineage, and
+ *     the round it supersedes is released; convergence = no label
+ *     changed. Component label = lexicographic min surface key —
+ *     deterministic under any parallelism.
  *  G3 CANOPY REFINEMENT (the components are canopies, not clusters):
  *     pairwise-similar-at-threshold is not transitive — concatenated
  *     multi-entity surfaces ("Melt 夜に駆ける", a real decode output
@@ -70,73 +73,54 @@ object Canonicalize {
     * a larger one runs it distributed. */
   val DriverMaxVertices = 200000L
 
-  /** Row-local char TF-IDF cosine over normalized keys (the sklearn
-    * char-analyzer formula the reference's per-doc dedup uses,
-    * src/prod.py:185-198, against a GLOBAL idf map). Vectors are built
-    * per CODE POINT, matching [[charIdf]]'s keys ([[distinctChars]]) —
-    * a per-UTF-16-unit vector would give
-    * every astral char idf 1.0 and silently diverge from the
-    * independently-minted oracle on an astral-bearing corpus. */
-  private[operators] def tfidfCosine(ka: String, kb: String,
-      idf: Map[String, Double]): Double = {
-    def vec(s: String): collection.Map[String, Double] = {
-      val counts = mutable.HashMap.empty[String, Double]
+  /** One form's alias-test record, built once per form by [[key]] and read
+    * by every pair test ([[blockPairs]], [[aliasMatch]]): the normalized
+    * key, its code points, and its L2-normalized char TF-IDF vector (the
+    * sklearn char-analyzer formula of the reference's per-doc dedup,
+    * src/prod.py:185-198) as (code point, weight) arrays. */
+  private[graft] final class Key(val nk: String, val cps: Array[Int],
+      private val vecCp: Array[Int], private val vecW: Array[Double]) {
+    /** Cosine with `o`: this vector's terms summed in its entry order. */
+    def cosine(o: Key): Double = {
+      var s = 0.0
       var i = 0
-      while (i < s.length) {
-        val cp = s.codePointAt(i)
-        val k = new String(Character.toChars(cp))
-        counts.update(k, counts.getOrElse(k, 0.0) + 1.0)
-        i += Character.charCount(cp)
+      while (i < vecCp.length) {
+        var j = 0
+        while (j < o.vecCp.length && o.vecCp(j) != vecCp(i)) j += 1
+        s += vecW(i) * (if (j < o.vecCp.length) o.vecW(j) else 0.0)
+        i += 1
       }
-      var norm2 = 0.0
-      counts.mapValuesInPlace { (c, tf) =>
-        val w = tf * idf.getOrElse(c, 1.0); norm2 += w * w; w
-      }
-      val n = math.sqrt(norm2)
-      if (n == 0) counts else counts.mapValuesInPlace((_, x) => x / n)
+      s
     }
-    val (va, vb) = (vec(ka), vec(kb))
-    va.iterator.map { case (c, x) => x * vb.getOrElse(c, 0.0) }.sum
   }
 
-  @inline private def hasSurrogate(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      if (Character.isSurrogate(s.charAt(i))) return true
-      i += 1
+  /** The [[Key]] of `nk` under the global idf. The vector is per CODE
+    * POINT, like [[charIdf]]'s keys: per UTF-16 unit an astral char would
+    * take idf 1.0 and diverge from the oracle. Its entries keep the
+    * iteration order of a `HashMap` keyed by each code point's string, the
+    * order every cosine sum was pinned in. */
+  private[graft] def key(nk: String, idf: Map[String, Double]): Key = {
+    val cps = nk.codePoints().toArray
+    val counts = mutable.HashMap.empty[String, Double]
+    cps.foreach { cp =>
+      val c = new String(Character.toChars(cp))
+      counts.update(c, counts.getOrElse(c, 0.0) + 1.0)
     }
-    false
+    var norm2 = 0.0
+    counts.mapValuesInPlace { (c, tf) =>
+      val w = tf * idf.getOrElse(c, 1.0); norm2 += w * w; w
+    }
+    val n = math.sqrt(norm2)
+    if (n != 0) counts.mapValuesInPlace((_, x) => x / n)
+    new Key(nk, cps, counts.keysIterator.map(_.codePointAt(0)).toArray,
+      counts.valuesIterator.toArray)
   }
 
   /** Plain-JVM Levenshtein over CODE POINTS, for both the candidate test
     * ([[blockPairs]]) and the refinement pass — Spark's SQL levenshtein
     * counts code points too, so an astral char (one codepoint, two UTF-16
     * units) costs ONE edit, as in the SQL oracle. */
-  private[graft] def jvmLev(a: String, b: String): Int = {
-    // BMP fast path: this runs per member-leader pair in the refinement
-    // inner loop (allocation rate is the measured scaling limiter);
-    // surrogate-free strings — the overwhelming majority of normalized
-    // keys — compare chars directly with only the dp row allocated. The
-    // codepoint form below keeps astral chars at one edit each.
-    if (!hasSurrogate(a) && !hasSurrogate(b)) {
-      val dp = Array.tabulate(b.length + 1)(identity)
-      var i = 1
-      while (i <= a.length) {
-        var prevDiag = dp(0); dp(0) = i
-        var j = 1
-        while (j <= b.length) {
-          val t = dp(j)
-          dp(j) = math.min(math.min(dp(j) + 1, dp(j - 1) + 1),
-            prevDiag + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1))
-          prevDiag = t
-          j += 1
-        }
-        i += 1
-      }
-      return dp(b.length)
-    }
-    val ca = a.codePoints().toArray
-    val cb = b.codePoints().toArray
+  private[graft] def jvmLev(ca: Array[Int], cb: Array[Int]): Int = {
     val dp = Array.tabulate(cb.length + 1)(identity)
     var i = 1
     while (i <= ca.length) {
@@ -159,9 +143,7 @@ object Canonicalize {
     * "senbonzakura", not 2). Used by [[aliasMatch]]'s equal-length rule:
     * it keeps the common typo class (one substitution or one swap) at
     * distance 1 while a two-substitution different-entity pair stays 2. */
-  private[graft] def jvmOsa(a: String, b: String): Int = {
-    val ca = a.codePoints().toArray
-    val cb = b.codePoints().toArray
+  private[graft] def jvmOsa(ca: Array[Int], cb: Array[Int]): Int = {
     // three rolling rows (OSA needs i-2 for the transposition case)
     var prev2 = new Array[Int](cb.length + 1)
     var prev = Array.tabulate(cb.length + 1)(identity)
@@ -207,15 +189,12 @@ object Canonicalize {
     *    clear 0.5 on char unigrams ("ashesofthedawn" vs
     *    "hollowcathedral" does), which is fine for generating candidates
     *    but not for merging. */
-  private[operators] def aliasMatch(nka: String, nkb: String,
-      idf: Map[String, Double]): Boolean = {
-    val lenA = nka.codePointCount(0, nka.length)
-    val lenB = nkb.codePointCount(0, nkb.length)
-    if (lenA == lenB) return jvmOsa(nka, nkb) <= 1
+  private def aliasMatch(a: Key, b: Key): Boolean = {
+    val (lenA, lenB) = (a.cps.length, b.cps.length)
+    if (lenA == lenB) return jvmOsa(a.cps, b.cps) <= 1
     val minLen = math.min(lenA, lenB)
     val levCap = math.min(3, math.max(1, minLen / 4))
-    jvmLev(nka, nkb) <= levCap ||
-      (minLen >= 8 && tfidfCosine(nka, nkb, idf) > 0.8)
+    jvmLev(a.cps, b.cps) <= levCap || (minLen >= 8 && a.cosine(b) > 0.8)
   }
 
   /** UTF-8 binary string comparison — Spark's string ordering, used for
@@ -286,12 +265,12 @@ object Canonicalize {
     Array("p:" + tag + ":" + substrCp(nk, 2),
       "s:" + tag + ":" + substrCp(reverseCp(nk), 2))
 
-  /** The candidate pairs of ONE block, members = (id, nk): a pair of
+  /** The candidate pairs of ONE block, members = (id, key): a pair of
     * distinct ids is an alias edge iff levenshtein <= 3 OR global-idf
     * char-TFIDF cosine > 0.5 on the normalized keys (the reference's
     * thresholds, src/prod.py:198,210). Emits (id_i, id_j) for i < j. */
-  private def blockPairs(members: collection.IndexedSeq[(String, String)],
-      idf: Map[String, Double]): collection.Seq[(String, String)] = {
+  private def blockPairs(members: collection.IndexedSeq[(String, Key)])
+      : collection.Seq[(String, String)] = {
     val out = mutable.ArrayBuffer.empty[(String, String)]
     var i = 0
     while (i < members.length) {
@@ -300,7 +279,7 @@ object Canonicalize {
       while (j < members.length) {
         val (idb, kb) = members(j)
         if (ida != idb &&
-          (jvmLev(ka, kb) <= 3 || tfidfCosine(ka, kb, idf) > 0.5))
+          (jvmLev(ka.cps, kb.cps) <= 3 || ka.cosine(kb) > 0.5))
           out += ((ida, idb))
         j += 1
       }
@@ -309,27 +288,18 @@ object Canonicalize {
     out
   }
 
-  /** The distinct code points of `s`, one string each — the documents of
-    * the char idf. */
-  private def distinctChars(s: String): collection.Set[String] = {
-    val seen = mutable.HashSet.empty[String]
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      seen += new String(Character.toChars(cp))
-      i += Character.charCount(cp)
-    }
-    seen
-  }
-
   /** Document frequencies over non-empty normalized keys:
-    * (number of keys, char -> number of keys holding it). */
+    * (number of keys, char -> number of keys holding it), a char being one
+    * CODE POINT as in every [[Key]] vector. */
   private def charDf(nks: Iterator[String]): (Long, Map[String, Long]) = {
     val df = mutable.HashMap.empty[String, Long]
     var n = 0L
     nks.filter(_.nonEmpty).foreach { nk =>
       n += 1
-      distinctChars(nk).foreach(c => df.update(c, df.getOrElse(c, 0L) + 1L))
+      nk.codePoints().distinct().forEach { cp =>
+        val c = new String(Character.toChars(cp))
+        df.update(c, df.getOrElse(c, 0L) + 1L)
+      }
     }
     (n, df.toMap)
   }
@@ -341,11 +311,10 @@ object Canonicalize {
 
   /** Greedy leader refinement of ONE canopy — shared VERBATIM by the
     * distributed `flatMapGroups` path and the driver fast path so the
-    * two can never diverge. members = (tag, surface, n_mentions, nk);
+    * two can never diverge. members = (tag, surface, n_mentions, key);
     * returns (tag, surface, n_mentions, node_id, canonical). */
   private def refineCanopy(comp: String,
-      membersIn: Array[(String, String, Long, String)],
-      idfMap: Map[String, Double], maxCanopySize: Int)
+      membersIn: Array[(String, String, Long, Key)], maxCanopySize: Int)
       : Iterator[(String, String, Long, String, String)] = {
     val members = membersIn.sortWith { (a, b) =>
       if (a._3 != b._3) a._3 > b._3 // n_mentions desc
@@ -365,10 +334,10 @@ object Canonicalize {
           "blocking guard or raise maxCanopySize deliberately")
     // leaders in founding order; a member joins its FIRST match
     val leaders = mutable.ArrayBuffer
-      .empty[(String, String)] // (surface, nk)
-    members.iterator.map { case (tag, surface, n, nk) =>
-      val leader = leaders.find(l => aliasMatch(nk, l._2, idfMap))
-        .map(_._1).getOrElse { leaders += ((surface, nk)); surface }
+      .empty[(String, Key)] // (surface, key)
+    members.iterator.map { case (tag, surface, n, k) =>
+      val leader = leaders.find(l => aliasMatch(k, l._2))
+        .map(_._1).getOrElse { leaders += ((surface, k)); surface }
       (tag, surface, n, tag + ":" + leader, leader)
     }
   }
@@ -443,15 +412,19 @@ object Canonicalize {
 
   /**
    * G1: candidate alias edges, [[blockPairs]] over every block of at most
-   * `maxBlockSize` forms. Returns distinct (src, dst) form ids
-   * (tag + NUL + surface), src < dst in UTF-8 order.
+   * `maxBlockSize` forms under the forms' own [[charIdf]]. Returns distinct
+   * (src, dst) form ids (tag + NUL + surface), src < dst in UTF-8 order.
    */
   def aliasEdges(spark: SparkSession, forms: DataFrame,
-      maxBlockSize: Int = MaxBlockSize,
-      idfOpt: Option[Broadcast[Map[String, Double]]] = None): DataFrame = {
-    import spark.implicits._
-    val idfB = idfOpt.getOrElse(
+      maxBlockSize: Int = MaxBlockSize): DataFrame =
+    blockEdges(spark, forms, maxBlockSize,
       spark.sparkContext.broadcast(charIdf(spark, forms)))
+
+  /** [[aliasEdges]] under the idf broadcast `idfB`: each block member's
+    * [[Key]] is built once, in its block's task. */
+  private def blockEdges(spark: SparkSession, forms: DataFrame,
+      maxBlockSize: Int, idfB: Broadcast[Map[String, Double]]): DataFrame = {
+    import spark.implicits._
     val pairs = blockedForms(spark, forms)
       .groupByKey(_._1)
       .flatMapGroups { (_, rows) =>
@@ -463,7 +436,8 @@ object Canonicalize {
           members += ((id, nk))
         }
         if (members.length > maxBlockSize) Iterator.empty
-        else blockPairs(members, idfB.value).iterator.map { case (a, b) =>
+        else blockPairs(members.map { case (id, nk) =>
+          (id, key(nk, idfB.value)) }).iterator.map { case (a, b) =>
           if (utf8Compare(a, b) < 0) (a, b) else (b, a)
         }
       }
@@ -499,7 +473,7 @@ object Canonicalize {
     val withId =
       forms.withColumn("id", concat_ws("\u0000", col("tag"), col("surface")))
     (withId.join(connectedComponents(spark, withId.select("id"),
-        aliasEdges(spark, forms, idfOpt = Some(idfB))), "id")
+        blockEdges(spark, forms, MaxBlockSize, idfB)), "id")
       .select(col("component"), col("tag"), col("surface"), col("n_mentions")),
       idfB)
   }
@@ -536,6 +510,9 @@ object Canonicalize {
     // not grow unboundedly. Both are LAZY (eager = false): materialization
     // folds into a round's convergence-check job instead of an extra job
     // per checkpoint (each small job is ~0.1-0.3s of scheduler tax).
+    // Each round's check job also cuts the new round's lineage, so the
+    // round before it is released there, and `sym` after the loop: only
+    // the returned round stays persisted.
     // Caveat for a REAL multi-node cluster: localCheckpoint stores blocks
     // on executors, so an executor loss mid-iteration fails the job
     // (acceptable: CC is a short bounded stage and the checkpointed
@@ -574,9 +551,11 @@ object Canonicalize {
         .localCheckpoint(false) // cut lineage every iteration (lazy: the
       // convergence check below is the job that materializes the blocks)
       converged = next.where(col("changed")).limit(1).count() == 0
+      if (iter > 0) releaseCheckpoint(labels) // round 0 read `vertices`
       labels = next.select(col("id"), col("component"))
       iter += 1
     }
+    releaseCheckpoint(sym)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
@@ -584,6 +563,13 @@ object Canonicalize {
           "the doubling budget, or a livelock bug); results would be wrong")
     labels
   }
+
+  /** Releases the blocks of a frame read straight off a lazy
+    * `localCheckpoint` (the first `LogicalRDD` in its plan), once no job
+    * reads it again. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** G1+G2+G3: surface forms -> (tag, surface, node_id, canonical).
     *
@@ -672,14 +658,15 @@ object Canonicalize {
       .limit(cap).as[(String, String, Long)].collect()
     val icu = icuCaseMappings()
     if (collected.length <= driverMaxVertices) {
-      // (tag, surface, n_mentions, nk), and each form's vertex id
-      val rows = collected
-        .map { case (tag, sf, n) => (tag, sf, n, normKeyJvm(sf, icu)) }
-      val ids = rows.map(f => f._1 + "\u0000" + f._2)
-      val (nNk, df) = charDf(rows.iterator.map(_._4))
+      val nks = collected.map { case (_, sf, _) => normKeyJvm(sf, icu) }
+      val (nNk, df) = charDf(nks.iterator)
       val idf = idfWeight(nNk, df)
-      val blocks = rows.indices.filter(rows(_)._4.nonEmpty)
-        .flatMap(i => blockKeys(rows(i)._1, rows(i)._4).map(_ -> i))
+      // (tag, surface, n_mentions, key), and each form's vertex id
+      val rows = collected.zip(nks)
+        .map { case ((tag, sf, n), nk) => (tag, sf, n, key(nk, idf)) }
+      val ids = rows.map(f => f._1 + "\u0000" + f._2)
+      val blocks = rows.indices.filter(rows(_)._4.nk.nonEmpty)
+        .flatMap(i => blockKeys(rows(i)._1, rows(i)._4.nk).map(_ -> i))
         .groupMap(_._1)(_._2).valuesIterator
         // singleton blocks generate no pairs — don't even enqueue them
         .filter(b => b.length >= 2 && b.length <= MaxBlockSize)
@@ -691,7 +678,7 @@ object Canonicalize {
       // order, so parallelism cannot change the result (and the driver==
       // distributed equality specs pin it).
       val cores = Runtime.getRuntime.availableProcessors
-      val pairs = graft.Par.orderedMap(blocks, cores)(blockPairs(_, idf))
+      val pairs = graft.Par.orderedMap(blocks, cores)(blockPairs)
       val label = driverComponents(ids.toSeq, pairs.iterator.flatten)
       // Refinement is worst-case O(members × leaders) per canopy — same
       // fan-out treatment, input order kept so output order stays the
@@ -702,8 +689,8 @@ object Canonicalize {
           case (comp, members) =>
             // refineCanopy is lazy (an Iterator) — force it HERE so the
             // O(m × leaders) matching actually runs inside the pool task
-            refineCanopy(comp, members.map(rows(_)).toArray, idf,
-              maxCanopySize).toVector
+            refineCanopy(comp, members.map(rows(_)).toArray, maxCanopySize)
+              .toVector
         }.flatten
       return out.toDF("tag", "surface", "n_mentions", "node_id", "canonical")
     }
@@ -713,9 +700,9 @@ object Canonicalize {
       .as[(String, String, String, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, it) =>
-        refineCanopy(comp,
-          it.map(m => (m._2, m._3, m._4, normKeyJvm(m._3, icu))).toArray,
-          idfB.value, maxCanopySize)
+        refineCanopy(comp, it.map(m =>
+          (m._2, m._3, m._4, key(normKeyJvm(m._3, icu), idfB.value))).toArray,
+          maxCanopySize)
       }
       .toDF("tag", "surface", "n_mentions", "node_id", "canonical")
   }

@@ -35,6 +35,25 @@ class DecodeSpec extends SparkSuite {
     assert(out.map(_.text) == Seq("user", "Imagine"))
   }
 
+  test("me-substitution keeps a dotted capital I, as the reference does") {
+    // The detector tags "İ" ORIGINAL_AUTHOR: it lowers to the pronoun
+    // "i". The reference's str.lower() maps it to "i̇" (two code points),
+    // which is no first-person word, so src/prod.py:119-125 keeps it.
+    val model = Detector.buildModel()
+    def engine(text: String) = Pipeline.extractTurn(model, "c", 0, "user", text)
+      .map(t => (t.subj, t.pred, t.obj)).toSet
+    def reference(text: String) = {
+      val tk = PyText.tokenizeWithOffsets(text)
+      ReferenceOracle.extract("c", 0, "user", text, tk.toIndexedSeq,
+        Detector.tagTokens(model, text, tk).toIndexedSeq).toSet
+    }
+    val dotted = "\u0130 love Senbonzakura"
+    assert(engine(dotted).contains(("Senbonzakura", "performed_by", "\u0130")))
+    assert(engine(dotted) == reference(dotted))
+    assert(engine("I love Senbonzakura")
+      .contains(("Senbonzakura", "performed_by", "user")))
+  }
+
   test("detector: token-aligned, leftmost-longest, case-insensitive") {
     val model = Detector.buildModel()
     val text = "check out Senbonzakura covered by Hatsune Miku"

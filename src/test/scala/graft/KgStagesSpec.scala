@@ -672,6 +672,21 @@ class KgStagesSpec extends SparkSuite {
     }
   }
 
+  test("distributed canonicalization releases its superseded CC rounds") {
+    // Each CC round's checkpoint is read only by the next round, and the
+    // symmetric edges only by the rounds. What may stay persisted is what
+    // the returned plan reads: the forms checkpoint and the final labels.
+    val mentions = operators.Decode.mentions(spark,
+      Pipeline.decodeTurns(spark, TranscriptGen.generate(spark, 60L))).toDF()
+    holdingPersistedRdds {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val cm = Canonicalize.canonicalMap(spark, mentions, driverMaxVertices = 0)
+      assert(cm.count() > 0)
+      val left = persistedSince(before)
+      assert(left.size <= 2, s"distributed canonicalMap left persisted RDDs $left")
+    }
+  }
+
   test("KG gates persist nothing more once their shared prefixes are warm") {
     // The first round persists the session's shared decoded and
     // canonical-map prefixes; a second round must read them and persist

@@ -159,13 +159,14 @@ class PropertySpec extends AnyFunSuite {
       8 -> Gen.alphaLowerChar.map(_.toString),
       1 -> Gen.oneOf("夜", "駆", "á"),
       1 -> Gen.oneOf("🎵", "𝄞"))).map(_.mkString)
+    def cp(s: String) = s.codePoints().toArray
     forAll2(keyGen, keyGen) { (a, b) =>
-      assert(Canonicalize.jvmOsa(a, a) == 0)
-      val d = Canonicalize.jvmOsa(a, b)
-      assert(d == Canonicalize.jvmOsa(b, a)) // symmetric
-      assert(d <= Canonicalize.jvmLev(a, b)) // transpositions only help
+      assert(Canonicalize.jvmOsa(cp(a), cp(a)) == 0)
+      val d = Canonicalize.jvmOsa(cp(a), cp(b))
+      assert(d == Canonicalize.jvmOsa(cp(b), cp(a))) // symmetric
+      assert(d <= Canonicalize.jvmLev(cp(a), cp(b))) // transpositions only help
       // lev counts a transposition as 2; OSA never saves more than half
-      assert(Canonicalize.jvmLev(a, b) <= 2 * d)
+      assert(Canonicalize.jvmLev(cp(a), cp(b)) <= 2 * d)
     }
     // swapping two adjacent DISTINCT code points costs exactly 1
     forAll(keyGen.suchThat(_.nonEmpty)) { a =>
@@ -175,8 +176,110 @@ class PropertySpec extends AnyFunSuite {
         val swapped = cps.clone()
         val t = swapped(i); swapped(i) = swapped(i + 1); swapped(i + 1) = t
         val b = new String(swapped, 0, swapped.length)
-        assert(Canonicalize.jvmOsa(a, b) == 1, s"swap in '$a' -> '$b'")
+        assert(Canonicalize.jvmOsa(cp(a), cp(b)) == 1, s"swap in '$a' -> '$b'")
       }
+    }
+  }
+
+  /** The reference for [[Canonicalize.Key]]'s cosine: the per-pair form,
+    * which builds both tf-idf vectors from their strings on every call
+    * (copied verbatim from the kernel it replaced). */
+  private def tfidfCosine(ka: String, kb: String,
+      idf: Map[String, Double]): Double = {
+    def vec(s: String): collection.Map[String, Double] = {
+      val counts = scala.collection.mutable.HashMap.empty[String, Double]
+      var i = 0
+      while (i < s.length) {
+        val cp = s.codePointAt(i)
+        val k = new String(Character.toChars(cp))
+        counts.update(k, counts.getOrElse(k, 0.0) + 1.0)
+        i += Character.charCount(cp)
+      }
+      var norm2 = 0.0
+      counts.mapValuesInPlace { (c, tf) =>
+        val w = tf * idf.getOrElse(c, 1.0); norm2 += w * w; w
+      }
+      val n = math.sqrt(norm2)
+      if (n == 0) counts else counts.mapValuesInPlace((_, x) => x / n)
+    }
+    val (va, vb) = (vec(ka), vec(kb))
+    va.iterator.map { case (c, x) => x * vb.getOrElse(c, 0.0) }.sum
+  }
+
+  @inline private def hasSurrogate(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (Character.isSurrogate(s.charAt(i))) return true
+      i += 1
+    }
+    false
+  }
+
+  /** The reference for the code-point Levenshtein: the two-loop form
+    * (chars for surrogate-free strings, code points otherwise), copied
+    * verbatim. */
+  private def jvmLev(a: String, b: String): Int = {
+    // BMP fast path: this runs per member-leader pair in the refinement
+    // inner loop (allocation rate is the measured scaling limiter);
+    // surrogate-free strings — the overwhelming majority of normalized
+    // keys — compare chars directly with only the dp row allocated. The
+    // codepoint form below keeps astral chars at one edit each.
+    if (!hasSurrogate(a) && !hasSurrogate(b)) {
+      val dp = Array.tabulate(b.length + 1)(identity)
+      var i = 1
+      while (i <= a.length) {
+        var prevDiag = dp(0); dp(0) = i
+        var j = 1
+        while (j <= b.length) {
+          val t = dp(j)
+          dp(j) = math.min(math.min(dp(j) + 1, dp(j - 1) + 1),
+            prevDiag + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1))
+          prevDiag = t
+          j += 1
+        }
+        i += 1
+      }
+      return dp(b.length)
+    }
+    val ca = a.codePoints().toArray
+    val cb = b.codePoints().toArray
+    val dp = Array.tabulate(cb.length + 1)(identity)
+    var i = 1
+    while (i <= ca.length) {
+      var prevDiag = dp(0); dp(0) = i
+      var j = 1
+      while (j <= cb.length) {
+        val t = dp(j)
+        dp(j) = math.min(math.min(dp(j) + 1, dp(j - 1) + 1),
+          prevDiag + (if (ca(i - 1) == cb(j - 1)) 0 else 1))
+        prevDiag = t
+        j += 1
+      }
+      i += 1
+    }
+    dp(cb.length)
+  }
+
+  test("alias-test keys: cosine bits and levenshtein equal the per-pair reference") {
+    import graft.operators.Canonicalize
+    val alphabet = Seq("a", "b", "e", "n", "s", "z", "á", "ő", "夜", "駆",
+      "に", "α", "β", "ς", "σ", "0", "7", "🎵", "𝄞", "😀")
+    val keyGen = Gen.chooseNum(0, 24).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(alphabet)).map(_.mkString))
+    // a random idf over a random subset of the alphabet; the others fall
+    // back to weight 1.0, as in the kernel
+    val idfGen = Gen.someOf(alphabet).flatMap(cs =>
+      Gen.listOfN(cs.size, Gen.chooseNum(1.0, 9.0))
+        .map(ws => cs.zip(ws).toMap))
+    forAll(for { idf <- idfGen; a <- keyGen; b <- keyGen } yield (idf, a, b),
+        n = 2000) { case (idf, a, b) =>
+      val (ka, kb) = (Canonicalize.key(a, idf), Canonicalize.key(b, idf))
+      for ((x, y, kx, ky) <- Seq((a, b, ka, kb), (b, a, kb, ka), (a, a, ka, ka)))
+        assert(java.lang.Double.doubleToRawLongBits(kx.cosine(ky)) ==
+          java.lang.Double.doubleToRawLongBits(tfidfCosine(x, y, idf)),
+          s"cosine bits differ on '$x' / '$y'")
+      assert(Canonicalize.jvmLev(ka.cps, kb.cps) == jvmLev(a, b),
+        s"levenshtein differs on '$a' / '$b'")
     }
   }
 
