@@ -222,28 +222,4 @@ object PyText {
 
   /** Token strings only (the Python encode() return shape). */
   def tokenize(text: String): Array[String] = tokenizeWithOffsets(text).map(_.tok)
-
-  /** Classic Levenshtein (src/prod.py:158-175); used by per-doc dedup.
-    * Spark's built-in `levenshtein` agrees — pinned by DedupSpec. */
-  def levenshtein(a: String, b: String): Int = {
-    if (a.length < b.length) return levenshtein(b, a)
-    if (b.isEmpty) return a.length
-    var prev = Array.tabulate(b.length + 1)(identity)
-    var i = 0
-    while (i < a.length) {
-      val cur = new Array[Int](b.length + 1)
-      cur(0) = i + 1
-      var j = 0
-      while (j < b.length) {
-        val ins = prev(j + 1) + 1
-        val del = cur(j) + 1
-        val sub = prev(j) + (if (a.charAt(i) != b.charAt(j)) 1 else 0)
-        cur(j + 1) = math.min(ins, math.min(del, sub))
-        j += 1
-      }
-      prev = cur
-      i += 1
-    }
-    prev(b.length)
-  }
 }

@@ -12,7 +12,9 @@ import graft.Schemas._
  * G1-G4) — the global generalization of the reference's per-document
  * greedy dedup (src/prod.py:178-213), using the SAME similarity
  * thresholds (levenshtein <= 3, char-TFIDF cosine > 0.5 at
- * src/prod.py:198,210) so local and global canonicalization agree.
+ * src/prod.py:198,210) so local and global canonicalization agree. Both
+ * run one kernel: the per-turn dedup ([[GreedyDedup]]) reads this object's
+ * char idf, [[Key]] and code-point [[jvmLev]].
  *
  * Stages and their shuffle cost (the only wide stages in the pipeline
  * besides coref):
@@ -77,7 +79,9 @@ object Canonicalize {
     * by every pair test ([[blockPairs]], [[aliasMatch]]): the normalized
     * key, its code points, and its L2-normalized char TF-IDF vector (the
     * sklearn char-analyzer formula of the reference's per-doc dedup,
-    * src/prod.py:185-198) as (code point, weight) arrays. */
+    * src/prod.py:185-198) as (code point, weight) arrays. The per-turn
+    * dedup ([[GreedyDedup]]) shares it: one `Key` per lowercased entity
+    * under that turn's idf. */
   private[graft] final class Key(val nk: String, val cps: Array[Int],
       private val vecCp: Array[Int], private val vecW: Array[Double]) {
     /** Cosine with `o`: this vector's terms summed in its entry order. */
@@ -116,10 +120,11 @@ object Canonicalize {
       counts.valuesIterator.toArray)
   }
 
-  /** Plain-JVM Levenshtein over CODE POINTS, for both the candidate test
-    * ([[blockPairs]]) and the refinement pass — Spark's SQL levenshtein
-    * counts code points too, so an astral char (one codepoint, two UTF-16
-    * units) costs ONE edit, as in the SQL oracle. */
+  /** Plain-JVM Levenshtein over CODE POINTS, for the candidate test
+    * ([[blockPairs]]), the refinement pass and the per-turn dedup's greedy
+    * pass ([[GreedyDedup]]) — the reference's DP over a Python str and
+    * Spark's SQL levenshtein both count code points, so an astral char (one
+    * codepoint, two UTF-16 units) costs ONE edit, as in the SQL oracle. */
   private[graft] def jvmLev(ca: Array[Int], cb: Array[Int]): Int = {
     val dp = Array.tabulate(cb.length + 1)(identity)
     var i = 1
@@ -291,7 +296,7 @@ object Canonicalize {
   /** Document frequencies over non-empty normalized keys:
     * (number of keys, char -> number of keys holding it), a char being one
     * CODE POINT as in every [[Key]] vector. */
-  private def charDf(nks: Iterator[String]): (Long, Map[String, Long]) = {
+  private[graft] def charDf(nks: Iterator[String]): (Long, Map[String, Long]) = {
     val df = mutable.HashMap.empty[String, Long]
     var n = 0L
     nks.filter(_.nonEmpty).foreach { nk =>
@@ -306,7 +311,7 @@ object Canonicalize {
 
   /** sklearn's smoothed idf over `n` documents, `df(c)` of which hold the
     * char c: log((1 + n) / (1 + df)) + 1. */
-  private def idfWeight(n: Long, df: Map[String, Long]): Map[String, Double] =
+  private[graft] def idfWeight(n: Long, df: Map[String, Long]): Map[String, Double] =
     df.map { case (c, d) => c -> (math.log((1.0 + n) / (1.0 + d)) + 1.0) }
 
   /** Greedy leader refinement of ONE canopy — shared VERBATIM by the

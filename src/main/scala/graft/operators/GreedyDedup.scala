@@ -1,21 +1,25 @@
 package graft.operators
 
-import graft.functions.PyText
-
 /**
  * Per-document order-sensitive entity dedup — exact semantics of the
  * reference's `filter_unique_entities` (src/prod.py:178-213):
  *
- *  1. char-level TF-IDF cosine pass: for every pair (i, j<i ... actually
- *     j>i), if cosine > 0.5 the LATER entity j is dropped (earlier wins);
+ *  1. char-level TF-IDF cosine pass: for every pair (i, j) with i < j, if
+ *     cosine > 0.5 the LATER entity j is dropped (earlier wins); marks are
+ *     taken on the original matrix, so a dropped entity still drops later
+ *     ones;
  *  2. greedy Levenshtein pass over the survivors in order: keep an entity
  *     iff its distance to every already-kept entity is > 3.
  *
- * The TF-IDF replicates sklearn TfidfVectorizer(analyzer="char",
- * lowercase=True) + cosine_similarity exactly: vocabulary = distinct
- * chars of the (lowercased) corpus, tf = raw char count, smooth idf =
+ * Both tests run the alias graph's one kernel in [[Canonicalize]]: the
+ * char idf of `charDf`/`idfWeight`, one `Key` (code-point tf-idf vector)
+ * per lowercased entity, and the code-point Levenshtein `jvmLev` over the
+ * original strings. With the idf over the turn's own entity list this is
+ * sklearn TfidfVectorizer(analyzer="char", lowercase=True) +
+ * cosine_similarity: tf = raw char count, smooth idf =
  * ln((1+n)/(1+df)) + 1, vector L2-normalized, cosine = dot product.
- * (sublinear_tf=False, norm='l2', smooth_idf=True are sklearn defaults.)
+ * Python iterates a str by code points, so an astral char (an emoji in a
+ * title) is one char and one edit in both passes.
  *
  * sklearn raises on an empty vocabulary (all entities empty strings); the
  * reference then falls back to `list(set(entities))` whose order is
@@ -28,66 +32,32 @@ import graft.functions.PyText
  */
 object GreedyDedup {
 
-  /** L2-normalized char tf-idf vectors for the corpus (sklearn parity). */
-  private[graft] def tfidfVectors(corpus: Seq[String]): Array[Map[Int, Double]] = {
-    val lowered = corpus.map(_.toLowerCase(java.util.Locale.ROOT))
-    val counts: Array[Map[Int, Int]] = lowered.map { s =>
-      val m = scala.collection.mutable.Map.empty[Int, Int]
-      var i = 0
-      while (i < s.length) { // sklearn char analyzer iterates code UNITS of the python str,
-        val cp = s.codePointAt(i) // i.e. codepoints; Java: iterate codepoints
-        m(cp) = m.getOrElse(cp, 0) + 1
-        i += Character.charCount(cp)
-      }
-      m.toMap
-    }.toArray
-    val n = corpus.length
-    val df = scala.collection.mutable.Map.empty[Int, Int]
-    counts.foreach(_.keys.foreach(c => df(c) = df.getOrElse(c, 0) + 1))
-    val idf: Map[Int, Double] =
-      df.map { case (c, d) => c -> (math.log((1.0 + n) / (1.0 + d)) + 1.0) }.toMap
-    counts.map { m =>
-      val v = m.map { case (c, tf) => c -> tf * idf(c) }
-      val norm = math.sqrt(v.values.map(x => x * x).sum)
-      if (norm == 0.0) v else v.map { case (c, x) => c -> x / norm }
-    }
-  }
-
-  private def dot(a: Map[Int, Double], b: Map[Int, Double]): Double = {
-    val (small, big) = if (a.size <= b.size) (a, b) else (b, a)
-    small.iterator.map { case (k, v) => v * big.getOrElse(k, 0.0) }.sum
-  }
-
   /** The exact two-pass dedup. Input order = decode order (must be stable). */
   def filterUniqueEntities(entities: Seq[String]): Seq[String] = {
     if (entities.isEmpty) return Seq.empty
     // fast path: a single entity passes both passes unchanged (the common
     // case at corpus scale — skips all TF-IDF/Levenshtein allocation)
     if (entities.lengthCompare(1) == 0) return entities
-    val nonEmptyVocab = entities.exists(_.nonEmpty)
     val afterTfidf: Seq[String] =
-      if (!nonEmptyVocab) {
+      if (!entities.exists(_.nonEmpty)) {
         // sklearn "empty vocabulary" error path -> reference falls back to
         // list(set(...)); we pin first-occurrence order (deterministic).
         entities.distinct
       } else {
-        val vecs = tfidfVectors(entities)
-        val toRemove = scala.collection.mutable.Set.empty[Int]
-        var i = 0
-        while (i < entities.length) {
-          var j = i + 1
-          while (j < entities.length) {
-            if (dot(vecs(i), vecs(j)) > 0.5) toRemove += j
-            j += 1
-          }
-          i += 1
-        }
-        entities.zipWithIndex.collect { case (e, idx) if !toRemove(idx) => e }
+        val lowered = entities.map(_.toLowerCase(java.util.Locale.ROOT))
+        // sklearn's n counts empty documents; charDf's own n skips them
+        val idf = Canonicalize.idfWeight(entities.length,
+          Canonicalize.charDf(lowered.iterator)._2)
+        val keys = lowered.map(Canonicalize.key(_, idf)).toArray
+        entities.indices.filterNot(j =>
+          (0 until j).exists(i => keys(i).cosine(keys(j)) > 0.5))
+          .map(entities)
       }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
+    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Int])]
     afterTfidf.foreach { e =>
-      if (kept.forall(other => PyText.levenshtein(e, other) > 3)) kept += e
+      val cps = e.codePoints().toArray
+      if (kept.forall(k => Canonicalize.jvmLev(cps, k._2) > 3)) kept += ((e, cps))
     }
-    kept.toSeq
+    kept.map(_._1).toSeq
   }
 }

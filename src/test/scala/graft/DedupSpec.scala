@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.GreedyDedup
+import graft.operators.{Canonicalize, GreedyDedup}
 
 /** Pins the sklearn TfidfVectorizer(analyzer="char") formula and the exact
   * two-pass greedy dedup order semantics (src/prod.py:178-213). Golden
@@ -9,9 +9,13 @@ import graft.operators.GreedyDedup
   * documented sklearn formula. */
 class DedupSpec extends AnyFunSuite {
 
+  /** The dedup's cosine: the kernel's `Key`s of the lowercased entities
+    * under the list's own idf (sklearn's n counts every entity). */
   private def cos(corpus: Seq[String], i: Int, j: Int): Double = {
-    val v = GreedyDedup.tfidfVectors(corpus)
-    v(i).iterator.map { case (k, x) => x * v(j).getOrElse(k, 0.0) }.sum
+    val low = corpus.map(_.toLowerCase(java.util.Locale.ROOT))
+    val idf = Canonicalize.idfWeight(corpus.length,
+      Canonicalize.charDf(low.iterator)._2)
+    Canonicalize.key(low(i), idf).cosine(Canonicalize.key(low(j), idf))
   }
 
   private val corpus =
@@ -55,6 +59,21 @@ class DedupSpec extends AnyFunSuite {
     assert(out.head == a)
     assert(!out.contains(b)) // marked via pair (a,b)
     assert(!out.contains(c)) // marked via pair (b,c) even though b removed
+  }
+
+  test("Levenshtein counts code points: two emoji are two edits") {
+    // By hand, over code points (Python's str): n = 2, df(a) = df(b) = 2,
+    // df(😀) = 1, so idf(a) = idf(b) = 1 and idf(😀) = ln(3/2) + 1 = 1.4055.
+    // cosine = (1 + 1) / (sqrt(2) * sqrt((2 * 1.4055)^2 + 1 + 1)) = 0.449,
+    // not > 0.5, so pass 1 keeps both. The DP from "ab" to "😀😀ab"
+    // inserts two code points: distance 2 <= 3, so pass 2 drops the later
+    // entity. Counted in UTF-16 units the distance would be 4 and both
+    // would stay.
+    val in = Seq("ab", "😀😀ab")
+    assert(math.abs(cos(in, 0, 1) - 0.449) < 1e-3)
+    assert(GreedyDedup.filterUniqueEntities(in) == Seq("ab"))
+    assert(ReferenceOracle.filterUnique(
+      in.toList.map(e => ("TITLE", e, 0, 0)), "TITLE") == Seq("ab"))
   }
 
   test("empty entities fall back to first-occurrence distinct") {

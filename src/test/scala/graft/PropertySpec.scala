@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.functions.PyText
-import graft.operators.{Decode, Detector, GreedyDedup}
+import graft.operators.{Canonicalize, Decode, Detector, GreedyDedup}
 import graft.Schemas.Token
 
 /** Property tests (SURVEY.md §5.2-3): invariants over random inputs,
@@ -103,18 +103,144 @@ class PropertySpec extends AnyFunSuite {
 
   test("dedup: output subset of input, order preserved, pairwise lev > 3 (post-tfidf)") {
     val entGen = Gen.listOf(Gen.oneOf("Senbonzakura", "Senbonzakura!",
-      "Melt", "Meltt", "World is Mine", "Ghost Rule", "xx", ""))
+      "Melt", "Meltt", "World is Mine", "Ghost Rule", "xx", "😀😀xx", ""))
     forAll(entGen) { ents =>
       val out = GreedyDedup.filterUniqueEntities(ents)
       // subset + order preserved
       assert(out.toSet.subsetOf(ents.toSet))
       val positions = out.map(ents.indexOf)
       assert(positions == positions.sorted)
-      // pairwise Levenshtein > 3 among kept
+      // pairwise Levenshtein (over code points) > 3 among kept
       for (i <- out.indices; j <- i + 1 until out.size)
-        assert(PyText.levenshtein(out(i), out(j)) > 3,
-          s"${out(i)} ~ ${out(j)}")
+        assert(Canonicalize.jvmLev(out(i).codePoints().toArray,
+          out(j).codePoints().toArray) > 3, s"${out(i)} ~ ${out(j)}")
     }
+  }
+
+  /** Test reference for [[GreedyDedup.filterUniqueEntities]]: the dedup's
+    * former standalone kernel (its own tf-idf vectors, dot product and
+    * Levenshtein), copied verbatim except that the Levenshtein walks code
+    * points, as the reference's Python DP does, not UTF-16 units. */
+  private object DedupReference {
+    def tfidfVectors(corpus: Seq[String]): Array[Map[Int, Double]] = {
+      val lowered = corpus.map(_.toLowerCase(java.util.Locale.ROOT))
+      val counts: Array[Map[Int, Int]] = lowered.map { s =>
+        val m = scala.collection.mutable.Map.empty[Int, Int]
+        var i = 0
+        while (i < s.length) {
+          val cp = s.codePointAt(i)
+          m(cp) = m.getOrElse(cp, 0) + 1
+          i += Character.charCount(cp)
+        }
+        m.toMap
+      }.toArray
+      val n = corpus.length
+      val df = scala.collection.mutable.Map.empty[Int, Int]
+      counts.foreach(_.keys.foreach(c => df(c) = df.getOrElse(c, 0) + 1))
+      val idf: Map[Int, Double] =
+        df.map { case (c, d) => c -> (math.log((1.0 + n) / (1.0 + d)) + 1.0) }.toMap
+      counts.map { m =>
+        val v = m.map { case (c, tf) => c -> tf * idf(c) }
+        val norm = math.sqrt(v.values.map(x => x * x).sum)
+        if (norm == 0.0) v else v.map { case (c, x) => c -> x / norm }
+      }
+    }
+
+    private def dot(a: Map[Int, Double], b: Map[Int, Double]): Double = {
+      val (small, big) = if (a.size <= b.size) (a, b) else (b, a)
+      small.iterator.map { case (k, v) => v * big.getOrElse(k, 0.0) }.sum
+    }
+
+    def levenshtein(a0: String, b0: String): Int = {
+      val (a, b) = (a0.codePoints().toArray, b0.codePoints().toArray)
+      if (a.length < b.length) return levenshtein(b0, a0)
+      if (b.isEmpty) return a.length
+      var prev = Array.tabulate(b.length + 1)(identity)
+      var i = 0
+      while (i < a.length) {
+        val cur = new Array[Int](b.length + 1)
+        cur(0) = i + 1
+        var j = 0
+        while (j < b.length) {
+          val ins = prev(j + 1) + 1
+          val del = cur(j) + 1
+          val sub = prev(j) + (if (a(i) != b(j)) 1 else 0)
+          cur(j + 1) = math.min(ins, math.min(del, sub))
+          j += 1
+        }
+        prev = cur
+        i += 1
+      }
+      prev(b.length)
+    }
+
+    def filterUniqueEntities(entities: Seq[String]): Seq[String] = {
+      if (entities.isEmpty) return Seq.empty
+      if (entities.lengthCompare(1) == 0) return entities
+      val nonEmptyVocab = entities.exists(_.nonEmpty)
+      val afterTfidf: Seq[String] =
+        if (!nonEmptyVocab) {
+          entities.distinct
+        } else {
+          val vecs = tfidfVectors(entities)
+          val toRemove = scala.collection.mutable.Set.empty[Int]
+          var i = 0
+          while (i < entities.length) {
+            var j = i + 1
+            while (j < entities.length) {
+              if (dot(vecs(i), vecs(j)) > 0.5) toRemove += j
+              j += 1
+            }
+            i += 1
+          }
+          entities.zipWithIndex.collect { case (e, idx) if !toRemove(idx) => e }
+        }
+      val kept = scala.collection.mutable.ArrayBuffer.empty[String]
+      afterTfidf.foreach { e =>
+        if (kept.forall(other => levenshtein(e, other) > 3)) kept += e
+      }
+      kept.toSeq
+    }
+  }
+
+  test("dedup: the kernel's decisions equal the standalone reference (BMP + astral)") {
+    // near-duplicate lists: each entity is one of a few base strings with
+    // up to two chars added, replaced or dropped, or empty
+    def listGen(alphabet: Seq[String]): Gen[List[String]] = {
+      val word = Gen.chooseNum(1, 8).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf(alphabet)))
+      for {
+        bases <- Gen.listOfN(2, word)
+        n <- Gen.chooseNum(0, 6)
+        ents <- Gen.listOfN(n, Gen.frequency(
+          1 -> Gen.const(""),
+          6 -> (for {
+            base <- Gen.oneOf(bases)
+            edits <- Gen.listOfN(2, Gen.zip(Gen.chooseNum(0, 3),
+              Gen.chooseNum(0, 8), Gen.oneOf(alphabet)))
+          } yield edits.foldLeft(base) { case (w, (op, at, c)) =>
+            val k = math.min(at, w.length)
+            op match {
+              case 0 => w.patch(k, Seq(c), 0) // add
+              case 1 => w.patch(k, Seq(c), 1) // replace
+              case 2 => w.patch(k, Nil, 1) // drop
+              case _ => w
+            }
+          }.mkString)))
+      } yield ents
+    }
+    val bmp = Seq("a", "b", "e", "M", "n", "s", "z", "İ", "Σ", "ς", "σ", "夜",
+      "駆", "に", " ", "!", "0")
+    val astral = bmp ++ Seq("😀", "🎵", "𝄞")
+    var astralLists = 0
+    for (alphabet <- Seq(bmp, astral))
+      forAll(listGen(alphabet), n = 2000) { ents =>
+        if (ents.exists(e => e.length != e.codePointCount(0, e.length)))
+          astralLists += 1
+        assert(GreedyDedup.filterUniqueEntities(ents) ==
+          DedupReference.filterUniqueEntities(ents), s"diverged on $ents")
+      }
+    assert(astralLists > 500, s"only $astralLists lists hold astral chars")
   }
 
   test("detector tags are deterministic and independent of prior calls") {
@@ -154,7 +280,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("OSA distance: identity, symmetry, bounded by levenshtein, swap costs 1") {
-    import graft.operators.Canonicalize
     val keyGen = Gen.listOfN(12, Gen.frequency(
       8 -> Gen.alphaLowerChar.map(_.toString),
       1 -> Gen.oneOf("夜", "駆", "á"),
@@ -261,7 +386,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("alias-test keys: cosine bits and levenshtein equal the per-pair reference") {
-    import graft.operators.Canonicalize
     val alphabet = Seq("a", "b", "e", "n", "s", "z", "á", "ő", "夜", "駆",
       "に", "α", "β", "ς", "σ", "0", "7", "🎵", "𝄞", "😀")
     val keyGen = Gen.chooseNum(0, 24).flatMap(n =>

@@ -63,10 +63,14 @@ class PyTextSpec extends AnyFunSuite {
   }
 
   test("levenshtein matches the reference DP (src/prod.py:158-175)") {
-    assert(PyText.levenshtein("kitten", "sitting") == 3)
-    assert(PyText.levenshtein("", "abc") == 3)
-    assert(PyText.levenshtein("abc", "abc") == 0)
-    assert(PyText.levenshtein("Melt", "Melt!") == 1)
+    def lev(a: String, b: String) = graft.operators.Canonicalize.jvmLev(
+      a.codePoints().toArray, b.codePoints().toArray)
+    assert(lev("kitten", "sitting") == 3)
+    assert(lev("", "abc") == 3)
+    assert(lev("abc", "abc") == 0)
+    assert(lev("Melt", "Melt!") == 1)
+    // Python's DP walks code points: two emoji are 2 edits, not 4 units
+    assert(lev("ab", "😀😀ab") == 2)
   }
 
 }

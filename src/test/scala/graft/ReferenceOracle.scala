@@ -76,8 +76,13 @@ object ReferenceOracle {
     sims
   }
 
-  private def lev(s1: String, s2: String): Int = {
-    if (s1.length < s2.length) return lev(s2, s1)
+  /** src/prod.py:158-175. Python iterates a str by code points, so the DP
+    * runs over code points: an astral char is one edit. */
+  private def lev(a: String, b: String): Int = {
+    if (a.codePointCount(0, a.length) < b.codePointCount(0, b.length))
+      return lev(b, a)
+    val s1 = a.codePoints().toArray
+    val s2 = b.codePoints().toArray
     if (s2.isEmpty) return s1.length
     var prev = (0 to s2.length).toArray
     for (i <- s1.indices) {
